@@ -1,30 +1,71 @@
-"""foreachBatch sinks: custom merge logic per micro-batch.
+"""foreachBatch sinks: one fold skeleton, seven folds.
 
-``upsert_foreach_batch`` is the keep-latest-per-key (upsert/compact) sink
-the built-in file sink can't express — the standard pattern for streaming
-CDC/dedup into a queryable table. Each micro-batch:
+Every sink here keeps an on-disk parquet store current from a stream, one
+micro-batch at a time, through ``fold_sink(stream, path, checkpoint=...,
+fold=..., fence=...)``.  A sink supplies only its
+``fold(batch_df, state, batch_id) -> DataFrame``: the new store contents
+given the delivery and the current store (``None`` before the first
+write).  The skeleton owns every other step of a trigger:
 
-1. union the batch with the current table state,
-2. keep the newest row per key (row_number over ``order_col`` desc),
-3. write to a staging dir, then atomically swap it in.
+1. ``_recover_store``: finish a swap that crashed half-way;
+2. read the sidecar ``<store>/_sink.json`` (plain file IO, no Spark job);
+3. apply the fence policy from the sidecar alone;
+4. read the store with the sidecar's schema (no schema-inference job);
+5. fold, write the result to ``<store>.stage-<batch>``, add the new
+   sidecar to that directory, and ``_swap_in`` it: fence, schema and data
+   change in one rename.
 
-foreachBatch gives at-least-once delivery per checkpointed batch; the
-merge is idempotent (re-processing a batch converges to the same table),
-which upgrades the end-to-end result to effectively-once.
+An empty delivery is not special-cased: every fold treats it as its
+identity, so no trigger pays an ``isEmpty()`` job.
+
+Sidecar format (JSON; the leading ``_`` keeps Spark's file index from
+reading it as data)::
+
+    {"batch_id": <last applied batch id>,
+     "ckpt": <checkpoint token, or null when the fence is "none">,
+     "schema": <the store's StructType as JSON>}
+
+Fence policies.  foreachBatch delivers at least once: a crash between the
+swap and the offset commit re-delivers the last batch.  A sink is exactly
+once when re-applying a batch is harmless, or when it recognises the
+replay by batch id (Structured Streaming, SIGMOD 2018: idempotence per
+epoch id):
+
+- ``"none"``: the fold is idempotent (upsert keep-latest, the scd2 merge
+  whose unchanged re-deliveries are no-ops, the hll per-register max), so
+  replays, duplicates and even a fresh checkpoint over an old store
+  converge with no fence at all.
+- ``"tokened"``: the fold is not idempotent (digest, cms and mg add or
+  trim).  The sidecar records which checkpoint wrote the store (the token
+  minted by ``_ckpt_token``).  A batch id at or below the applied one from
+  the SAME checkpoint is the crash-window replay and is skipped; from a
+  different checkpoint, or below the applied id, it is a fresh checkpoint
+  over a reused store and raises, since a sketch carries no novelty
+  signal and a silent skip would drop data.
+- a callable ``novel(batch_df, state) -> bool`` (streaks): a fenced batch
+  is skipped unless the callable finds data the store has never seen, in
+  which case it raises.  The check runs only on fenced batches.
+
+A fenced sink that finds a store without a sidecar raises ("cannot
+classify replay"): it never folds such a batch as unfenced.
 
 At scale the swap-directory step becomes a transactional table commit
-(Iceberg/Delta `MERGE INTO`); the micro-batch merge shape is identical —
-this module keeps the dependency-free parquet form.
+(Iceberg/Delta ``MERGE INTO``); the micro-batch fold shape is identical,
+and this module keeps the dependency-free parquet form.
 """
 
 from __future__ import annotations
 
+import json
 import shutil
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+SIDECAR = "_sink.json"
 
 
 def _recover_store(out: Path) -> None:
@@ -33,8 +74,7 @@ def _recover_store(out: Path) -> None:
     ``.old-<batch>`` sibling still holds the last committed state —
     restore the newest one.  Called before every read of the store so a
     checkpoint replay resumes from the preserved history instead of
-    silently rebuilding from an empty table (ADVICE r6: the
-    rmtree-then-rename window permanently deleted the dimension)."""
+    silently rebuilding from an empty table."""
     if out.exists():
         return
     olds = sorted(
@@ -53,15 +93,115 @@ def _swap_in(staging: Path, out: Path, batch_id: int) -> None:
     aside copy.  At no instant do zero on-disk copies of the table exist,
     so a crash at any point is recoverable: either ``out`` survives, or
     ``_recover_store`` restores it from the ``.old-*`` sibling on the
-    next batch/replay.  At scale this step IS the transactional commit
-    (Iceberg/Delta snapshot swap); this is the dependency-free parquet
-    equivalent with the same no-torn-state guarantee."""
+    next batch/replay."""
     old = Path(f"{out}.old-{batch_id}")
     shutil.rmtree(old, ignore_errors=True)  # stale copy from a replayed batch
     if out.exists():
         out.rename(old)
     staging.rename(out)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def _ckpt_token(checkpoint: str) -> str:
+    """Identity of a checkpoint location: a random id minted ONCE into
+    ``<checkpoint>/_sink_identity``.  The file travels with the
+    checkpoint, so a (store, checkpoint) pair relocated together (backup
+    and restore, another mount point) still classifies its crash-window
+    replay as same-checkpoint.  Residual hazard: deleting and re-creating
+    the checkpoint at the SAME path mints a new identity and raises on a
+    reused store — pair a new checkpoint with a new store path."""
+    tok_file = Path(checkpoint) / "_sink_identity"
+    if tok_file.exists():
+        return tok_file.read_text().strip()
+    tok_file.parent.mkdir(parents=True, exist_ok=True)
+    token = uuid.uuid4().hex
+    tmp = tok_file.with_name(tok_file.name + ".tmp")
+    tmp.write_text(token)
+    tmp.rename(tok_file)  # single rename: no torn reads
+    return token
+
+
+def _sidecar(path: str) -> dict | None:
+    side = Path(path) / SIDECAR
+    return json.loads(side.read_text()) if side.exists() else None
+
+
+def read_store(spark, path: str) -> DataFrame:
+    """The store at ``path``, read with the schema its sidecar records, so
+    no schema-inference job runs (a store without a sidecar is inferred)."""
+    meta = _sidecar(path)
+    reader = spark.read
+    if meta is not None:
+        reader = reader.schema(T.StructType.fromJson(meta["schema"]))
+    return reader.parquet(path)
+
+
+def fold_sink(stream: DataFrame, path: str, *, checkpoint: str, fold, fence="none"):
+    """Start an ``availableNow`` foreachBatch query that folds every
+    micro-batch into the parquet store at ``path`` (see the module
+    docstring for the trigger steps, the sidecar and the ``fence``
+    policies).  Returns the StreamingQuery."""
+    out = Path(path)
+    token = None if fence == "none" else _ckpt_token(checkpoint)
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        _recover_store(out)
+        meta = _sidecar(path)
+        state = None
+        if out.exists():
+            if meta is None and fence != "none":
+                raise ValueError(
+                    f"{path}: store has no {SIDECAR} fence record, so batch "
+                    f"{batch_id} cannot classify replay; rebuild the store "
+                    "with a fresh path and checkpoint"
+                )
+            state = read_store(batch_df.sparkSession, path)
+            if fence != "none" and (applied := meta["batch_id"]) >= batch_id:
+                if fence == "tokened":
+                    if applied > batch_id or meta["ckpt"] != token:
+                        raise ValueError(
+                            f"{path}: store already holds batch {applied} "
+                            f"(written by checkpoint {meta['ckpt']}) but "
+                            f"checkpoint {token} delivered batch {batch_id} "
+                            "— fresh checkpoint over an existing store; pair "
+                            "a new checkpoint with a new store path"
+                        )
+                elif fence(batch_df, state):
+                    raise ValueError(
+                        f"{path}: batch {batch_id} is fenced (store already "
+                        f"applied batch {applied}) but carries unseen data — "
+                        "checkpoint/store mismatch (fresh checkpoint over an "
+                        "existing store?); use a fresh store path or "
+                        "recompute from full history"
+                    )
+                return  # replayed delivery: already folded (exactly once)
+        merged = fold(batch_df, state, batch_id)
+        staging = Path(f"{path}.stage-{batch_id}")
+        # write-direct: the staging write is the fold's only
+        # materialization.  A fold may fail mid-write (the streaks order
+        # guard); drop the partial stage so only the live store remains.
+        try:
+            merged.write.mode("overwrite").parquet(str(staging))
+        except Exception:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        (staging / SIDECAR).write_text(
+            json.dumps(
+                {
+                    "batch_id": batch_id,
+                    "ckpt": token,
+                    "schema": merged.schema.jsonValue(),
+                }
+            )
+        )
+        _swap_in(staging, out, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def merge_latest(
@@ -94,28 +234,15 @@ def upsert_foreach_batch(
     order_col: str,
     checkpoint: str,
 ):
-    """Start a foreachBatch streaming query that upserts into ``path``.
-
-    Returns the StreamingQuery (caller awaits termination / stops it).
-    """
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = Path(path)
-        _recover_store(out)
-        current = spark.read.parquet(str(out)) if out.exists() else None
-        latest = merge_latest(current, batch_df, key_cols, order_col)
-        staging = Path(f"{path}.stage-{batch_id}")
-        # Materialize staging BEFORE touching the live dir (the `latest`
-        # plan still reads it), then crash-safe swap.
-        latest.write.mode("overwrite").parquet(str(staging))
-        _swap_in(staging, out, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Upsert each micro-batch into ``path``: keep the newest row per key
+    (``merge_latest``), the streaming CDC/compaction pattern the built-in
+    file sink can't express.  Keep-latest is idempotent, so the fence is
+    ``"none"``."""
+    return fold_sink(
+        stream,
+        path,
+        checkpoint=checkpoint,
+        fold=lambda b, state, _: merge_latest(state, b, key_cols, order_col),
     )
 
 
@@ -129,48 +256,27 @@ def scd2_foreach_batch(
     checkpoint: str,
     seq_col: str | None = None,
 ):
-    """Start a foreachBatch streaming query that folds each micro-batch
-    into a TYPE-2 slowly-changing dimension at ``path`` via
-    ``cdc.scd2_merge`` — the streaming upsert unified with the batch CDC
-    operator (one merge implementation, two runtimes).
+    """Fold each micro-batch into a TYPE-2 slowly-changing dimension at
+    ``path`` via ``cdc.scd2_merge`` — the batch CDC operator driven by the
+    streaming runtime.  Each micro-batch is a CDC delivery: unseen keys
+    open a version, changes close the open row at the update timestamp and
+    open a new one, unchanged re-deliveries are no-ops — which makes
+    replays converge with the ``"none"`` fence.
 
-    Each micro-batch is a CDC delivery (one row per key, or per
-    (key, seq) when ``seq_col`` is given): unseen keys open a version,
-    unchanged re-deliveries are no-ops, changes close the open row at the
-    update timestamp and insert a new open version.  Because the no-op
-    case makes ``scd2_merge`` idempotent on re-delivered batches,
-    foreachBatch's at-least-once replay converges — the same
-    effectively-once argument as ``upsert_foreach_batch``, with history
-    preserved instead of overwritten.
-
-    ``seq_col``: optional integer column giving the CDC sequence ORDER of
+    ``seq_col``: optional integer column giving the CDC sequence order of
     sub-batches; if one trigger coalesces several deliveries (file-source
-    backlog), they are folded in ascending ``seq_col`` order so the
-    resulting history is independent of trigger boundaries.  The distinct
-    sub-batch list is a driver-side collect bounded by the number of CDC
-    deliveries per trigger (single-digit), never by data size.
-
-    State lives as a plain parquet table with staging-dir swap (the
-    transactional-table commit at scale — Iceberg/Delta MERGE — keeps the
-    identical micro-batch merge shape).
-    """
+    backlog), they are folded in ascending ``seq_col`` order so the history
+    is independent of trigger boundaries.  The distinct sub-batch list is a
+    driver-side collect bounded by the deliveries per trigger."""
     from ..operators.cdc import scd2_merge
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = Path(path)
-        _recover_store(out)
-        if out.exists():
-            current = spark.read.parquet(str(out))
-        else:
-            # Build the empty-store schema programmatically: dropping a
-            # None seq_col crashes (PySparkTypeError), and string-joined
-            # DDL breaks on non-identifier column names (ADVICE r6).
-            base = (
-                batch_df.drop(seq_col) if seq_col is not None else batch_df
-            )
+    def fold(batch_df: DataFrame, state: DataFrame | None, _) -> DataFrame:
+        base = batch_df.drop(seq_col) if seq_col is not None else batch_df
+        if state is None:
+            # Built as a StructType, not string DDL: column names may be
+            # SQL reserved words.
             fields = [f for f in base.schema.fields if f.name != ts_col]
-            current = spark.createDataFrame(
+            state = batch_df.sparkSession.createDataFrame(
                 [],
                 schema=T.StructType(
                     fields
@@ -180,7 +286,9 @@ def scd2_foreach_batch(
                     ]
                 ),
             )
-        if seq_col is not None:
+        if seq_col is None:
+            subs = [base]
+        else:
             seqs = sorted(
                 r[0] for r in batch_df.select(seq_col).distinct().collect()
             )
@@ -188,33 +296,28 @@ def scd2_foreach_batch(
                 batch_df.filter(F.col(seq_col) == s).drop(seq_col)
                 for s in seqs
             ]
-        else:
-            subs = [batch_df]
         for i, upd in enumerate(subs):
-            current = scd2_merge(
-                current, upd, keys=keys, tracked=tracked, ts_col=ts_col
+            state = scd2_merge(
+                state, upd, keys=keys, tracked=tracked, ts_col=ts_col
             )
             # materialize BETWEEN folds so a multi-delivery trigger stays
-            # one-merge-deep (the scd2_event_type_history plan-depth
-            # lesson; scd2_merge is single-pass since r12 but folds still
-            # compound join-over-join).  The LAST fold writes directly:
-            # the staging write below is its materialization, and an
-            # eager checkpoint here would compute the merged dimension
-            # twice per trigger (optimization r13, guide §2.4 — the
-            # upsert/streaks sinks already follow this write-direct
-            # pattern).
+            # one merge deep; the last fold is written directly.
             if i < len(subs) - 1:
-                current = current.localCheckpoint(eager=True)
-        staging = Path(f"{path}.stage-{batch_id}")
-        current.write.mode("overwrite").parquet(str(staging))
-        _swap_in(staging, out, batch_id)
+                state = state.localCheckpoint(eager=True)
+        return state
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_sink(stream, path, checkpoint=checkpoint, fold=fold)
+
+
+_STREAKS_STATE = T.StructType(
+    [
+        T.StructField(c, T.LongType())
+        for c in (
+            "user_id", "n_active_days", "longest_streak", "n_streaks",
+            "cur_streak", "last_day",
+        )
+    ]
+)
 
 
 def streaks_foreach_batch(
@@ -223,82 +326,42 @@ def streaks_foreach_batch(
     *,
     checkpoint: str,
 ):
-    """Start a foreachBatch streaming query that INCREMENTALLY maintains
-    per-user consecutive-day streak statistics at ``path`` — the
-    gaps-and-islands computation (`user_longest_streaks`) as an
-    incrementally-maintained view: each micro-batch of (user_id,
+    """INCREMENTALLY maintain per-user consecutive-day streak statistics at
+    ``path`` — the gaps-and-islands computation (`user_longest_streaks`) as
+    an incrementally maintained view: each micro-batch of (user_id,
     day_idx) activity folds into per-user state (active days, longest
-    streak, streak count, current open streak, last seen day) WITHOUT
+    streak, streak count, current open streak, last seen day) without
     rescanning history.
 
     The fold is pure DataFrame algebra: islands WITHIN the batch (one
     window), then a full-outer merge with state where the batch's first
-    island extends the open streak iff it starts at last_day + 1.
-    Unlike ``scd2_merge`` the fold is NOT naturally idempotent (counts
-    add), so exactly-once comes from the OTHER standard foreachBatch
-    discipline: the store carries the last applied ``_batch_id`` and a
-    replayed batch (<= applied) is skipped — idempotence by batch-id
-    fencing rather than by algebraic no-op.
+    island extends the open streak iff it starts at last_day + 1.  Counts
+    add, so the fold is not idempotent: a batch at or below the applied id
+    is skipped, unless it carries (user, day) pairs beyond the user's
+    stored last_day — then a fresh checkpoint is pointed at an existing
+    store and the sink raises rather than drop deliveries.
 
-    Contract: deliveries must arrive in ascending day order per user
-    (every batch day > the user's stored last_day); the file-source
-    staging in `streaming_streak_maintenance` guarantees it.  Out-of-
-    order history would need the full recompute — which is exactly the
-    trade an incremental view buys into.  The contract is MECHANICAL,
-    not documentary (ADVICE r7): a batch whose per-user min day is <=
-    the user's stored last_day raises with a recompute hint instead of
-    silently corrupting streak counts, and a FENCED batch (id <= the
-    stored max — e.g. a fresh checkpoint over an existing store
-    restarting ids at 0) is only skipped when it contains no unseen
-    (user, day) pairs; a fenced batch carrying novel days raises loudly
-    (checkpoint/store mismatch) rather than dropping deliveries.  Both
-    guards are joins against the batch's own user set only.
+    Contract: deliveries arrive in ascending day order per user.  It is
+    enforced in-fold: a batch whose first day for some user is <= that
+    user's stored last_day fails the staging write (``raise_error`` in the
+    merge projection, no extra job) before the swap, so the store is
+    untouched.  Scale: state is one row per user; each fold shuffles only
+    the batch's user set."""
 
-    Scale: state is one row per user; each fold shuffles only the
-    batch's user set; the store swap is the crash-safe rename-aside
-    (`_swap_in`/`_recover_store`).
-    """
+    def novel(batch_df: DataFrame, state: DataFrame) -> bool:
+        return bool(
+            batch_df.select("user_id", "day_idx")
+            .distinct()
+            .join(state.select("user_id", "last_day"), "user_id", "left")
+            .filter(
+                F.col("last_day").isNull()
+                | (F.col("day_idx") > F.col("last_day"))
+            )
+            .limit(1)
+            .count()
+        )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = Path(path)
-        _recover_store(out)
-        state = None
-        if out.exists():
-            state = spark.read.parquet(str(out))
-            applied = state.agg(F.max("_batch_id")).collect()[0][0]
-            if applied is not None and applied >= batch_id:
-                # Fenced batch.  Skipping is only safe for a true REPLAY
-                # of already-folded data; a fresh checkpoint over an
-                # existing store restarts batch ids at 0, and silently
-                # skipping would drop genuinely new deliveries.  Any
-                # (user, day) beyond the user's stored last_day proves
-                # the batch is novel -> fail loudly.
-                novel = (
-                    batch_df.select("user_id", "day_idx")
-                    .distinct()
-                    .join(
-                        state.select("user_id", "last_day"),
-                        "user_id",
-                        "left",
-                    )
-                    .filter(
-                        F.col("last_day").isNull()
-                        | (F.col("day_idx") > F.col("last_day"))
-                    )
-                    .limit(1)
-                    .count()
-                )
-                if novel:
-                    raise ValueError(
-                        f"streaks_foreach_batch: batch {batch_id} is fenced "
-                        f"(store already applied batch {applied}) but carries "
-                        "unseen (user, day) activity — checkpoint/store "
-                        "mismatch (fresh checkpoint over an existing store?). "
-                        "Point the query at a fresh store path or recompute "
-                        "the view from full history."
-                    )
-                return  # replayed delivery: already folded (exactly-once)
+    def fold(batch_df: DataFrame, state: DataFrame | None, batch_id: int):
         w = Window.partitionBy("user_id").orderBy("day_idx")
         isl = (
             batch_df.select("user_id", "day_idx")
@@ -335,32 +398,10 @@ def streaks_foreach_batch(
             F.sum("len").cast("bigint").alias("batch_days"),
         )
         if state is None:
-            state = spark.createDataFrame(
-                [],
-                schema=T.StructType(
-                    [
-                        T.StructField("user_id", T.LongType()),
-                        T.StructField("n_active_days", T.LongType()),
-                        T.StructField("longest_streak", T.LongType()),
-                        T.StructField("n_streaks", T.LongType()),
-                        T.StructField("cur_streak", T.LongType()),
-                        T.StructField("last_day", T.LongType()),
-                        T.StructField("_batch_id", T.LongType()),
-                    ]
-                ),
-            )
-        st = state.drop("_batch_id").alias("st")
+            state = batch_df.sparkSession.createDataFrame([], _STREAKS_STATE)
+        st = state.alias("st")
         ba = agg.alias("ba")
         z = F.lit(0).cast("bigint")
-        # Ascending-order contract, enforced in-fold: a batch whose first
-        # day for some user is <= that user's stored last_day is
-        # out-of-order (or a partial overlap) and would corrupt the
-        # additive streak counts.  The guard rides the merge projection
-        # itself (raise_error inside the staging write) instead of a
-        # separate join+count Spark job per trigger (optimization r12,
-        # guide §2.4): a violating row fails the staging write BEFORE
-        # ``_swap_in``, so the store is untouched and the streaming query
-        # fails loudly with the same ascending-day message.
         ooo = F.col("st.last_day").isNotNull() & (
             F.col("ba.first_start") <= F.col("st.last_day")
         )
@@ -384,7 +425,7 @@ def streaks_foreach_batch(
             ext, F.col("st.cur_streak")
         ).otherwise(z)
         has_batch = F.col("ba.user_id").isNotNull()
-        merged = st.join(
+        return st.join(
             ba, F.col("st.user_id") == F.col("ba.user_id"), "full_outer"
         ).select(
             F.coalesce(F.col("st.user_id"), F.col("ba.user_id")).alias(
@@ -427,69 +468,26 @@ def streaks_foreach_batch(
             F.when(has_batch, F.col("ba.last_end"))
             .otherwise(F.col("st.last_day"))
             .alias("last_day"),
-            F.lit(batch_id).cast("bigint").alias("_batch_id"),
         )
-        staging = Path(f"{path}.stage-{batch_id}")
-        # The in-fold ascending-day guard (ooo_guard above) fires MID
-        # staging write — remove the partial stage dir before re-raising
-        # so a violation leaves only the untouched live store behind
-        # (ADVICE r12).
-        try:
-            merged.write.mode("overwrite").parquet(str(staging))
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        _swap_in(staging, out, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold_sink(
+        stream, path, checkpoint=checkpoint, fold=fold, fence=novel
     )
 
 
-def _ckpt_token(checkpoint: str) -> str:
-    """Identity of a checkpoint location, stored alongside ``_batch_id``
-    in the non-idempotent sinks' state so that ``applied == batch_id``
-    can be CLASSIFIED instead of guessed: same token = the same
-    checkpoint re-delivering after a crash between ``_swap_in`` and the
-    offset commit (skip); different token = a fresh checkpoint pointed
-    at a reused store, where skipping would silently drop the first
-    genuinely-new delivery (raise).
-
-    The token is a random id minted ONCE into ``<checkpoint>/
-    _sink_identity`` (ADVICE r11): keying identity on the resolved
-    filesystem PATH made a legitimate relocation of a (store,
-    checkpoint) pair — backup/restore, a different mount point or
-    container path — raise on the crash-window replay, turning a
-    recoverable restart into manual surgery.  The identity file travels
-    WITH the checkpoint, so a moved pair still classifies as
-    same-checkpoint.  Residual hazard, documented at each sink: deleting
-    and re-creating the checkpoint at the SAME path mints a new identity
-    and raises on a reused store — pair a new checkpoint with a new
-    store path."""
-    import uuid
-
-    tok_file = Path(checkpoint) / "_sink_identity"
-    if tok_file.exists():
-        return tok_file.read_text().strip()
-    tok_file.parent.mkdir(parents=True, exist_ok=True)
-    token = uuid.uuid4().hex
-    tmp = tok_file.with_name(tok_file.name + ".tmp")
-    tmp.write_text(token)
-    tmp.rename(tok_file)  # single rename: no torn reads from listeners
-    return token
+def _union_state(parts: DataFrame, state: DataFrame | None) -> DataFrame:
+    """``parts`` ∪ the store's rows of the same columns, so a fold needs
+    one aggregate (one exchange) over delivery and state together."""
+    if state is None:
+        return parts
+    return parts.unionByName(state.select(*parts.columns))
 
 
-def _same_ckpt(stored_tok: str, ckpt_token: str, checkpoint: str) -> bool:
-    """True when a store's recorded ``_ckpt`` was written by THIS
-    checkpoint.  Accepts the legacy pre-r12 token (the resolved
-    checkpoint path) so stores written before the identity-file scheme
-    keep classifying crash replays correctly instead of bricking."""
-    return stored_tok == ckpt_token or stored_tok == str(
-        Path(checkpoint).resolve()
-    )
+def _counts(batch_df: DataFrame, *keys: str) -> DataFrame:
+    """``keys`` plus a bigint ``n``: the delivery's own ``n`` column when
+    it is pre-combined, else 1 per row."""
+    n = F.col("n") if "n" in batch_df.columns else F.lit(1)
+    return batch_df.select(*keys, n.cast("bigint").alias("n"))
 
 
 def digest_foreach_batch(
@@ -498,132 +496,41 @@ def digest_foreach_batch(
     *,
     checkpoint: str,
 ):
-    """Start a foreachBatch query that INCREMENTALLY maintains an
-    order-insensitive CONTENT DIGEST at ``path`` — the streaming twin of
-    `table_fingerprint_checksum` and the third idempotence discipline in
-    this module: `scd2_merge` replays as an algebraic no-op,
-    `streaks_foreach_batch` fences because its fold ADDS, and this fold
-    is a COMMUTATIVE MONOID MERGE (mod-sum, xor, min, max, count fold
-    associatively), so incremental maintenance is exact by construction
-    — but replay still double-counts, so it shares the batch-id fence.
+    """INCREMENTALLY maintain an order-insensitive CONTENT DIGEST at
+    ``path`` — the streaming twin of `table_fingerprint_checksum`.  The
+    fold is a commutative monoid merge (count, mod-sum, xor, min, max), so
+    incremental maintenance is exact by construction, but a replay would
+    double-count: the fence is ``"tokened"``.
 
     Expects a single bigint column ``h`` (the per-row content hash).
-    State is ONE row: (n_rows, checksum_sum, checksum_xor, h_min, h_max,
-    _batch_id); the sum folds through decimal(38,0) before the mod so
-    two near-2^63 partials cannot overflow.
+    State is ONE row (n_rows, checksum_sum, checksum_xor, h_min, h_max);
+    the sum folds through decimal(38,0) before the mod so near-2^63
+    values cannot overflow.  Each trigger is one global aggregate over
+    the delivery's rows ∪ the 1-row store; the aggregates skip nulls, so
+    an empty delivery leaves the store unchanged."""
+    M = F.lit(9223372036854775807).cast("decimal(38,0)")
 
-    Scale: each trigger reduces its batch to one row map-side and merges
-    against a 1-row store — the cheapest possible IVM; a billion-row
-    delivery costs its scan and nothing else.
-
-    Contract: a fresh checkpoint MUST pair with a fresh store path.  A
-    digest carries no novelty signal (unlike the streaks sink, which can
-    compare batch user-days against state), so the store records WHICH
-    checkpoint wrote it (``_ckpt``): batch ids restarting at or below
-    applied state from a DIFFERENT checkpoint raise (silent skip would
-    drop data undetectably); ``applied == batch_id`` from the SAME
-    checkpoint is the crash-window replay (a crash between ``_swap_in``
-    and the offset commit, including batch 0 on the very first delivery)
-    and skips, or the stream would fail permanently on every restart in
-    that window.  Residual hazard: deleting and re-creating the
-    checkpoint at the SAME path defeats the token — don't do that over a
-    live store."""
-    M = 9223372036854775807
-    ckpt_token = _ckpt_token(checkpoint)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = Path(path)
-        _recover_store(out)
-        state = None
-        if out.exists():
-            state = spark.read.parquet(str(out))
-            has_tok = "_ckpt" in state.columns
-            aggs = [F.max("_batch_id").alias("applied")]
-            if has_tok:
-                aggs.append(F.max("_ckpt").alias("tok"))
-            srow = state.agg(*aggs).collect()[0]
-            applied = srow["applied"]
-            # Legacy stores (pre-token) carry no _ckpt column; treat as
-            # same-checkpoint to preserve their old skip-on-equal
-            # behavior rather than bricking existing stores.
-            stored_tok = srow["tok"] if has_tok else ckpt_token
-            if applied is not None and applied >= batch_id:
-                if applied > batch_id or not _same_ckpt(
-                    stored_tok, ckpt_token, checkpoint
-                ):
-                    # Either ids restarted BELOW applied state, or the
-                    # same id arrived from a DIFFERENT checkpoint — both
-                    # mean a fresh checkpoint was pointed at a reused
-                    # store.  A digest has no novelty signal, so skipping
-                    # would silently drop new deliveries — fail loudly.
-                    raise ValueError(
-                        f"digest store {path} already holds batch "
-                        f"{applied} (written by checkpoint "
-                        f"{stored_tok}) but checkpoint {ckpt_token} "
-                        f"delivered batch {batch_id} — fresh checkpoint "
-                        "over an existing store; pair a new checkpoint "
-                        "with a new store path"
-                    )
-                return  # same-checkpoint crash replay: skip, never re-fold
-            state = state.drop("_ckpt") if has_tok else state
-        if batch_df.isEmpty():
-            # A zero-row delivery contributes the monoid identity; folding
-            # it would turn sum/bit_xor/min/max into NULLs and permanently
-            # corrupt the digest, so it is a no-op by construction.
-            return
-        b = batch_df.agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            (
-                F.sum(F.col("h").cast("decimal(38,0)"))
-                % F.lit(M).cast("decimal(38,0)")
-            )
+    def fold(batch_df: DataFrame, state: DataFrame | None, _) -> DataFrame:
+        h = F.col("h").cast("bigint")
+        parts = batch_df.select(
+            F.lit(1).cast("bigint").alias("n_rows"),
+            h.alias("checksum_sum"),
+            h.alias("checksum_xor"),
+            h.alias("h_min"),
+            h.alias("h_max"),
+        )
+        return _union_state(parts, state).agg(
+            F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint").alias("n_rows"),
+            (F.sum(F.col("checksum_sum").cast("decimal(38,0)")) % M)
             .cast("bigint")
             .alias("checksum_sum"),
-            F.expr("bit_xor(h)").cast("bigint").alias("checksum_xor"),
-            F.min("h").cast("bigint").alias("h_min"),
-            F.max("h").cast("bigint").alias("h_max"),
+            F.expr("bit_xor(checksum_xor)").cast("bigint").alias("checksum_xor"),
+            F.min("h_min").cast("bigint").alias("h_min"),
+            F.max("h_max").cast("bigint").alias("h_max"),
         )
-        if state is not None:
-            s = state.select(
-                F.col("n_rows").alias("s_n"),
-                F.col("checksum_sum").alias("s_sum"),
-                F.col("checksum_xor").alias("s_xor"),
-                F.col("h_min").alias("s_min"),
-                F.col("h_max").alias("s_max"),
-            )
-            b = b.crossJoin(F.broadcast(s)).select(
-                (F.col("n_rows") + F.col("s_n")).cast("bigint").alias("n_rows"),
-                (
-                    (
-                        F.col("checksum_sum").cast("decimal(38,0)")
-                        + F.col("s_sum").cast("decimal(38,0)")
-                    )
-                    % F.lit(M).cast("decimal(38,0)")
-                )
-                .cast("bigint")
-                .alias("checksum_sum"),
-                F.col("checksum_xor")
-                .bitwiseXOR(F.col("s_xor"))
-                .cast("bigint")
-                .alias("checksum_xor"),
-                F.least("h_min", "s_min").cast("bigint").alias("h_min"),
-                F.greatest("h_max", "s_max").cast("bigint").alias("h_max"),
-            )
-        # write-direct: the staging write materializes the 1-row digest;
-        # an eager checkpoint here doubled the pass per trigger (r13).
-        merged = b.withColumn(
-            "_batch_id", F.lit(batch_id).cast("bigint")
-        ).withColumn("_ckpt", F.lit(ckpt_token))
-        staging = Path(f"{path}.stage-{batch_id}")
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(staging, out, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold_sink(
+        stream, path, checkpoint=checkpoint, fold=fold, fence="tokened"
     )
 
 
@@ -633,53 +540,25 @@ def hll_foreach_batch(
     *,
     checkpoint: str,
 ):
-    """Start a foreachBatch query that INCREMENTALLY maintains an HLL
-    register table at ``path`` — the fourth idempotence discipline in
-    this module, and the simplest: the register merge is MAX per bucket,
-    which is not just a commutative monoid (like the digest's sum/xor)
-    but IDEMPOTENT — max(a, a) = a — so replayed batches, duplicated
-    deliveries, and even a fresh checkpoint over an existing store are
-    all algebraic no-ops.  No batch-id fence is needed or kept beyond
-    observability; contrast with ``digest_foreach_batch``, whose
-    sum-fold MUST fence and raise.
+    """INCREMENTALLY maintain an HLL register table at ``path``.  The
+    register merge is MAX per bucket, which is IDEMPOTENT — max(a, a) = a
+    — so replays, duplicate deliveries and even a fresh checkpoint over an
+    existing store are algebraic no-ops: the fence is ``"none"``.
 
-    Expects rows ``(reg bigint, rho bigint)`` — the register index and
-    the leading-zero rank the query computes from a portable content
-    hash.  State is at most one row per register (e.g. 256 rows for an
-    8-bit bucket split): kilobyte-scale regardless of stream volume —
-    the whole point of maintaining a cardinality SKETCH instead of a
-    distinct-key set, whose state would grow with the data.
+    Expects rows ``(reg bigint, rho bigint)`` — the register index and the
+    leading-zero rank.  State is at most one row per register: kilobytes
+    regardless of stream volume.  Each trigger is one aggregate over the
+    delivery ∪ the store (partial max map-side, one exchange)."""
 
-    Scale: each trigger reduces its batch to <=registers rows map-side
-    (partial max), merges against the register-sized store, and swaps
-    atomically (same ``_swap_in`` discipline as every sink here)."""
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = Path(path)
-        _recover_store(out)
-        if batch_df.isEmpty():
-            return  # max-identity: nothing to fold
-        b = batch_df.groupBy("reg").agg(
-            F.max("rho").cast("bigint").alias("rho")
+    def fold(batch_df: DataFrame, state: DataFrame | None, _) -> DataFrame:
+        parts = batch_df.select("reg", F.col("rho").cast("bigint"))
+        return (
+            _union_state(parts, state)
+            .groupBy("reg")
+            .agg(F.max("rho").cast("bigint").alias("rho"))
         )
-        if out.exists():
-            state = spark.read.parquet(str(out)).select("reg", "rho")
-            b = b.unionByName(state).groupBy("reg").agg(
-                F.max("rho").cast("bigint").alias("rho")
-            )
-        # write-direct (r13): staging write is the materialization
-        merged = b.withColumn("_batch_id", F.lit(batch_id).cast("bigint"))
-        staging = Path(f"{path}.stage-{batch_id}")
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(staging, out, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_sink(stream, path, checkpoint=checkpoint, fold=fold)
 
 
 def cms_foreach_batch(
@@ -688,89 +567,26 @@ def cms_foreach_batch(
     *,
     checkpoint: str,
 ):
-    """Start a foreachBatch query that INCREMENTALLY maintains a
-    count-min-sketch table at ``path`` — the fifth IVM discipline in this
-    module, and the first KEYED commutative-monoid fold: per batch the
-    delivery collapses map-side to at most depth*width (hash-row, bucket)
-    partial counts, which merge into the store by (i, b) ADDITION.
+    """INCREMENTALLY maintain a count-min-sketch table at ``path``: the
+    delivery's (hash-row, bucket) counts merge into the store by (i, b)
+    ADDITION.  Addition is a commutative monoid but NOT idempotent, so the
+    fence is ``"tokened"``.
 
-    Addition is a commutative monoid but NOT idempotent (contrast the HLL
-    sink's max), so this sink shares the digest sink's tokened batch-id
-    fence: the store records which checkpoint wrote it (``_ckpt``);
-    applied == batch_id from the SAME checkpoint is the crash-window
-    replay (including batch 0) and skips, while applied > batch_id or
-    the same id from a DIFFERENT checkpoint — a fresh checkpoint over a
-    reused store — raises, because a sketch carries no novelty signal to
-    tell replay from new deliveries and silent skip would drop data.
+    Expects rows ``(i bigint, b bigint)`` (one per contributing input row)
+    or pre-combined ``(i, b, n bigint)``.  State is at most depth*width
+    rows — kilobytes regardless of stream volume.  Each trigger is one
+    aggregate over the delivery ∪ the store (partial sums map-side, one
+    exchange)."""
 
-    Expects rows ``(i bigint, b bigint)`` (hash row + bucket, one per
-    contributing input row) or pre-combined ``(i, b, n bigint)``.  State
-    is at most depth*width + sketch metadata rows — kilobytes regardless
-    of stream volume, the same reason the batch `operators/sketches.py`
-    CMS shuffles O(partitions * depth * width).
-
-    Scale: per trigger the batch reduces map-side to sketch-sized
-    partials, merges against a sketch-sized store, and swaps atomically
-    (`_swap_in`); a billion-row delivery costs its scan and nothing else,
-    and day-level sketch stores roll up by the same addition downstream.
-    """
-    ckpt_token = _ckpt_token(checkpoint)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = Path(path)
-        _recover_store(out)
-        state = None
-        if out.exists():
-            state = spark.read.parquet(str(out))
-            has_tok = "_ckpt" in state.columns
-            aggs = [F.max("_batch_id").alias("applied")]
-            if has_tok:
-                aggs.append(F.max("_ckpt").alias("tok"))
-            srow = state.agg(*aggs).collect()[0]
-            applied = srow["applied"]
-            stored_tok = srow["tok"] if has_tok else ckpt_token  # legacy
-            if applied is not None and applied >= batch_id:
-                if applied > batch_id or not _same_ckpt(
-                    stored_tok, ckpt_token, checkpoint
-                ):
-                    raise ValueError(
-                        f"cms store {path} already holds batch {applied} "
-                        f"(written by checkpoint {stored_tok}) but "
-                        f"checkpoint {ckpt_token} delivered batch "
-                        f"{batch_id} — fresh checkpoint over an existing "
-                        "store; pair a new checkpoint with a new store "
-                        "path"
-                    )
-                return  # same-checkpoint crash replay: never re-fold
-        if batch_df.isEmpty():
-            return  # zero-row delivery is the addition identity
-        cols = set(batch_df.columns)
-        n = F.col("n") if "n" in cols else F.lit(1)
-        b = batch_df.groupBy("i", "b").agg(
-            F.sum(n).cast("bigint").alias("n")
+    def fold(batch_df: DataFrame, state: DataFrame | None, _) -> DataFrame:
+        return (
+            _union_state(_counts(batch_df, "i", "b"), state)
+            .groupBy("i", "b")
+            .agg(F.sum("n").cast("bigint").alias("n"))
         )
-        if state is not None:
-            b = (
-                b.unionByName(
-                    state.select("i", "b", "n"), allowMissingColumns=False
-                )
-                .groupBy("i", "b")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-        # write-direct (r13): staging write is the materialization
-        merged = b.withColumn(
-            "_batch_id", F.lit(batch_id).cast("bigint")
-        ).withColumn("_ckpt", F.lit(ckpt_token))
-        staging = Path(f"{path}.stage-{batch_id}")
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(staging, out, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold_sink(
+        stream, path, checkpoint=checkpoint, fold=fold, fence="tokened"
     )
 
 
@@ -781,96 +597,34 @@ def mg_foreach_batch(
     capacity: int,
     checkpoint: str,
 ):
-    """Start a foreachBatch query that INCREMENTALLY maintains a
-    Misra-Gries heavy-hitters summary at ``path`` — the SIXTH IVM
-    discipline in this module, and the first BOUNDED-STATE LOSSY fold:
-    the store never holds more than ``capacity`` (key, count) rows, and
-    the merge step is the mergeable-summaries rule (Agarwal et al.,
-    PODS'12): sum counts per key across (state union batch), find d =
-    the (capacity+1)-th largest merged count (0 when at most
-    ``capacity`` keys survive the sum), subtract d from every count and
-    keep the strictly positive ones.  The result carries the classic MG
-    guarantee — every surviving count undercounts its true frequency by
-    at most the total decremented mass, and any key with true frequency
-    above n/(capacity+1) is present.
+    """INCREMENTALLY maintain a Misra-Gries heavy-hitters summary at
+    ``path``: the store never holds more than ``capacity`` (key, count)
+    rows.  The merge is the mergeable-summaries rule (Agarwal et al.,
+    PODS'12): sum counts per key across state ∪ batch, find d = the
+    (capacity+1)-th largest merged count (0 when at most ``capacity`` keys
+    survive), subtract d from every count and keep the positive ones.
+    Every surviving count undercounts its true frequency by at most the
+    total decremented mass, and any key above n/(capacity+1) is present.
 
-    The fold is DETERMINISTIC given the delivery sequence (d is a
-    multiset function of the merged counts; survivors are exactly the
-    counts above d), but — unlike the CMS sink's pure addition — it is
-    order-DEPENDENT across deliveries, so the paired oracle must replay
-    the same per-delivery fold (an unrolled CTE per trigger), not a
-    one-shot aggregate.  Replay discipline: trimming is not idempotent
-    and not an algebraic no-op, so this sink shares the digest/cms
-    TOKENED batch-id fence: applied == batch_id from the same
-    checkpoint skips (crash-window replay), anything else over applied
-    state raises.
+    The fold is deterministic given the delivery sequence but
+    order-dependent across deliveries, and trimming is not idempotent: the
+    fence is ``"tokened"``.  Expects rows ``(k bigint)`` or pre-combined
+    ``(k, n bigint)``.  The trim threshold is read from a
+    <= capacity+1-row ordered slice, never a data-sized sort."""
 
-    Expects rows ``(k bigint)`` or pre-combined ``(k, n bigint)``.
-
-    Scale: per trigger the delivery reduces map-side to per-key counts
-    (bounded by the key domain, and the summary itself bounds state at
-    ``capacity`` rows — bytes, forever); the trim threshold is computed
-    from a <= capacity+1-row ordered slice, never a data-sized sort."""
-    ckpt_token = _ckpt_token(checkpoint)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = Path(path)
-        _recover_store(out)
-        state = None
-        if out.exists():
-            state = spark.read.parquet(str(out))
-            has_tok = "_ckpt" in state.columns
-            aggs = [F.max("_batch_id").alias("applied")]
-            if has_tok:
-                aggs.append(F.max("_ckpt").alias("tok"))
-            srow = state.agg(*aggs).collect()[0]
-            applied = srow["applied"]
-            stored_tok = srow["tok"] if has_tok else ckpt_token  # legacy
-            if applied is not None and applied >= batch_id:
-                if applied > batch_id or not _same_ckpt(
-                    stored_tok, ckpt_token, checkpoint
-                ):
-                    raise ValueError(
-                        f"mg store {path} already holds batch {applied} "
-                        f"(written by checkpoint {stored_tok}) but "
-                        f"checkpoint {ckpt_token} delivered batch "
-                        f"{batch_id} — fresh checkpoint over an existing "
-                        "store; pair a new checkpoint with a new store "
-                        "path"
-                    )
-                return  # same-checkpoint crash replay: never re-trim
-        if batch_df.isEmpty():
-            return  # zero-row delivery is the identity
-        cols = set(batch_df.columns)
-        n = F.col("n") if "n" in cols else F.lit(1)
-        b = batch_df.groupBy("k").agg(F.sum(n).cast("bigint").alias("n"))
-        if state is not None:
-            b = (
-                b.unionByName(state.select("k", "n"))
-                .groupBy("k")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-        b = b.localCheckpoint(eager=True)
-        # trim threshold: the (capacity+1)-th largest merged count, read
-        # from a bounded ordered slice (<= capacity+1 rows collected)
+    def fold(batch_df: DataFrame, state: DataFrame | None, _) -> DataFrame:
+        b = (
+            _union_state(_counts(batch_df, "k"), state)
+            .groupBy("k")
+            .agg(F.sum("n").cast("bigint").alias("n"))
+            .localCheckpoint(eager=True)
+        )
         top = b.orderBy(F.desc("n"), F.asc("k")).limit(capacity + 1).collect()
         d = top[-1]["n"] if len(top) > capacity else 0
-        trimmed = b.select("k", (F.col("n") - F.lit(d)).alias("n")).filter(
+        return b.select("k", (F.col("n") - F.lit(d)).alias("n")).filter(
             F.col("n") > 0
         )
-        # write-direct (r13): trimmed reads the checkpointed b, and the
-        # staging write is merged's only consumer
-        merged = trimmed.withColumn(
-            "_batch_id", F.lit(batch_id).cast("bigint")
-        ).withColumn("_ckpt", F.lit(ckpt_token))
-        staging = Path(f"{path}.stage-{batch_id}")
-        merged.write.mode("overwrite").parquet(str(staging))
-        _swap_in(staging, out, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return fold_sink(
+        stream, path, checkpoint=checkpoint, fold=fold, fence="tokened"
     )

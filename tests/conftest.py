@@ -32,3 +32,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def stage_deliveries(spark, src_dir, deliveries, schema, start=0):
+    """Stage each delivery (a list of rows) as one parquet file under
+    ``src_dir``, with ascending modification times so a file-source
+    stream with ``maxFilesPerTrigger=1`` replays them in order."""
+    import glob
+    import shutil
+
+    os.makedirs(src_dir, exist_ok=True)
+    for i, rows in enumerate(deliveries, start=start):
+        stage = f"{src_dir}_stage{i}"
+        spark.createDataFrame(rows, schema=schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(stage)
+        dst = f"{src_dir}/delivery-{i}.parquet"
+        shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], dst)
+        os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))

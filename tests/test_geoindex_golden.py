@@ -19,6 +19,8 @@ ingest that tree and assert:
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,6 +35,10 @@ N_SHARDS = 2_413
 
 @pytest.fixture(scope="module")
 def golden(spark):
+    # Skip here, not module-wide: the boundary-widening test builds its own
+    # index and runs without the reference tree.
+    if not glob.glob(GOLDEN):
+        pytest.skip(f"reference geoindex tree absent ({GOLDEN} matches nothing)")
     df = (
         spark.read.schema(ROUTES)
         .json(GOLDEN)

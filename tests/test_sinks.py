@@ -1,10 +1,17 @@
-"""foreachBatch upsert sink: keep-latest-per-key merge across micro-batches,
-idempotent under batch replay (the streaming CDC/compaction pattern)."""
+"""foreachBatch sinks: the upsert keep-latest-per-key merge (idempotent
+under batch replay, the streaming CDC/compaction pattern) and the
+per-trigger Spark job count of every ``fold_sink`` sink."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import datetime as dt
+import re
+from collections import Counter
 
+import pytest
+from conftest import stage_deliveries
+
+from anomaly_detection_in_time_series_data_spark.streaming import sinks
 from anomaly_detection_in_time_series_data_spark.streaming.sinks import (
     merge_latest,
     upsert_foreach_batch,
@@ -69,3 +76,100 @@ def test_streaming_upsert_end_to_end(spark, tmp_path):
     q2.awaitTermination()
     final2 = {r["k"]: (r["seq"], r["payload"]) for r in spark.read.parquet(out).collect()}
     assert final2 == final
+
+
+# ---------------------------------------------------------------------------
+# Per-trigger Spark job counts of every fold_sink sink.
+# ---------------------------------------------------------------------------
+
+_T = dt.datetime(2024, 1, 1)
+# name -> (schema, three deliveries with the middle one empty, start(stream,
+# store, checkpoint), per-trigger job budget).  A budget is the fold's own
+# jobs: under AQE each exchange's map stage is one job and the staging
+# write is one more.
+_SINKS = {
+    "upsert": (
+        "k bigint, seq bigint",
+        [[(1, 1), (2, 1)], [], [(2, 2), (3, 1)]],
+        lambda s, p, c: sinks.upsert_foreach_batch(
+            s, p, key_cols=["k"], order_col="seq", checkpoint=c
+        ),
+        2,
+    ),
+    "scd2": (
+        "user_id bigint, event_type string, ts timestamp",
+        [[(1, "a", _T), (2, "x", _T)], [], [(1, "b", _T.replace(day=8))]],
+        lambda s, p, c: sinks.scd2_foreach_batch(
+            s, p, keys=["user_id"], tracked=["event_type"], ts_col="ts",
+            checkpoint=c,
+        ),
+        3,  # two exchanges in the merge + write
+    ),
+    "streaks": (
+        "user_id bigint, day_idx bigint",
+        [[(1, 10), (1, 11)], [], [(1, 12), (2, 3)]],
+        lambda s, p, c: sinks.streaks_foreach_batch(s, p, checkpoint=c),
+        4,  # three exchanges (islands, per-user agg, state join) + write
+    ),
+    "digest": (
+        "h bigint",
+        [[(5,), (9,)], [], [(100,)]],
+        lambda s, p, c: sinks.digest_foreach_batch(s, p, checkpoint=c),
+        2,
+    ),
+    "hll": (
+        "reg bigint, rho bigint",
+        [[(0, 3), (1, 7)], [], [(0, 4), (2, 1)]],
+        lambda s, p, c: sinks.hll_foreach_batch(s, p, checkpoint=c),
+        2,
+    ),
+    "cms": (
+        "i bigint, b bigint",
+        [[(0, 3), (1, 5)], [], [(0, 3), (2, 5)]],
+        lambda s, p, c: sinks.cms_foreach_batch(s, p, checkpoint=c),
+        2,
+    ),
+    "mg": (
+        "k bigint",
+        [[(1,), (1,), (2,)], [], [(3,), (1,)]],
+        lambda s, p, c: sinks.mg_foreach_batch(s, p, capacity=2, checkpoint=c),
+        4,  # exchange + localCheckpoint + trim-threshold collect + write
+    ),
+}
+
+
+def _jobs_per_trigger(spark, run_id: str) -> Counter:
+    """Jobs in the stream's runId group, keyed by the micro-batch id Spark
+    writes into each job's description."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    status = sc._jsc.sc().statusStore()
+    per: Counter = Counter()
+    for job in sc.statusTracker().getJobIdsForGroup(run_id):
+        desc = status.job(job).description()
+        m = re.search(r"batch = (\d+)", desc.get()) if desc.isDefined() else None
+        assert m, f"job {job} of stream {run_id} ran outside a micro-batch"
+        per[int(m.group(1))] += 1
+    return per
+
+
+@pytest.mark.parametrize("name", list(_SINKS))
+def test_sink_trigger_job_counts(spark, tmp_path, name):
+    """Each trigger runs only its fold's jobs: the fence and the store
+    schema come from the sidecar file (no fence-read or schema-inference
+    job) and an empty delivery folds as the identity (no ``isEmpty()``
+    job).  hll and cms fold delivery and store in one aggregate, so a
+    trigger is one exchange plus the staging write."""
+    schema, deliveries, start, budget = _SINKS[name]
+    src = str(tmp_path / "src")
+    stage_deliveries(spark, src, deliveries, schema)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = start(stream, str(tmp_path / "store"), str(tmp_path / "ck"))
+    q.awaitTermination()
+    per = _jobs_per_trigger(spark, str(q.runId))
+    assert sorted(per) == [0, 1, 2]
+    assert max(per.values()) <= budget, dict(per)

@@ -12,6 +12,7 @@ from anomaly_detection_in_time_series_data_spark.streaming import (
     anomaly_stream,
     replay,
 )
+from conftest import stage_deliveries
 
 ROW = T.StructType(
     [
@@ -462,22 +463,6 @@ def test_scd2_foreach_batch_coalesced_trigger_folds_in_seq_order(spark, tmp_path
     }
 
 
-def _stage_deliveries(spark, src_dir, deliveries, schema, start=0):
-    import glob as g
-    import os
-    import shutil as sh
-
-    os.makedirs(src_dir, exist_ok=True)
-    for i, rows in enumerate(deliveries, start=start):
-        d = spark.createDataFrame(rows, schema=schema)
-        stage = f"{src_dir}_stage{i}"
-        d.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = g.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/delivery-{i}.parquet"
-        sh.move(part, dst)
-        os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
-
-
 def test_scd2_sink_checkpoint_recovery_and_idempotence(spark, tmp_path):
     """The exactly-once story of ``sinks.scd2_foreach_batch``, both halves:
 
@@ -528,17 +513,17 @@ def test_scd2_sink_checkpoint_recovery_and_idempotence(spark, tmp_path):
     # interrupted-then-resumed run
     src_a = str(tmp_path / "src_a")
     store_a, ckpt_a = str(tmp_path / "dim_a"), str(tmp_path / "ck_a")
-    _stage_deliveries(spark, src_a, deliveries[:2], schema)
+    stage_deliveries(spark, src_a, deliveries[:2], schema)
     run(src_a, store_a, ckpt_a)
     partial = snap(store_a)
     assert (1, "b", t(8), None) in partial and (2, "x", t(1), None) in partial
-    _stage_deliveries(spark, src_a, deliveries[2:], schema, start=2)
+    stage_deliveries(spark, src_a, deliveries[2:], schema, start=2)
     run(src_a, store_a, ckpt_a)  # SAME checkpoint: resumes, not replays
 
     # one-shot reference run
     src_b = str(tmp_path / "src_b")
     store_b, ckpt_b = str(tmp_path / "dim_b"), str(tmp_path / "ck_b")
-    _stage_deliveries(spark, src_b, deliveries, schema)
+    stage_deliveries(spark, src_b, deliveries, schema)
     run(src_b, store_b, ckpt_b)
 
     final = snap(store_a)
@@ -571,7 +556,7 @@ def test_scd2_sink_default_seq_col_none_on_fresh_store(spark, tmp_path):
     )
 
     schema = "user_id bigint, event_type string, ts timestamp"
-    _stage_deliveries(
+    stage_deliveries(
         spark,
         str(tmp_path / "src"),
         [[(1, "a", dt.datetime(2024, 1, 1)), (2, "x", dt.datetime(2024, 1, 1))]],
@@ -606,7 +591,7 @@ def test_scd2_sink_reserved_word_column_names(spark, tmp_path):
     )
 
     schema = "`order` bigint, `select` string, ts timestamp"
-    _stage_deliveries(
+    stage_deliveries(
         spark,
         str(tmp_path / "src"),
         [[(7, "a", dt.datetime(2024, 1, 1))]],
@@ -685,7 +670,7 @@ def test_streaks_sink_batch_id_fencing_and_fold(spark, tmp_path):
         [(2, 8)],
     ]
     schema = "user_id bigint, day_idx bigint"
-    _stage_deliveries(spark, str(tmp_path / "src"), deliveries, schema)
+    stage_deliveries(spark, str(tmp_path / "src"), deliveries, schema)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -738,7 +723,7 @@ def test_streaks_sink_fenced_batch_with_novel_days_raises(spark, tmp_path):
 
     schema = "user_id bigint, day_idx bigint"
     src1 = str(tmp_path / "src1")
-    _stage_deliveries(spark, src1, [[(1, 10), (1, 11)], [(1, 12)]], schema)
+    stage_deliveries(spark, src1, [[(1, 10), (1, 11)], [(1, 12)]], schema)
     store = str(tmp_path / "state")
     stream = (
         spark.readStream.schema(schema)
@@ -747,12 +732,12 @@ def test_streaks_sink_fenced_batch_with_novel_days_raises(spark, tmp_path):
     )
     streaks_foreach_batch(
         stream, store, checkpoint=str(tmp_path / "ck1")
-    ).awaitTermination()  # store now has applied _batch_id = 1
+    ).awaitTermination()  # the sidecar now records applied batch 1
 
     # NEW data in a NEW source with a FRESH checkpoint: batch ids restart
     # at 0 (fenced), but day 13 is unseen -> must raise, not drop.
     src2 = str(tmp_path / "src2")
-    _stage_deliveries(spark, src2, [[(1, 13)]], schema)
+    stage_deliveries(spark, src2, [[(1, 13)]], schema)
     stream2 = spark.readStream.schema(schema).parquet(src2)
     q = streaks_foreach_batch(stream2, store, checkpoint=str(tmp_path / "ck2"))
     with pytest.raises(Exception, match="unseen|mismatch"):
@@ -772,7 +757,7 @@ def test_streaks_sink_out_of_order_batch_raises(spark, tmp_path):
 
     schema = "user_id bigint, day_idx bigint"
     src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, [[(1, 10), (1, 11)]], schema)
+    stage_deliveries(spark, src, [[(1, 10), (1, 11)]], schema)
     store = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
     stream = spark.readStream.schema(schema).parquet(src)
@@ -781,35 +766,115 @@ def test_streaks_sink_out_of_order_batch_raises(spark, tmp_path):
     # Same checkpoint, new delivery that REWINDS to day 11 (<= last_day):
     # batch id advances past the fence, so the fold-path order guard must
     # fire.
-    _stage_deliveries(spark, src, [[(1, 11), (1, 12)]], schema, start=1)
+    stage_deliveries(spark, src, [[(1, 11), (1, 12)]], schema, start=1)
     stream2 = spark.readStream.schema(schema).parquet(src)
     q = streaks_foreach_batch(stream2, store, checkpoint=ck)
     with pytest.raises(Exception, match="ascending|out-of-order"):
         q.awaitTermination()
 
 
-def test_digest_sink_fold_and_replay_fence(spark, tmp_path):
-    """digest_foreach_batch: (1) the commutative fold over three
-    deliveries equals the one-shot digest of all rows; (2) replaying
-    the same files with a fresh checkpoint is fenced (the merge is NOT
-    idempotent — re-folding would double counts)."""
-    from anomaly_detection_in_time_series_data_spark.streaming.sinks import (
-        digest_foreach_batch,
-    )
-
-    deliveries = [[(11,), (25,)], [(7,)], [(300,), (2,), (2,)]]
-    schema = "h bigint"
-    src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, deliveries, schema)
-    store = str(tmp_path / "state")
+def _run_sink(spark, start, schema, src, store, checkpoint):
+    """Run a sink over ``src`` (one file per trigger) to completion, then
+    release the checkpoint registration so the pair can be re-run."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    digest_foreach_batch(
-        stream, store, checkpoint=str(tmp_path / "ck")
-    ).awaitTermination()
+    q = start(stream, store, checkpoint)
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+
+
+def _lose_commit(checkpoint, batch_id):
+    """The crash-window shape: a crash between the store swap and the
+    offset commit loses ``commits/<batch_id>`` while the offset log
+    survives, so a restart re-delivers that batch from the SAME
+    checkpoint.  The local ChecksumFileSystem keeps a .crc sibling; a
+    stale one makes the replayed commit-log rename fail as a phantom
+    concurrent writer (guarded: a no-CRC config writes none)."""
+    import os
+
+    os.remove(os.path.join(checkpoint, "commits", str(batch_id)))
+    crc = os.path.join(checkpoint, "commits", f".{batch_id}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def _store_rows(spark, store):
+    return sorted(tuple(r) for r in spark.read.parquet(store).collect())
+
+
+def _fresh_checkpoint_raises():
+    import pyspark.errors
+
+    return pytest.raises(
+        pyspark.errors.StreamingQueryException,
+        match="fresh checkpoint over an existing store",
+    )
+
+
+def _tokened(name):
+    """(schema, start(stream, store, checkpoint), two non-empty
+    deliveries) of the sinks whose fold is not idempotent and which
+    therefore carry the tokened batch-id fence."""
+    from anomaly_detection_in_time_series_data_spark.streaming import sinks
+
+    return {
+        "digest": (
+            "h bigint",
+            lambda s, p, c: sinks.digest_foreach_batch(s, p, checkpoint=c),
+            [[(5,), (9,)], [(100,)]],
+        ),
+        "cms": (
+            "i bigint, b bigint",
+            lambda s, p, c: sinks.cms_foreach_batch(s, p, checkpoint=c),
+            [[(0, 3), (0, 3), (1, 5)], [(0, 3), (2, 5)]],
+        ),
+        "mg": (
+            "k bigint",
+            lambda s, p, c: sinks.mg_foreach_batch(
+                s, p, capacity=2, checkpoint=c
+            ),
+            [[(1,), (1,), (2,)], [(3,), (1,), (1,)]],
+        ),
+    }[name]
+
+
+def _assert_tokened_fence(spark, start, schema, src, store, checkpoint, tmp_path):
+    """The tokened fence over a store that applied batches 0..n from
+    ``checkpoint``: the SAME checkpoint re-delivering batch n after a lost
+    commit skips, and a FRESH checkpoint (ids restarting below the applied
+    one) raises — a sketch carries no novelty signal, so a silent skip
+    would drop data.  The store is unchanged either way."""
+    import os
+
+    before = _store_rows(spark, store)
+    last = max(
+        int(f) for f in os.listdir(os.path.join(checkpoint, "commits"))
+        if f.isdigit()
+    )
+    _lose_commit(checkpoint, last)
+    _run_sink(spark, start, schema, src, store, checkpoint)
+    assert _store_rows(spark, store) == before
+    with _fresh_checkpoint_raises():
+        _run_sink(spark, start, schema, src, store, str(tmp_path / "ck_fresh"))
+    assert _store_rows(spark, store) == before
+
+
+def test_digest_sink_fold_and_replay_fence(spark, tmp_path):
+    """digest_foreach_batch: (1) the commutative fold over three
+    deliveries equals the one-shot digest of all rows; (2) the fold is not
+    idempotent (re-folding would double counts), so the tokened fence
+    skips a same-checkpoint replay and refuses a fresh checkpoint."""
+    deliveries = [[(11,), (25,)], [(7,)], [(300,), (2,), (2,)]]
+    schema, start, _ = _tokened("digest")
+    src = str(tmp_path / "src")
+    stage_deliveries(spark, src, deliveries, schema)
+    store, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    _run_sink(spark, start, schema, src, store, ck)
     row = spark.read.parquet(store).collect()[0]
     allv = [11, 25, 7, 300, 2, 2]
     xor = 0
@@ -819,276 +884,115 @@ def test_digest_sink_fold_and_replay_fence(spark, tmp_path):
             row.h_min, row.h_max) == (
         len(allv), sum(allv) % 9223372036854775807, xor, min(allv), max(allv)
     )
-
-    # Fresh checkpoint over the existing store: batch ids restart at 0,
-    # and a digest has no novelty signal to tell replay from genuinely
-    # new deliveries — the sink must FAIL LOUDLY, not silently skip
-    # (silent skip would undetectably drop new data), and the store must
-    # be left unchanged.
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    import pyspark.errors
-
-    with pytest.raises(
-        pyspark.errors.StreamingQueryException,
-        match="fresh checkpoint over an existing store",
-    ):
-        digest_foreach_batch(
-            stream2, store, checkpoint=str(tmp_path / "ck2")
-        ).awaitTermination()
-    row2 = spark.read.parquet(store).collect()[0]
-    assert (row2.n_rows, row2.checksum_sum) == (row.n_rows, row.checksum_sum)
+    _assert_tokened_fence(spark, start, schema, src, store, ck, tmp_path)
 
 
-def test_digest_sink_batch0_crash_replay_skips(spark, tmp_path):
-    """applied == batch_id == 0 from the SAME checkpoint is the replay
-    after a crash between _swap_in and the checkpoint commit on the very
-    first batch — it must SKIP, not raise or re-fold.  Simulated the way
-    it actually happens: delete ``commits/0`` from the checkpoint (the
-    offset log survives, the commit record is lost) and restart the same
-    (checkpoint, store) pair.  Since round 11 the store carries a
-    ``_ckpt`` token, so the SAME shape from a DIFFERENT checkpoint —
-    a fresh checkpoint pointed at a reused batch-0 store, where skipping
-    would silently drop the first new delivery — now raises instead
-    (ADVICE r10)."""
-    import os
-
-    from anomaly_detection_in_time_series_data_spark.streaming.sinks import (
-        digest_foreach_batch,
-    )
-
-    schema = "h bigint"
-    deliveries = [[(5,), (9,)]]  # exactly one delivery -> applied == 0
+def test_cms_sink_keyed_fold_fence_and_identity(spark, tmp_path):
+    """cms_foreach_batch: (1) the keyed addition over three deliveries,
+    one of them empty (the addition identity), equals the one-shot (i, b)
+    counts of all rows; (2) addition is not idempotent, so the tokened
+    fence skips a same-checkpoint replay and refuses a fresh checkpoint."""
+    deliveries = [[(0, 3), (0, 3), (1, 5)], [], [(0, 3), (2, 5), (1, 5)]]
+    schema, start, _ = _tokened("cms")
     src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, deliveries, schema)
-    store = str(tmp_path / "state")
-    ck = str(tmp_path / "ck")
-
-    def run(checkpoint):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = digest_foreach_batch(stream, store, checkpoint=checkpoint)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()  # release the checkpoint registration for re-runs
-
-    run(ck)
-    row = spark.read.parquet(store).collect()[0]
-    assert (row.n_rows, row.checksum_sum) == (2, 14)
-
-    # Crash-window shape: the batch-0 commit record is lost but the
-    # offset log survives; the restarted stream re-delivers batch 0 from
-    # the SAME checkpoint over a store that already applied batch 0.
-    # Must skip (store unchanged), not raise.
-    os.remove(os.path.join(ck, "commits", "0"))
-    # the local ChecksumFileSystem keeps a .crc sibling; a stale one makes
-    # the replayed commit-log rename fail as a phantom concurrent writer
-    # (guarded: a no-CRC Hadoop local-FS config writes no sibling)
-    crc = os.path.join(ck, "commits", ".0.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    run(ck)
-    row2 = spark.read.parquet(store).collect()[0]
-    assert (row2.n_rows, row2.checksum_sum, row2.checksum_xor) == (
-        row.n_rows, row.checksum_sum, row.checksum_xor
-    )
-
-    # A DIFFERENT checkpoint delivering batch 0 over the batch-0 store is
-    # store reuse, not crash replay — the token fence must fail loudly
-    # (pre-r11 this silently skipped, dropping the delivery).
-    import pyspark.errors
-
-    with pytest.raises(
-        pyspark.errors.StreamingQueryException,
-        match="fresh checkpoint over an existing store",
-    ):
-        run(str(tmp_path / "ck2"))
-    row3 = spark.read.parquet(store).collect()[0]
-    assert (row3.n_rows, row3.checksum_sum) == (row.n_rows, row.checksum_sum)
+    stage_deliveries(spark, src, deliveries, schema)
+    store, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    _run_sink(spark, start, schema, src, store, ck)
+    got = {(r.i, r.b): r.n for r in spark.read.parquet(store).collect()}
+    assert got == {(0, 3): 3, (1, 5): 2, (2, 5): 1}
+    _assert_tokened_fence(spark, start, schema, src, store, ck, tmp_path)
 
 
-def test_digest_sink_relocated_pair_replays_cleanly(spark, tmp_path):
-    """ADVICE r11: checkpoint identity is a random token minted into
-    ``<checkpoint>/_sink_identity``, not the checkpoint's resolved
-    filesystem path — so relocating a (store, checkpoint) pair TOGETHER
-    (backup/restore, a different mount point or container path) keeps a
-    crash-window replay classified as same-checkpoint (skip), instead of
-    raising 'fresh checkpoint over an existing store' and turning a
-    recoverable restart into manual surgery."""
-    import os
+@pytest.mark.parametrize("name", ["digest", "cms", "mg"])
+def test_tokened_sink_batch0_crash_replay_skips(spark, tmp_path, name):
+    """applied == batch_id == 0 from the SAME checkpoint is the replay
+    after a crash between the swap and the checkpoint commit on the very
+    first batch — it must SKIP, not raise or re-fold.  The same shape from
+    a DIFFERENT checkpoint is a fresh checkpoint pointed at a reused
+    batch-0 store, where skipping would silently drop the first new
+    delivery, so it raises.  The store is unchanged throughout."""
+    schema, start, deliveries = _tokened(name)
+    src = str(tmp_path / "src")
+    stage_deliveries(spark, src, deliveries[:1], schema)
+    store, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    _run_sink(spark, start, schema, src, store, ck)
+    folded = _store_rows(spark, store)
+    assert folded
+
+    _lose_commit(ck, 0)
+    _run_sink(spark, start, schema, src, store, ck)
+    assert _store_rows(spark, store) == folded
+
+    with _fresh_checkpoint_raises():
+        _run_sink(spark, start, schema, src, store, str(tmp_path / "ck2"))
+    assert _store_rows(spark, store) == folded
+
+
+@pytest.mark.parametrize("name", ["digest", "cms", "mg"])
+def test_tokened_sink_relocated_pair_replays_cleanly(spark, tmp_path, name):
+    """Checkpoint identity is a random token minted into
+    ``<checkpoint>/_sink_identity``, not the checkpoint's filesystem path,
+    so relocating a (store, checkpoint) pair TOGETHER (backup/restore,
+    another mount point) keeps a crash-window replay classified as
+    same-checkpoint (skip) instead of raising; a genuinely fresh
+    checkpoint over the relocated store still raises."""
     import shutil
 
-    import pyspark.errors
-
-    from anomaly_detection_in_time_series_data_spark.streaming.sinks import (
-        digest_foreach_batch,
-    )
-
-    schema = "h bigint"
+    schema, start, deliveries = _tokened(name)
     src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, [[(5,), (9,)]], schema)
-
-    def run(store, checkpoint):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = digest_foreach_batch(stream, store, checkpoint=checkpoint)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-
+    stage_deliveries(spark, src, deliveries[:1], schema)
     store1, ck1 = str(tmp_path / "stateA" / "s"), str(tmp_path / "ckA" / "c")
-    run(store1, ck1)
-    row = spark.read.parquet(store1).collect()[0]
-    assert (row.n_rows, row.checksum_sum) == (2, 14)
+    _run_sink(spark, start, schema, src, store1, ck1)
+    folded = _store_rows(spark, store1)
 
-    # relocate the WHOLE pair, then lose the batch-0 commit record (the
-    # crash-window shape) — the identity file travels with the checkpoint
     store2, ck2 = str(tmp_path / "stateB" / "s"), str(tmp_path / "ckB" / "c")
     shutil.copytree(store1, store2)
     shutil.copytree(ck1, ck2)
     shutil.rmtree(str(tmp_path / "stateA"))
     shutil.rmtree(str(tmp_path / "ckA"))
-    os.remove(os.path.join(ck2, "commits", "0"))
-    crc = os.path.join(ck2, "commits", ".0.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    run(store2, ck2)  # same-checkpoint crash replay at the NEW path: skip
-    row2 = spark.read.parquet(store2).collect()[0]
-    assert (row2.n_rows, row2.checksum_sum, row2.checksum_xor) == (
-        row.n_rows, row.checksum_sum, row.checksum_xor
-    )
+    _lose_commit(ck2, 0)
+    _run_sink(spark, start, schema, src, store2, ck2)  # skip at the new path
+    assert _store_rows(spark, store2) == folded
 
-    # a genuinely fresh checkpoint (its own minted identity) over the
-    # relocated store must still fail loudly
-    with pytest.raises(
-        pyspark.errors.StreamingQueryException,
-        match="fresh checkpoint over an existing store",
-    ):
-        run(store2, str(tmp_path / "ckC" / "c"))
+    with _fresh_checkpoint_raises():
+        _run_sink(spark, start, schema, src, store2, str(tmp_path / "ckC" / "c"))
+    assert _store_rows(spark, store2) == folded
 
 
-def test_digest_sink_empty_delivery_is_identity(spark, tmp_path):
-    """A zero-row delivery (e.g. an empty file) must fold as the monoid
-    identity — before the guard, sum()/bit_xor()/min()/max() over zero
-    rows produced NULLs that the cross-join merge propagated into the
-    store permanently, silently breaking all later replication checks."""
-    from anomaly_detection_in_time_series_data_spark.streaming.sinks import (
-        digest_foreach_batch,
-    )
+@pytest.mark.parametrize("name", ["digest", "cms", "mg"])
+def test_tokened_sink_empty_delivery_is_identity(spark, tmp_path, name):
+    """A zero-row delivery folds as the identity: the store after
+    (d0, empty, d1) equals the store after (d0, d1).  For the digest this
+    pins the null-skipping aggregates — sum()/bit_xor()/min()/max() over
+    zero rows are NULL, and must not reach the stored state."""
+    schema, start, (d0, d1) = _tokened(name)
+    stores = []
+    for tag, deliveries in (("with", [d0, [], d1]), ("without", [d0, d1])):
+        src = str(tmp_path / f"src_{tag}")
+        stage_deliveries(spark, src, deliveries, schema)
+        store = str(tmp_path / f"state_{tag}")
+        _run_sink(spark, start, schema, src, store, str(tmp_path / f"ck_{tag}"))
+        stores.append(_store_rows(spark, store))
+    assert stores[0] == stores[1]
+    assert all(v is not None for row in stores[0] for v in row)
 
-    schema = "h bigint"
-    deliveries = [[(5,), (9,)], [], [(100,)]]
+
+@pytest.mark.parametrize("name", ["digest", "cms", "mg"])
+def test_tokened_sink_store_without_sidecar_raises(spark, tmp_path, name):
+    """The fence lives in the store's ``_sink.json`` sidecar.  A store
+    without one (written by something other than the sink) gives a fenced
+    sink no applied batch id to compare against, so the batch cannot be
+    classified as new or replayed: the sink raises instead of folding it
+    as unfenced, and leaves the store alone."""
+    schema, start, deliveries = _tokened(name)
     src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, deliveries, schema)
+    stage_deliveries(spark, src, deliveries[:1], schema)
     store = str(tmp_path / "state")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    digest_foreach_batch(
-        stream, store, checkpoint=str(tmp_path / "ck")
-    ).awaitTermination()
-    row = spark.read.parquet(store).collect()[0]
-    assert (row.n_rows, row.checksum_sum, row.checksum_xor,
-            row.h_min, row.h_max) == (3, 114, 5 ^ 9 ^ 100, 5, 100)
-
-
-def test_cms_sink_keyed_fold_fence_and_identity(spark, tmp_path):
-    """cms_foreach_batch: (1) the keyed addition over three deliveries
-    equals the one-shot (i, b) counts of all rows; (2) an empty delivery
-    is the addition identity; (3) a fresh checkpoint restarting ids over
-    NEWER state raises (addition is not idempotent); (4) the
-    applied == batch_id == 0 crash-window replay skips, store unchanged."""
-    from anomaly_detection_in_time_series_data_spark.streaming.sinks import (
-        cms_foreach_batch,
-    )
-
-    schema = "i bigint, b bigint"
-    deliveries = [[(0, 3), (0, 3), (1, 5)], [], [(0, 3), (2, 5), (1, 5)]]
-    src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, deliveries, schema)
-    store = str(tmp_path / "state")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    cms_foreach_batch(
-        stream, store, checkpoint=str(tmp_path / "ck")
-    ).awaitTermination()
-    got = {
-        (r.i, r.b): r.n for r in spark.read.parquet(store).collect()
-    }
-    assert got == {(0, 3): 3, (1, 5): 2, (2, 5): 1}
-
-    # fresh checkpoint over newer state: ids restart at 0 < applied -> raise
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    import pyspark.errors
-
-    with pytest.raises(
-        pyspark.errors.StreamingQueryException,
-        match="fresh checkpoint over an existing store",
-    ):
-        cms_foreach_batch(
-            stream2, store, checkpoint=str(tmp_path / "ck2")
-        ).awaitTermination()
-    got2 = {(r.i, r.b): r.n for r in spark.read.parquet(store).collect()}
-    assert got2 == got
-
-    # crash-window shape: single delivery -> applied == 0; the SAME
-    # checkpoint re-delivering batch 0 (commit record lost, offset log
-    # intact) must SKIP, not raise or re-fold — while batch 0 from a
-    # DIFFERENT checkpoint is store reuse and must raise (r11 token).
-    import os
-
-    src1 = str(tmp_path / "src1")
-    _stage_deliveries(spark, src1, [deliveries[0]], schema)
-    store1 = str(tmp_path / "state1")
-    cka = str(tmp_path / "cka")
-
-    def run1(checkpoint):
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src1)
-        )
-        q = cms_foreach_batch(s, store1, checkpoint=checkpoint)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()  # release the checkpoint registration for re-runs
-
-    run1(cka)
-    os.remove(os.path.join(cka, "commits", "0"))
-    crc = os.path.join(cka, "commits", ".0.crc")  # stale crc sibling
-    if os.path.exists(crc):
-        os.remove(crc)
-    run1(cka)  # same-checkpoint crash replay: skip
-    got3 = {(r.i, r.b): r.n for r in spark.read.parquet(store1).collect()}
-    assert got3 == {(0, 3): 2, (1, 5): 1}
-    with pytest.raises(
-        pyspark.errors.StreamingQueryException,
-        match="fresh checkpoint over an existing store",
-    ):
-        run1(str(tmp_path / "ckb"))
-    got4 = {(r.i, r.b): r.n for r in spark.read.parquet(store1).collect()}
-    assert got4 == got3
+    spark.createDataFrame(deliveries[1], schema).write.parquet(store)
+    before = _store_rows(spark, store)
+    with pytest.raises(Exception, match="cannot classify replay"):
+        _run_sink(spark, start, schema, src, store, str(tmp_path / "ck"))
+    assert _store_rows(spark, store) == before
 
 
 def test_hll_sink_idempotent_max_merge(spark, tmp_path):
@@ -1110,7 +1014,7 @@ def test_hll_sink_idempotent_max_merge(spark, tmp_path):
         [(1, 2), (2, 9)],
     ]
     src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, deliveries, schema)
+    stage_deliveries(spark, src, deliveries, schema)
     store = str(tmp_path / "state")
 
     def run(ck):
@@ -1131,17 +1035,15 @@ def test_hll_sink_idempotent_max_merge(spark, tmp_path):
     regs2 = {r.reg: r.rho for r in spark.read.parquet(store).collect()}
     assert regs2 == regs
 
-
 def test_mg_sink_guarantee_fold_and_fence(spark, tmp_path):
-    """mg_foreach_batch (the sixth IVM discipline — bounded-state lossy
-    fold): (1) the streamed five-delivery fold equals a Python replica
-    of the mergeable-summaries rule step-for-step; (2) the classic MG
-    guarantee holds vs exact counts — every surviving count undercounts
-    by at most the total decremented mass, and every key with true
-    frequency > N/(capacity+1) is present; (3) state never exceeds
-    capacity rows; (4) the tokened fence: same-checkpoint batch-0 crash
-    replay skips, a fresh checkpoint over the store raises."""
-    import os
+    """mg_foreach_batch (bounded-state lossy fold): (1) the streamed
+    three-delivery fold equals a Python replica of the mergeable-summaries
+    rule step-for-step; (2) the classic MG guarantee holds vs exact
+    counts — every surviving count undercounts by at most the total
+    decremented mass, and every key with true frequency > N/(capacity+1)
+    is present; (3) state never exceeds capacity rows; (4) trimming is not
+    idempotent, so the tokened fence skips a same-checkpoint replay and
+    refuses a fresh checkpoint."""
     from collections import Counter
 
     from anomaly_detection_in_time_series_data_spark.streaming.sinks import (
@@ -1156,23 +1058,13 @@ def test_mg_sink_guarantee_fold_and_fence(spark, tmp_path):
     ]
     schema = "k bigint"
     src = str(tmp_path / "src")
-    _stage_deliveries(spark, src, deliveries, schema)
-    store = str(tmp_path / "state")
-    ck = str(tmp_path / "ck")
+    stage_deliveries(spark, src, deliveries, schema)
+    store, ck = str(tmp_path / "state"), str(tmp_path / "ck")
 
-    def run(checkpoint, source=src):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(source)
-        )
-        q = mg_foreach_batch(stream, store, capacity=cap, checkpoint=checkpoint)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    def start(stream, store, checkpoint):
+        return mg_foreach_batch(stream, store, capacity=cap, checkpoint=checkpoint)
 
-    run(ck)
+    _run_sink(spark, start, schema, src, store, ck)
     got = {r.k: r.n for r in spark.read.parquet(store).collect()}
 
     # Python replica of the fold + decrement accounting
@@ -1198,25 +1090,7 @@ def test_mg_sink_guarantee_fold_and_fence(spark, tmp_path):
         if c > n_total / (cap + 1):
             assert k in got, f"heavy hitter {k} missing"
 
-    # fence: crash-window replay from the SAME checkpoint skips...
-    last = len(deliveries) - 1
-    os.remove(os.path.join(ck, "commits", str(last)))
-    crc = os.path.join(ck, "commits", f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    run(ck)
-    got2 = {r.k: r.n for r in spark.read.parquet(store).collect()}
-    assert got2 == got
-    # ...and a fresh checkpoint over the store raises
-    import pyspark.errors
-
-    with pytest.raises(
-        pyspark.errors.StreamingQueryException,
-        match="fresh checkpoint over an existing store",
-    ):
-        run(str(tmp_path / "ck2"))
-    got3 = {r.k: r.n for r in spark.read.parquet(store).collect()}
-    assert got3 == got
+    _assert_tokened_fence(spark, start, schema, src, store, ck, tmp_path)
 
 
 def test_stream_parts_scales_with_source_bytes(tmp_path, monkeypatch):
