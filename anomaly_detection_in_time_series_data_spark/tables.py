@@ -53,9 +53,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL API."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

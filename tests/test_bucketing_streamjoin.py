@@ -48,9 +48,9 @@ def _one_state_partition(spark):
     the duration of a test stream (conf is frozen into the query at
     start()).  These eviction audits deliver ONE key across ~16 triggers;
     at the session default every trigger opens/commits 4 state stores x
-    N partitions of empty state — pure wall-time (the r13 _stream_parts
-    lesson applied to the suite; semantics are per-key, partition-count
-    independent)."""
+    N partitions of empty state — pure wall-time (the r13
+    ``streaming.runtime.stream_parts`` lesson applied to the suite;
+    semantics are per-key, partition-count independent)."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, "1")

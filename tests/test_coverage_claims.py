@@ -4,10 +4,9 @@ from driver-recorded results.
 Round 1 shipped 77 registered queries whose oracle status was a claim with
 no driver CORRECTNESS row (the driver checks only the first 50 registered
 names per round).  This guard makes that state impossible to reintroduce:
-every oracle claim must be (a) green in some recorded CORRECTNESS_r*.json,
-(b) inside the current first-50 window (checked this round), or (c)
-explicitly listed in the current pending-rotation list (scheduled for the
-next rotation).  Anything else fails CI.
+every oracle claim must be (a) green in some recorded CORRECTNESS_r*.json
+or (b) inside the current first-50 window, which ``correctness_window``
+derives from those files.  Anything else fails CI.
 """
 
 from __future__ import annotations
@@ -49,54 +48,62 @@ def test_every_claimed_oracle_is_verified_or_scheduled():
     claimed = _claimed_oracles() & set(q.QUERIES)
     green = _recorded_green()
     window = set(list(q.QUERIES)[:50])
-    pending = set(q._PENDING_ROUND14)
-    orphaned = sorted(
-        n for n in claimed if n not in green and n not in window and n not in pending
-    )
+    orphaned = sorted(n for n in claimed if n not in green and n not in window)
     assert not orphaned, (
-        "oracle claims with no driver row, not in the current correctness "
-        f"window, and not scheduled in _PENDING_ROUND14: {orphaned}"
+        "oracle claims with no green row and not in the current "
+        f"correctness window: {orphaned}"
     )
 
 
-def test_pending_rotation_list_is_consistent():
-    """_PENDING_ROUND14 names must exist, carry oracles, and actually need a
-    rotation (drop them from the list once a green row is recorded AND
-    they have left the front window)."""
-    pending = list(q._PENDING_ROUND14)
-    assert len(pending) == len(set(pending)), "duplicates in _PENDING_ROUND14"
-    unknown = sorted(set(pending) - set(q.QUERIES))
-    assert not unknown, f"unknown queries in _PENDING_ROUND14: {unknown}"
-    no_sql = sorted(n for n in pending if n not in q.ORACLE)
-    assert not no_sql, f"_PENDING_ROUND14 entries without oracle SQL: {no_sql}"
+def test_impl_changed_keys_are_registered_oracles():
+    """A typo in _IMPL_CHANGED would silently leave a changed query out of
+    the window; every key must name a registered oracle-bearing query."""
+    unknown = sorted(n for n in q._IMPL_CHANGED if n not in q.ORACLE)
+    assert not unknown, f"_IMPL_CHANGED names without oracle SQL: {unknown}"
 
 
-def test_round13_front_window_is_exact():
-    """The rotation IS the round-to-round correctness mechanism: the front
-    must be exactly the driver's 50-name window, every name must carry an
-    oracle, and the registry must actually start with it (a typo or a
-    re-registration after _rotate_front would silently shrink coverage)."""
-    front = list(q._ROUND13_FRONT)
-    assert len(front) == 50, f"front window must be exactly 50, got {len(front)}"
-    assert len(set(front)) == 50, "duplicates in _ROUND13_FRONT"
-    assert front[: len(q._PENDING_ROUND13)] == list(q._PENDING_ROUND13), (
-        "round 12 had no reds, so the window must lead with the full "
-        "7-name _PENDING_ROUND13 backlog in order"
-    )
-    no_sql = sorted(n for n in front if n not in q.ORACLE)
-    assert not no_sql, f"_ROUND13_FRONT entries without oracle SQL: {no_sql}"
-    assert set(q._PENDING_ROUND13) <= set(front) | set(q._PENDING_ROUND14), (
-        "every round-12 backlog name must be in the round-13 window or "
-        "explicitly deferred to _PENDING_ROUND14"
-    )
-    assert set(q._R13_IMPL_CHANGED) <= set(front) | set(q._PENDING_ROUND14), (
-        "every query impl-touched in round 13 must be re-proven in the "
-        "round-13 window or explicitly deferred to _PENDING_ROUND14"
-    )
-    assert list(q.QUERIES)[:50] == front, (
-        "QUERIES does not start with _ROUND13_FRONT — was something "
+def test_correctness_window_leads_the_registry():
+    """The rotation IS the round-to-round correctness mechanism: the
+    window must be 50 distinct oracle-bearing names and the registry must
+    actually start with it (a re-registration after _rotate_front would
+    silently shrink coverage)."""
+    window = q.correctness_window(REPO)
+    assert len(window) == 50, f"window must be exactly 50, got {len(window)}"
+    assert len(set(window)) == 50, "duplicates in the correctness window"
+    no_sql = sorted(n for n in window if n not in q.ORACLE)
+    assert not no_sql, f"window entries without oracle SQL: {no_sql}"
+    assert list(q.QUERIES)[:50] == window, (
+        "QUERIES does not start with correctness_window() — was something "
         "registered after _rotate_front()?"
     )
+
+
+def test_correctness_window_ordering(tmp_path, monkeypatch):
+    """No green row first, then live _IMPL_CHANGED entries (an entry
+    expires once a green row newer than its round lands), then oldest
+    newest-green first; ties keep registration order."""
+    names = ["a", "b", "c", "d", "e", "f", "g"]
+    monkeypatch.setattr(q, "ORACLE", {n: "SELECT 1" for n in names})
+    monkeypatch.setattr(q, "_IMPL_CHANGED", {"e": 3, "f": 2})
+    assert q.correctness_window(tmp_path) == names  # no files
+
+    def ok(match: bool) -> dict:
+        return {"hash_match": match}
+
+    rounds = {
+        1: {"a": ok(True), "c": ok(True), "d": ok(True), "g": ok(False)},
+        2: {"b": ok(True), "f": ok(True), "g": ok(False)},
+        3: {"a": ok(True), "e": ok(True), "f": ok(True)},
+    }
+    for rnd, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_notes.json").write_text("{}")  # not a round file
+    # g: never green; e: impl-changed after its r3 row (live); f: changed
+    # after r2 but green again in r3 (expired); then newest green round
+    # 1 (c, d in registration order), 2 (b), 3 (a, f).
+    assert q.correctness_window(tmp_path) == ["g", "e", "c", "d", "b", "a", "f"]
+    monkeypatch.setattr(q, "_WINDOW", 3)
+    assert q.correctness_window(tmp_path) == ["g", "e", "c"]
 
 
 def test_bench_headliners_are_registered_queries():

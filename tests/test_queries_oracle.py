@@ -7,14 +7,19 @@ Suite wall-time discipline (VERDICT r12 item 2): parametrizing over ALL
 independent gates — the driver's own CORRECTNESS run (50-name window at
 sf0.01) and `tools/check_oracle.py` / `tools/preflight.py` (all oracles,
 run every round and before every commit).  By default this file now
-mirrors the driver's gate exactly: the FIRST-50 registered names (the
-current rotation window).  Set ``ADTS_FULL_ORACLE=1`` for the full sweep
+mirrors the oracle gate: the FIRST-50 registered names (the current
+rotation window), plus the window the gate checked last (the newest
+CORRECTNESS_r*.json), so a rotation never drops a parity test the
+previous commit ran.  Set ``ADTS_FULL_ORACLE=1`` for the full sweep
 (preflight covers the same ground without pytest overhead).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -28,7 +33,16 @@ from conftest import SF_DIR
 if os.environ.get("ADTS_FULL_ORACLE"):
     _PARITY_NAMES = sorted(q.ORACLE)
 else:
-    _PARITY_NAMES = [n for n in list(q.QUERIES)[:50] if n in q.ORACLE]
+    _rounds = {
+        int(m.group(1)): p
+        for p in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    }
+    _last = json.loads(_rounds[max(_rounds)].read_text()) if _rounds else {}
+    _window = list(q.QUERIES)[:50]
+    _PARITY_NAMES = [n for n in _window if n in q.ORACLE] + [
+        n for n in _last if n in q.ORACLE and n not in _window
+    ]
 
 
 @pytest.fixture(scope="module")

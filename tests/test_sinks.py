@@ -173,3 +173,44 @@ def test_sink_trigger_job_counts(spark, tmp_path, name):
     per = _jobs_per_trigger(spark, str(q.runId))
     assert sorted(per) == [0, 1, 2]
     assert max(per.values()) <= budget, dict(per)
+
+
+def test_replay_to_store_removes_temp_root_when_sink_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A sink that raises mid-replay (after one delivery folded) must
+    surface its error from ``replay_to_store`` and leave no temp root
+    behind: staged deliveries, store and checkpoint all go."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from anomaly_detection_in_time_series_data_spark.streaming.runtime import (
+        replay_to_store,
+    )
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    folded = []
+
+    def fold(batch_df, state, batch_id):
+        folded.append(batch_id)
+        if batch_id == 1:
+            raise RuntimeError("replay boom")
+        return batch_df
+
+    frame = spark.createDataFrame(
+        [(k, k % 3) for k in range(9)], "k long, shard long"
+    )
+    with pytest.raises(StreamingQueryException, match="replay boom"):
+        replay_to_store(
+            frame, "shard", range(3), ["k"],
+            lambda stream, store, checkpoint: sinks.fold_sink(
+                stream, store, checkpoint=checkpoint, fold=fold
+            ),
+            lambda store: store,
+            str(tmp_path),
+        )
+    assert folded == [0, 1]
+    assert list(scratch.iterdir()) == []

@@ -1094,33 +1094,35 @@ def test_mg_sink_guarantee_fold_and_fence(spark, tmp_path):
 
 
 def test_stream_parts_scales_with_source_bytes(tmp_path, monkeypatch):
-    """_stream_parts (optimization r13) sizes the streaming shuffle/state
+    """stream_parts (optimization r13) sizes the streaming shuffle/state
     partition count by source bytes: small fixtures collapse to 1, large
     sources grow linearly at one partition per target chunk, and the env
     override wins outright."""
-    from anomaly_detection_in_time_series_data_spark.queries import _stream_parts
+    from anomaly_detection_in_time_series_data_spark.streaming import runtime
 
     (tmp_path / "tiny.parquet").write_bytes(b"x" * 1024)
     monkeypatch.delenv("ADTS_STREAM_PARTS", raising=False)
-    assert _stream_parts(str(tmp_path), "tiny") == 1
+    assert runtime.stream_parts(str(tmp_path), "tiny") == 1
     # 3 x 64 MB target -> 3 partitions (use a tiny target to avoid a big file)
-    monkeypatch.setenv("ADTS_STREAM_PART_BYTES", "512")
+    monkeypatch.setattr(runtime, "STREAM_PART_BYTES", 512)
     (tmp_path / "mid.parquet").write_bytes(b"x" * 1536)
-    assert _stream_parts(str(tmp_path), "mid") == 3
+    assert runtime.stream_parts(str(tmp_path), "mid") == 3
     # multiple tables sum
-    assert _stream_parts(str(tmp_path), "mid", "tiny") == 5
+    assert runtime.stream_parts(str(tmp_path), "mid", "tiny") == 5
     # a missing table charges one full target chunk, never zero
-    assert _stream_parts(str(tmp_path), "absent") == 1
+    assert runtime.stream_parts(str(tmp_path), "absent") == 1
     # env override wins
     monkeypatch.setenv("ADTS_STREAM_PARTS", "7")
-    assert _stream_parts(str(tmp_path), "mid") == 7
+    assert runtime.stream_parts(str(tmp_path), "mid") == 7
 
 
 def test_scoped_conf_restores_previous_values(spark):
-    from anomaly_detection_in_time_series_data_spark.queries import _scoped_conf
+    from anomaly_detection_in_time_series_data_spark.streaming.runtime import (
+        scoped_conf,
+    )
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    with _scoped_conf(spark, {key: "3"}):
+    with scoped_conf(spark, {key: "3"}):
         assert spark.conf.get(key) == "3"
     assert spark.conf.get(key) == before

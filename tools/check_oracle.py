@@ -161,7 +161,7 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]
 # seconds; embedding_near_dup_pairs / minhash_dedup_keep /
 # golden_record_survivorship / greedy_pack_assignments were re-measured
 # at 1.0s / 21.9s / 14.7s / 23.1s in DuckDB at sf0.1 (the round-4 "slow"
-# classification was stale) — see tools/sweep_r8_graduated_sf0.1.log.
+# classification was stale), measured by the round-8 sf0.1 sweep.
 # Only the two one-row-per-key-per-iteration recurrences remain: their
 # recursive CTE joins the full seq table once per row index (~20k
 # iterations at sf0.1, >10 min measured), and the float op sequence
@@ -169,7 +169,7 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]
 # They are NOT standing skips: tools/slow_oracle_tier.py hash-checks
 # both each round on a deterministic half-scale derivation of sf0.1
 # (events filtered to user_id % 2 == 0 — ~10k iterations, same
-# recurrence, 5x the sf0.01 rows), logged in tools/sweep_r*_tier.log.
+# recurrence, 5x the sf0.01 rows).
 SLOW_ORACLES = {
     "ewma_anomaly_scores",
     "holt_forecast_anomaly",
