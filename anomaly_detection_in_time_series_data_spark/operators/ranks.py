@@ -1,25 +1,33 @@
-"""Distributed exact global ranking — the scale path for every global
-``row_number`` / ``ntile`` in the engine.
+"""Distributed exact ranks, running sums and records — the scale path for
+every global ``row_number`` / ``ntile`` / running sum in the engine.
 
 A partition-less ``Window.orderBy(...)`` moves the WHOLE frame into one
-task (Spark's ``WindowExec`` warns exactly this), which is fine for a
-grouped 10-row result but a single-node sort of the fact table at 100 TB.
-This module is the house replacement, terasort-shaped:
+task (Spark's ``WindowExec`` warns exactly this), and ``PARTITION BY`` a
+tiny key domain does so per key: fine for a grouped 10-row result, a
+single-node sort of the fact table at 100 TB.  Every operator here is one
+terasort-shaped range scan, ``_range_scan``:
 
-1. ``repartitionByRange`` on the sort key spreads the total order across
-   range partitions (a parallel range shuffle — the same shuffle ANY
-   engine pays for a global sort);
-2. ``sortWithinPartitions`` + an Arrow-batched ``mapInPandas`` assigns
-   per-partition LOCAL row numbers (no per-row Python — a ``range`` per
-   Arrow batch);
-3. per-partition counts (a partitions-count-sized frame, NOT data-sized)
-   fold through a tiny running-sum window into OFFSETS, broadcast back;
-   ``local + offset`` is the exact global rank.
+1. ``repartitionByRange`` on (key, order) spreads the total order across
+   ranges (the same shuffle ANY engine pays for a global sort);
+2. ``sortWithinPartitions`` + an Arrow-batched ``mapInPandas`` runs the
+   operator's LOCAL step per key over each range, carrying per-key state
+   across its Arrow batches (no per-row Python);
+3. per-(range, key) partials (a partitions x keys frame, NOT data-sized)
+   fold through a tiny window into each range's incoming OFFSET, which
+   is broadcast back and combined with the local value.
 
-No stage ever sorts more than one range partition.  ``ntile_from_rank``
-then derives SQL-standard ntile bins from (rank, total) with pure bigint
-arithmetic — floor distribution, first ``n % k`` buckets one row larger —
-bit-identical to ``ntile(k) OVER (ORDER BY ...)`` on any engine.
+No stage ever sorts more than one range.  An operator supplies only its
+local step and monoid: SUM for the ranks and ``global_prefix_sum`` (a
+rank is the running sum of 1 per row; the global operators have no key
+columns), STRICT MAX for ``keyed_record_scan``.  Nulls follow the
+per-key window forms on both sides of ``keyed_exact_rank``'s size gate:
+a null key is one group; a null value is never a record and never moves
+the running max (``max()`` skips it); ``global_prefix_sum`` rejects one.
+
+``ntile_from_rank`` then derives SQL-standard ntile bins from (rank,
+total) with pure bigint arithmetic — floor distribution, first ``n % k``
+buckets one row larger — bit-identical to ``ntile(k) OVER (ORDER BY ...)``
+on any engine.
 
 Proof of equivalence lives in the driver gate: the ``distributed_exact_rank``
 query hash-matches this pipeline against DuckDB's single-window
@@ -32,6 +40,9 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -50,6 +61,13 @@ KEYED_RANK_SMALL_BYTES = int(
     os.environ.get("ADTS_KEYED_RANK_SMALL_BYTES", str(256 * 1024 * 1024))
 )
 
+# Prefix of every internal column the range scan adds (and drops again);
+# plans.inspect recognizes the scan's bounded offset windows by it.
+SCAN_PREFIX = "_scan_"
+_PID, _KID, _LOCAL, _PART, _OFF, _TOT = (
+    f"{SCAN_PREFIX}{s}" for s in ("pid", "kid", "local", "part", "off", "tot")
+)
+
 
 def _plan_size_bytes(df: DataFrame) -> "int | None":
     """Catalyst's estimated output size of ``df`` in bytes (no job is
@@ -64,6 +82,182 @@ def _plan_size_bytes(df: DataFrame) -> "int | None":
         return int(str(size))
     except Exception:  # noqa: BLE001 — estimate only; caller defaults to scale path
         return None
+
+
+def _check_clash(fn: str, df: DataFrame, outputs: "dict[str, str]") -> None:
+    """Fail at plan time when an output (``outputs``: parameter name ->
+    column name) or internal column already exists on ``df`` — an
+    AMBIGUOUS_REFERENCE would surface only at action time otherwise."""
+    clash = ({*outputs.values()} & set(df.columns)) | {
+        c for c in df.columns if c.startswith(SCAN_PREFIX)
+    }
+    if clash:
+        raise ValueError(
+            f"{fn}: output/internal column names {sorted(clash)} "
+            "already exist on the input frame; pass "
+            f"{'/'.join(f'{p}=' for p in outputs)} overrides"
+        )
+
+
+def _range_scan(
+    fn: str,
+    df: DataFrame,
+    key_cols: "list[str]",
+    order_cols: "list[Column | str]",
+    parts: int,
+    outputs: "dict[str, str]",
+    monoid: tuple,
+) -> DataFrame:
+    """The range scan; returns ``[*key_cols, *other columns, *outputs]``.
+    ``monoid`` is ``(step, local_type, fold, part, finish)``:
+    ``step(batch, codes, keys, carry)`` is a batch's local column
+    (``keys[code]`` a group's key tuple, nulls as None; ``carry`` a key's
+    state after earlier batches); ``fold(part)`` the partial and window
+    aggregate; ``finish(local, off, tot)`` the outputs, given the fold
+    over the key's earlier ranges (null for its first) and all ranges."""
+    step, local_type, fold, part, finish = monoid
+    _check_clash(fn, df, outputs)
+    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    rp = df.repartitionByRange(parts, *cols).sortWithinPartitions(*cols)
+    payload = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+    )
+
+    def scan(batches):
+        pid = TaskContext.get().partitionId()
+        carry: dict = {}  # key tuple -> step state after earlier batches
+        kid: dict = {}  # key tuple -> its id within this range
+        for b in batches:
+            if key_cols:
+                # dropna=False keeps a null key as one group, and its carry
+                # key is None: NaN never equals itself as a dict key.
+                grouped = b.groupby(key_cols, sort=False, dropna=False)
+                codes = grouped.ngroup().to_numpy()
+                _, first = np.unique(codes, return_index=True)
+                keys = [
+                    tuple(None if pd.isna(v) else v for v in row)
+                    for row in b[key_cols].iloc[first].itertuples(index=False)
+                ]
+            else:
+                codes, keys = np.zeros(len(b), dtype="int64"), [()]
+            local = step(b, codes, keys, carry)
+            ids = [kid.setdefault(k, len(kid)) for k in keys]
+            b.insert(0, _PID, pid)
+            b.insert(1, _KID, np.array(ids, dtype="int32")[codes])
+            b.insert(2, _LOCAL, local)
+            yield b
+
+    scanned = rp.mapInPandas(
+        scan,
+        schema=f"{_PID} int, {_KID} int, {_LOCAL} {local_type}, {payload}",
+    ).localCheckpoint(eager=True)
+    # Both windows run over the (partitions x keys) partial frame — <=
+    # `parts` rows per key, never data-sized — so even the partition-less
+    # window of the no-key case is bounded and right.
+    per_key = Window.partitionBy(*key_cols)
+    earlier = per_key.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        scanned.groupBy(_PID, _KID)
+        .agg(fold(part).alias(_PART), *(F.first(k).alias(k) for k in key_cols))
+        .select(
+            _PID,
+            _KID,
+            fold(_PART).over(earlier).alias(_OFF),
+            fold(_PART).over(per_key).alias(_TOT),
+        )
+    )
+    # Join on (range, key id), never on the key values: an equi-join on
+    # the keys drops null-key rows, and a null-safe one hides from the
+    # optimizer that the offset frame is unique per join key, which
+    # inflates the size estimate every downstream plan choice reads.
+    out = scanned.join(F.broadcast(offsets), [_PID, _KID])
+    results = finish(F.col(_LOCAL), F.col(_OFF), F.col(_TOT))
+    others = [c for c in df.columns if c not in set(key_cols)]
+    return out.select(
+        *key_cols,
+        *others,
+        *(c.alias(name) for c, name in zip(results, outputs.values())),
+    )
+
+
+def _sum_monoid(value_col: "str | None" = None) -> tuple:
+    """Outputs (key total, INCLUSIVE running sum), both bigint, of
+    ``value_col`` — or of 1 per row, which is the rank, when None.  A
+    NULL value raises a ``ValueError`` naming the column."""
+
+    def step(b, codes, keys, carry):
+        if value_col is None:
+            inc = np.ones(len(b), dtype="int64")
+        elif b[value_col].isna().any():
+            raise ValueError(
+                f"value_col {value_col!r} holds a NULL; the running sum "
+                "is defined over non-null values only"
+            )
+        else:
+            inc = b[value_col].to_numpy(dtype="int64")
+        base = np.array([carry.get(k, 0) for k in keys], dtype="int64")
+        local = pd.Series(inc).groupby(codes, sort=False).cumsum().to_numpy()
+        local += base[codes]
+        np.add.at(base, codes, inc)
+        carry.update(zip(keys, base.tolist()))
+        return local
+
+    def finish(local, off, tot):
+        return [
+            tot.cast("bigint"),
+            (local + F.coalesce(off, F.lit(0))).cast("bigint"),
+        ]
+
+    inc = F.lit(1) if value_col is None else F.col(value_col)
+    return step, "bigint", F.sum, inc, finish
+
+
+def _record_monoid(value_col: str) -> tuple:
+    """Outputs the boolean STRICT-record flag of ``value_col``: strict
+    max as the monoid.  A null value is never a record and does not move
+    the running max (``max()`` skips it)."""
+
+    def step(b, codes, keys, carry):
+        # Vectorized batch body (ADVICE r10: the per-row Python loop
+        # rode billion-row fact scans): a row is a local record iff its
+        # value is non-null and strictly exceeds BOTH the max of earlier
+        # rows in this batch for its key (grouped cummax, forward-filled
+        # over null values, shifted by one) AND the carry from earlier
+        # batches of this range.  Integer values ride the nullable Int64
+        # dtype so the missing-value slots never force a float64 upcast
+        # — cents near 2^63 must compare exactly, not at float53
+        # precision.
+        integer = pd.api.types.is_integer_dtype(b[value_col])
+        dtype = "Int64" if integer else "float64"
+        vals = b[value_col].astype(dtype)
+        run = vals.groupby(codes, sort=False).cummax()
+        run = run.groupby(codes, sort=False).ffill()
+        prior = run.groupby(codes, sort=False).shift(1)
+        seed = pd.Series(
+            pd.array([carry.get(k) for k in keys], dtype=dtype).take(codes),
+            index=b.index,
+        )
+        loc = vals.notna() & (prior.isna() | (vals > prior)) & (
+            seed.isna() | (vals > seed)
+        )
+        # cross-batch carry: fold this batch's per-key max into it.
+        # NaN never enters the carry (ADVICE r11): an all-NaN key batch
+        # would store NaN, making seed.isna() true for later batches and
+        # flagging non-records; skipping it keeps the fold's "no prior
+        # finite value" semantics identical to the window form, where
+        # max() ignores NULL/NaN.
+        for code, m in vals.groupby(codes, sort=False).max().items():
+            prev = carry.get(keys[code])
+            if pd.notna(m) and (prev is None or m > prev):
+                carry[keys[code]] = m
+        return loc.to_numpy(dtype=bool, na_value=False)
+
+    def finish(local, off, tot):
+        # a row beaten locally is beaten globally (its local predecessor
+        # is earlier in the total order), so only local records can win
+        return [local & (off.isNull() | (F.col(value_col) > off))]
+
+    return step, "boolean", F.max, F.col(value_col), finish
 
 
 def global_exact_rank(
@@ -87,60 +281,9 @@ def global_exact_rank(
     phase boundary (counts and the offset join both reuse it), and the
     checkpoint pins rank determinism for downstream self-joins.
     """
-    clash = {rank_col, total_col, "_ger_pid", "_ger_local", "_ger_off"} & set(
-        df.columns
-    )
-    if clash:
-        raise ValueError(
-            f"global_exact_rank: output/internal column names {sorted(clash)} "
-            "already exist on the input frame; pass rank_col=/total_col= "
-            "overrides (an AMBIGUOUS_REFERENCE would surface only at "
-            "action time otherwise)"
-        )
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    rp = df.repartitionByRange(parts, *cols).sortWithinPartitions(*cols)
-    payload = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    names = [f.name for f in df.schema.fields]
-
-    def local_rank(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for b in batches:
-            k = len(b)
-            out = b[names].copy()
-            out.insert(0, "_ger_pid", pid)
-            out.insert(1, "_ger_local", range(seen + 1, seen + k + 1))
-            yield out
-            seen += k
-
-    ranked = rp.mapInPandas(
-        local_rank, schema=f"_ger_pid int, _ger_local bigint, {payload}"
-    ).localCheckpoint(eager=True)
-    counts = ranked.groupBy("_ger_pid").agg(F.count("*").alias("_ger_c"))
-    # Both windows below run over the PARTITION-COUNT frame (<= `parts`
-    # rows), never the data — the single-task shape is bounded and right.
-    woff = Window.orderBy("_ger_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.withColumn(
-        "_ger_off", F.coalesce(F.sum("_ger_c").over(woff), F.lit(0))
-    ).withColumn(
-        total_col, F.sum("_ger_c").over(Window.partitionBy()).cast("bigint")
-    )
-    out = ranked.join(
-        F.broadcast(offsets.select("_ger_pid", "_ger_off", total_col)),
-        "_ger_pid",
-    )
-    return (
-        out.withColumn(
-            rank_col,
-            (F.col("_ger_local") + F.col("_ger_off")).cast("bigint"),
-        )
-        .drop("_ger_pid", "_ger_local", "_ger_off")
+    return _range_scan(
+        "global_exact_rank", df, [], order_cols, parts,
+        {"total_col": total_col, "rank_col": rank_col}, _sum_monoid(),
     )
 
 
@@ -161,63 +304,17 @@ def global_prefix_sum(
     ``sum(v) OVER (ORDER BY ...)`` single-tasks its whole input frame,
     which is wrong whenever that frame scales (cumulative revenue over a
     PART dimension that grows with SF — the `abc_inventory_classification`
-    shape); this runs the identical three-phase plan — range shuffle,
-    per-partition local cumulative sums (Arrow-batched, no per-row
-    Python), a partitions-sized offset window broadcast back.
+    shape); this runs the identical range scan with the value as each
+    row's increment.
 
+    ``value_col`` must be a non-null integer column: a NULL fails the
+    call with the scan's ``ValueError`` naming it (which Spark surfaces
+    as a ``PythonException``).
     ``order_cols`` must be a TOTAL order (unique tie-break), for the
     same rank-determinism reason as ``global_exact_rank``."""
-    clash = {cum_col, total_col, "_gps_pid", "_gps_local", "_gps_off"} & set(
-        df.columns
-    )
-    if clash:
-        raise ValueError(
-            f"global_prefix_sum: output/internal column names {sorted(clash)} "
-            "already exist on the input frame; pass cum_col=/total_col= "
-            "overrides"
-        )
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    rp = df.repartitionByRange(parts, *cols).sortWithinPartitions(*cols)
-    payload = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    names = [f.name for f in df.schema.fields]
-
-    def local_cumsum(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for b in batches:
-            out = b[names].copy()
-            cs = b[value_col].cumsum() + seen
-            out.insert(0, "_gps_pid", pid)
-            out.insert(1, "_gps_local", cs.astype("int64"))
-            yield out
-            seen = int(cs.iloc[-1]) if len(cs) else seen
-
-    cumd = rp.mapInPandas(
-        local_cumsum, schema=f"_gps_pid int, _gps_local bigint, {payload}"
-    ).localCheckpoint(eager=True)
-    totals = cumd.groupBy("_gps_pid").agg(
-        F.sum(value_col).cast("bigint").alias("_gps_c")
-    )
-    # Offset windows run over the PARTITION-COUNT frame (<= `parts` rows).
-    woff = Window.orderBy("_gps_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "_gps_off", F.coalesce(F.sum("_gps_c").over(woff), F.lit(0))
-    ).withColumn(
-        total_col, F.sum("_gps_c").over(Window.partitionBy()).cast("bigint")
-    )
-    out = cumd.join(
-        F.broadcast(offsets.select("_gps_pid", "_gps_off", total_col)),
-        "_gps_pid",
-    )
-    return (
-        out.withColumn(
-            cum_col, (F.col("_gps_local") + F.col("_gps_off")).cast("bigint")
-        )
-        .drop("_gps_pid", "_gps_local", "_gps_off")
+    return _range_scan(
+        "global_prefix_sum", df, [], order_cols, parts,
+        {"total_col": total_col, "cum_col": cum_col}, _sum_monoid(value_col),
     )
 
 
@@ -240,11 +337,8 @@ def keyed_exact_rank(
     BY key ORDER BY ...)`` single-tasks each KEY's whole frame, which is
     wrong whenever the key domain is tiny while per-key frames scale
     (the weekly-leaderboard shape: 52 weeks x millions of users = 52
-    tasks each sorting millions).  This runs the same three-phase plan —
-    range shuffle over (key, order), per-partition local ranks per key
-    (Arrow-batched ``cumcount``, no per-row Python), then per-(range,
-    key) counts fold through a tiny prefix window (frame <= ``parts``
-    rows PER KEY, metadata-sized) into incoming offsets, broadcast back.
+    tasks each sorting millions).  This is the range scan over (key,
+    order).  A null key is one group on both sides of the size gate.
 
     ``order_cols`` must start with the key columns and be a TOTAL order
     within each key (unique tie-break), for the same rank-determinism
@@ -261,21 +355,13 @@ def keyed_exact_rank(
     two-phase fixed costs (Arrow boundary, eager checkpoint, offset
     join).  Pass ``small_bytes=-1`` to force the two-phase path (the
     parity query/tests do, to keep exercising it at fixture scale)."""
-    clash = {rank_col, total_col, "_ker_pid", "_ker_local", "_ker_off"} & set(
-        df.columns
-    )
-    if clash:
-        raise ValueError(
-            f"keyed_exact_rank: output/internal column names {sorted(clash)} "
-            "already exist on the input frame; pass rank_col=/total_col= "
-            "overrides"
-        )
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    outputs = {"total_col": total_col, "rank_col": rank_col}
+    _check_clash("keyed_exact_rank", df, outputs)
     # Size gate (optimization r13): when Catalyst estimates the WHOLE
     # input under KEYED_RANK_SMALL_BYTES, the per-key frames cannot be
     # large enough to justify the two-phase machinery — use the native
     # window (same rank/total values by definition; same column order as
-    # the two-phase output below).  An unavailable estimate takes the
+    # the range scan's output).  An unavailable estimate takes the
     # scale path: wrong-direction failure is a slow small job, never a
     # single-task sort of a 100 TB key.
     gate = KEYED_RANK_SMALL_BYTES if small_bytes is None else small_bytes
@@ -286,6 +372,7 @@ def keyed_exact_rank(
     # which would otherwise pin the scale path at every SF.
     est = _plan_size_bytes(df if size_probe is None else size_probe)
     if est is not None and est <= gate:
+        cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
         others = [c for c in df.columns if c not in set(key_cols)]
         return (
             df.withColumn(
@@ -302,63 +389,9 @@ def keyed_exact_rank(
             )
             .select(*key_cols, *others, total_col, rank_col)
         )
-    rp = df.repartitionByRange(parts, *cols).sortWithinPartitions(*cols)
-    payload = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    names = [f.name for f in df.schema.fields]
-
-    def local_rank(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        seen: dict = {}  # key -> rows already ranked in this partition
-        for b in batches:
-            out = b[names].copy()
-            if len(key_cols) == 1:
-                kser = b[key_cols[0]]
-            else:
-                kser = pd.Series(
-                    list(zip(*(b[k] for k in key_cols))), index=b.index
-                )
-            local = kser.groupby(kser, sort=False).cumcount() + 1
-            carry = kser.map(seen).fillna(0).astype("int64")
-            out.insert(0, "_ker_pid", pid)
-            out.insert(1, "_ker_local", (local + carry).astype("int64"))
-            for k, c in kser.value_counts(sort=False).items():
-                seen[k] = seen.get(k, 0) + int(c)
-            yield out
-
-    ranked = rp.mapInPandas(
-        local_rank, schema=f"_ker_pid int, _ker_local bigint, {payload}"
-    ).localCheckpoint(eager=True)
-    counts = ranked.groupBy("_ker_pid", *key_cols).agg(
-        F.count("*").alias("_ker_c")
-    )
-    # Offset windows run over the (partitions x keys) frame — <= `parts`
-    # rows per key, never data-sized.
-    woff = (
-        Window.partitionBy(*key_cols)
-        .orderBy("_ker_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_ker_off", F.coalesce(F.sum("_ker_c").over(woff), F.lit(0))
-    ).withColumn(
-        total_col,
-        F.sum("_ker_c").over(Window.partitionBy(*key_cols)).cast("bigint"),
-    )
-    out = ranked.join(
-        F.broadcast(offsets.select("_ker_pid", *key_cols, "_ker_off", total_col)),
-        ["_ker_pid", *key_cols],
-    )
-    return (
-        out.withColumn(
-            rank_col,
-            (F.col("_ker_local") + F.col("_ker_off")).cast("bigint"),
-        )
-        .drop("_ker_pid", "_ker_local", "_ker_off")
+    return _range_scan(
+        "keyed_exact_rank", df, key_cols, order_cols, parts, outputs,
+        _sum_monoid(),
     )
 
 
@@ -378,101 +411,18 @@ def keyed_record_scan(
     The naive form is ``v > max(v) OVER (PARTITION BY key ORDER BY ...
     ROWS ... 1 PRECEDING)``: one task per key sorts that key's entire
     timeline, which at 100 TB with few keys is the round-8 weak class in
-    per-key clothing.  This is the two-phase decomposition instead
-    (the ``global_prefix_sum`` idiom, with max as the monoid):
-
-    1. range-shuffle on (key, order) and scan each range ONCE in Arrow
-       batches, keeping per-(range, key) state: the local running max,
-       each row's local-record flag, and the range's final max;
-    2. the per-(range, key) maxima (a partitions x keys frame, never
-       data-sized) fold through a tiny prefix-max window into incoming
-       OFFSET maxima, broadcast back;
-    3. a global record = a LOCAL record whose value strictly exceeds its
-       range's incoming offset (a row beaten locally is beaten globally
-       — its local predecessor is earlier in the total order).
+    per-key clothing.  This is the range scan with strict max as the
+    monoid instead: each range flags LOCAL records against its own
+    running max per key, and a global record is a local record whose
+    value strictly exceeds the max of the key's earlier ranges.  A null
+    value is never a record; a null key is one group.
 
     ``order_cols`` must start with the key columns and be a TOTAL order.
     Returns ``df`` plus the boolean ``record_col``."""
-    clash = {record_col, "_krs_pid", "_krs_loc", "_krs_off"} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"keyed_record_scan: output/internal column names {sorted(clash)} "
-            "already exist on the input frame; pass record_col= override"
-        )
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    rp = df.repartitionByRange(parts, *cols).sortWithinPartitions(*cols)
-    payload = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+    return _range_scan(
+        "keyed_record_scan", df, key_cols, order_cols, parts,
+        {"record_col": record_col}, _record_monoid(value_col),
     )
-    names = [f.name for f in df.schema.fields]
-
-    def local_scan(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        run: dict = {}  # key tuple/scalar -> running max across batches
-        for b in batches:
-            out = b[names].copy()
-            # Vectorized batch body (ADVICE r10: the per-row Python loop
-            # rode billion-row fact scans): a row is a local record iff
-            # its value strictly exceeds BOTH the max of earlier rows in
-            # this batch for its key (grouped cummax shifted by one) AND
-            # the carry from earlier batches of this partition (dict
-            # map).  Integer values ride the nullable Int64 dtype so the
-            # missing-value slots never force a float64 upcast — cents
-            # near 2^63 must compare exactly, not at float53 precision.
-            if len(key_cols) == 1:
-                kser = b[key_cols[0]]
-            else:
-                kser = pd.Series(
-                    list(zip(*(b[k] for k in key_cols))), index=b.index
-                )
-            integer = pd.api.types.is_integer_dtype(b[value_col])
-            vals = b[value_col].astype("Int64" if integer else "float64")
-            cmax = vals.groupby(kser, sort=False).cummax()
-            prior = cmax.groupby(kser, sort=False).shift(1)
-            carry = kser.map(run).astype("Int64" if integer else "float64")
-            loc = (prior.isna() | (vals > prior)) & (
-                carry.isna() | (vals > carry)
-            )
-            out.insert(0, "_krs_pid", pid)
-            out.insert(1, "_krs_loc", loc.astype(bool).to_numpy())
-            # cross-batch carry: fold this batch's per-key max into run.
-            # NaN never enters the carry (ADVICE r11): an all-NaN key
-            # batch would store NaN, making carry.isna() true for later
-            # batches and flagging non-records; dropna keeps the fold's
-            # "no prior finite value" semantics identical to the window
-            # form, where max() ignores NULL/NaN.
-            finite = vals.dropna()
-            for k, m in finite.groupby(kser[finite.index], sort=False).max().items():
-                prev = run.get(k)
-                if prev is None or pd.isna(prev) or m > prev:
-                    run[k] = m
-            yield out
-
-    scanned = rp.mapInPandas(
-        local_scan, schema=f"_krs_pid int, _krs_loc boolean, {payload}"
-    ).localCheckpoint(eager=True)
-    # per-(range, key) maxima -> incoming offset = prefix max of EARLIER
-    # ranges for the same key (partitions x keys rows — metadata-sized)
-    gmax = scanned.groupBy("_krs_pid", *key_cols).agg(
-        F.max(value_col).alias("_krs_m")
-    )
-    woff = (
-        Window.partitionBy(*key_cols)
-        .orderBy("_krs_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = gmax.withColumn("_krs_off", F.max("_krs_m").over(woff)).select(
-        "_krs_pid", *key_cols, "_krs_off"
-    )
-    out = scanned.join(F.broadcast(offsets), ["_krs_pid", *key_cols])
-    return out.withColumn(
-        record_col,
-        F.col("_krs_loc")
-        & (F.col("_krs_off").isNull() | (F.col(value_col) > F.col("_krs_off"))),
-    ).drop("_krs_pid", "_krs_loc", "_krs_off")
 
 
 def ntile_from_rank(

@@ -6,6 +6,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from ..operators.ranks import SCAN_PREFIX
+
 
 def executed_plan(df: DataFrame) -> str:
     spark = df.sparkSession
@@ -244,7 +246,7 @@ def partitioned_subgrain_windows(
                 residual = [g for g in grain if g not in set(part_keys)]
                 # The two-phase rank operators' keyed offset windows are
                 # partitioned by the CONSUMER's key with a residual of
-                # the internal partition-id column — a frame bounded by
+                # the internal range-id/key-id columns — a frame bounded by
                 # the operator's `parts` constant, excluded mechanically
                 # like the partition-less twin in grouped_global_windows.
                 if (
@@ -260,15 +262,13 @@ def partitioned_subgrain_windows(
 def _is_rank_operator_internal(grouping: list[str]) -> bool:
     """The two-phase rank/prefix-sum/record operators
     (`operators/ranks.py`) contain, BY DESIGN, offset windows over an
-    Aggregate grouped by their internal partition-id column — a frame
+    Aggregate grouped by their internal range-id and key-id columns
+    (named with ``ranks.SCAN_PREFIX``) — a frame
     bounded by the operator's ``parts`` constant (<=16 rows per key),
     never by data.  Those sites are provably bounded, so the audits
     exclude them mechanically instead of asking for a per-consumer
     justification."""
-    return all(
-        g.strip("`").startswith(("_ger_pid", "_gps_pid", "_ker_pid", "_krs_pid"))
-        for g in grouping
-    )
+    return all(g.strip("`").startswith(SCAN_PREFIX) for g in grouping)
 
 
 def whole_stage_codegen_spans(df: DataFrame) -> int:

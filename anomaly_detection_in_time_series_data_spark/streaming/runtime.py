@@ -21,9 +21,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
-from ..tables import load_table
+from ..tables import load_table, normalize_events_ts
 from .sinks import read_store
 
 # Target source bytes per streaming shuffle/state partition (AQE's own
@@ -32,8 +31,9 @@ STREAM_PART_BYTES = 64 * 1024 * 1024
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str):
-    """Structured-Streaming twin of ``load_table(..., 'events')``: same
-    nanos->micros conversion, file-source over the fixture parquet."""
+    """Structured-Streaming twin of ``load_table(..., 'events')``: a
+    file-source over the fixture parquet, with ``ts`` normalized by the
+    same ``normalize_events_ts`` as the batch frame."""
     batch = load_table(spark, sf_dir, "events")  # sets tz + nanosAsLong conf
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
@@ -41,14 +41,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str):
         .option("pathGlobFilter", "events.parquet")  # file source needs a dir
         .parquet(sf_dir)
     )
-    # Mirror load_table's physical-type normalization: the fixtures have
-    # regenerated events.ts as both TIMESTAMP(NANOS) (read as long) and
-    # TIMESTAMP(MICROS) (read as NTZ) across rounds.
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream, batch
+    return normalize_events_ts(stream), batch
 
 
 def stage_deliveries(df, src: str, shard_col: str, shard_values, cols):

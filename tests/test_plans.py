@@ -6,6 +6,8 @@ These pin the plans so a refactor that silently regresses them fails CI.
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -937,12 +939,12 @@ def test_global_exact_rank_rejects_column_clash(spark):
     assert out.columns == ["id", "n", "n_total", "rnk"]
 
 
-def test_global_prefix_sum_matches_window(spark):
+@pytest.mark.parametrize("parts", [1, 7, 64])
+def test_global_prefix_sum_matches_window(spark, parts):
     """global_prefix_sum must equal the single-window cumulative sum
     bit-for-bit (bigint domain), including across range-partition
-    boundaries and under a descending order with tie-break."""
-    import pytest
-
+    boundaries (empty ranges at 64 parts) and under a descending order
+    with tie-break; a NULL value is rejected with the column named."""
     from anomaly_detection_in_time_series_data_spark.operators import ranks
 
     df = spark.range(500).selectExpr(
@@ -951,7 +953,7 @@ def test_global_prefix_sum_matches_window(spark):
     got = {
         r.id: (r.cum, r.total)
         for r in ranks.global_prefix_sum(
-            df, [F.col("v").desc(), "id"], "v", parts=7
+            df, [F.col("v").desc(), "id"], "v", parts=parts
         ).collect()
     }
     w = Window.orderBy(F.col("v").desc(), "id").rowsBetween(
@@ -972,13 +974,16 @@ def test_global_prefix_sum_matches_window(spark):
     assert got == want
     with pytest.raises(ValueError, match="already exist"):
         ranks.global_prefix_sum(df.withColumnRenamed("v", "cum"), ["id"], "id")
+    nulls = df.union(spark.sql("SELECT 500L AS id, CAST(NULL AS BIGINT) AS v"))
+    with pytest.raises(PythonException, match="value_col 'v' holds a NULL"):
+        ranks.global_prefix_sum(nulls, ["id"], "v", parts=parts)
 
 
 def test_grouped_window_audit_surfaces_blind_spot(spark):
     """grouped_global_windows (round-10 audit mode) must surface a
     partition-less window bounded by a GROUPED aggregate — the hard
     gate's documented blind spot — while (a) the hard gate stays silent,
-    (b) rank-operator internals (_ger_pid/_gps_pid) are excluded, and
+    (b) rank-operator internals (ranks.SCAN_PREFIX columns) are excluded, and
     (c) limit-bounded and global-agg-bounded windows are not reported."""
     from anomaly_detection_in_time_series_data_spark.operators import ranks
 
@@ -1026,23 +1031,32 @@ def test_round10_rank_rewrites_have_no_grouped_global_windows(spark, sf_dir):
             ), (name, sites)
 
 
-def test_keyed_record_scan_matches_window(spark):
+@pytest.mark.parametrize("parts", [1, 7, 64])
+def test_keyed_record_scan_matches_window(spark, parts):
     """keyed_record_scan must mark exactly the rows the naive per-key
     running-max window marks (strict records, first row included),
-    across range-partition boundaries and interleaved keys."""
-    import pytest
-
+    across range-partition boundaries (empty ranges at 64 parts) and
+    interleaved keys.  A NULL key is one group; a NULL value is never a
+    record and does not move the running max (2, NULL, 1: 1 is not a
+    record)."""
     from anomaly_detection_in_time_series_data_spark.operators import ranks
 
     df = spark.range(600).selectExpr(
         "id",
         "CAST(id % 3 AS STRING) AS k",
         "CAST((id * 131) % 997 AS BIGINT) AS v",
+    ).union(
+        spark.createDataFrame(
+            [(600, "a", 2), (601, "a", None), (602, "a", 1), (603, "a", 3),
+             (604, "a", 0), (605, None, 5), (606, None, None), (607, None, 4),
+             (608, None, 6), (609, "0", None)],
+            "id bigint, k string, v bigint",
+        )
     )
     got = {
         r.id
         for r in ranks.keyed_record_scan(
-            df, ["k"], ["k", "id"], "v", parts=7
+            df, ["k"], ["k", "id"], "v", parts=parts
         ).collect()
         if r.is_record
     }
@@ -1054,7 +1068,7 @@ def test_keyed_record_scan_matches_window(spark):
     want = {
         r.id
         for r in df.withColumn("pm", F.max("v").over(w)).collect()
-        if r.pm is None or r.v > r.pm
+        if r.v is not None and (r.pm is None or r.v > r.pm)
     }
     assert got == want and len(got) > 3
     with pytest.raises(ValueError, match="already exist"):
@@ -1140,16 +1154,19 @@ def test_keyed_record_scan_nan_never_enters_carry(spark):
     assert marked[1] is True and marked[2] is False and marked[3] is True
 
 
-def test_keyed_exact_rank_matches_window(spark):
+@pytest.mark.parametrize("parts", [1, 7, 64])
+def test_keyed_exact_rank_matches_window(spark, parts):
     """keyed_exact_rank (round 12, from the partitioned-subgrain-window
     audit) must reproduce row_number()/count() OVER (PARTITION BY key
-    ORDER BY ...) exactly — across range-partition boundaries,
-    interleaved keys, multi-column keys, and desc ordering."""
+    ORDER BY ...) exactly — across range-partition boundaries (empty
+    ranges at 64 parts), interleaved keys, multi-column keys, and desc
+    ordering — on both sides of the size gate, with NULL keys ranked as
+    one group like the window does."""
     from anomaly_detection_in_time_series_data_spark.operators import ranks
 
-    df = spark.range(600).selectExpr(
+    df = spark.range(640).selectExpr(
         "id",
-        "CAST(id % 5 AS STRING) AS k",
+        "IF(id >= 600, NULL, CAST(id % 5 AS STRING)) AS k",
         "CAST((id * 131) % 997 AS BIGINT) AS v",
     )
     # small_bytes=-1 forces the TWO-PHASE path (the r13 size gate would
@@ -1158,7 +1175,7 @@ def test_keyed_exact_rank_matches_window(spark):
     got = {
         r.id: (r.rnk, r.n)
         for r in ranks.keyed_exact_rank(
-            df, ["k"], ["k", F.col("v").desc(), "id"], parts=7,
+            df, ["k"], ["k", F.col("v").desc(), "id"], parts=parts,
             small_bytes=-1,
         ).collect()
     }
@@ -1174,23 +1191,23 @@ def test_keyed_exact_rank_matches_window(spark):
     # the r13 SIZE-GATED small path must produce the identical mapping
     # (same column order/types) without the two-phase machinery
     small = ranks.keyed_exact_rank(
-        df, ["k"], ["k", F.col("v").desc(), "id"], parts=7
+        df, ["k"], ["k", F.col("v").desc(), "id"], parts=parts
     )
     assert "MapInPandas" not in plans.executed_plan(small)
     got_small = {r.id: (r.rnk, r.n) for r in small.collect()}
     assert got_small == want
 
     # multi-key
-    df2 = spark.range(300).selectExpr(
+    df2 = spark.range(330).selectExpr(
         "id",
-        "CAST(id % 2 AS STRING) AS k1",
-        "CAST(id % 3 AS BIGINT) AS k2",
+        "IF(id >= 300, NULL, CAST(id % 2 AS STRING)) AS k1",
+        "IF(id >= 315, NULL, CAST(id % 3 AS BIGINT)) AS k2",
         "CAST((id * 37) % 211 AS BIGINT) AS v",
     )
     got2 = {
         r.id: (r.rnk, r.n)
         for r in ranks.keyed_exact_rank(
-            df2, ["k1", "k2"], ["k1", "k2", "v", "id"], parts=5,
+            df2, ["k1", "k2"], ["k1", "k2", "v", "id"], parts=parts,
             small_bytes=-1,
         ).collect()
     }
@@ -1202,8 +1219,6 @@ def test_keyed_exact_rank_matches_window(spark):
         .collect()
     }
     assert got2 == want2
-    import pytest
-
     with pytest.raises(ValueError, match="already exist"):
         ranks.keyed_exact_rank(
             df.withColumnRenamed("v", "rnk"), ["k"], ["k", "id"]

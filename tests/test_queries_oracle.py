@@ -9,7 +9,9 @@ sf0.01) and `tools/check_oracle.py` / `tools/preflight.py` (all oracles,
 run every round and before every commit).  By default this file now
 mirrors the oracle gate: the FIRST-50 registered names (the current
 rotation window), plus the window the gate checked last (the newest
-CORRECTNESS_r*.json), so a rotation never drops a parity test the
+CORRECTNESS_r*.json), plus the window as it would be without the
+``_IMPL_CHANGED`` promotions (the names new entries push out), so neither
+a rotation nor a new ``_IMPL_CHANGED`` entry drops a parity test the
 previous commit ran.  Set ``ADTS_FULL_ORACLE=1`` for the full sweep
 (preflight covers the same ground without pytest overhead).
 """
@@ -20,6 +22,7 @@ import json
 import os
 import re
 from pathlib import Path
+from unittest import mock
 
 import duckdb
 import pandas as pd
@@ -33,16 +36,22 @@ from conftest import SF_DIR
 if os.environ.get("ADTS_FULL_ORACLE"):
     _PARITY_NAMES = sorted(q.ORACLE)
 else:
+    _root = Path(__file__).resolve().parents[1]
     _rounds = {
         int(m.group(1)): p
-        for p in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json")
+        for p in _root.glob("CORRECTNESS_r*.json")
         if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
     }
     _last = json.loads(_rounds[max(_rounds)].read_text()) if _rounds else {}
-    _window = list(q.QUERIES)[:50]
-    _PARITY_NAMES = [n for n in _window if n in q.ORACLE] + [
-        n for n in _last if n in q.ORACLE and n not in _window
-    ]
+    with mock.patch.object(q, "_IMPL_CHANGED", {}):
+        _unpromoted = q.correctness_window(_root)
+    _PARITY_NAMES = list(
+        dict.fromkeys(
+            n
+            for n in [*list(q.QUERIES)[:50], *_unpromoted, *_last]
+            if n in q.ORACLE
+        )
+    )
 
 
 @pytest.fixture(scope="module")
