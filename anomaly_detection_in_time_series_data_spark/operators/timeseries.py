@@ -8,6 +8,13 @@ autocorrelation, OHLC downsampling, time-weighted averages, and
 gaps-and-islands segmentation — each expressed as declarative DataFrame
 plans (window frames + grouped aggregates, no Python in the hot path).
 
+The matrix-profile family (``weekly_discords``, ``weekly_motifs``,
+``global_discords_gemm``) is the exception: its O(n^2) pair work runs as
+numpy inside applyInPandas. All three take their length-``m``
+subsequences from ``_subsequences``; the two weekly operators share the
+tiled distance^2 kernel ``_d2_tiles`` and the per-(key, week) runner
+``_per_week``, and supply only their trivial-match mask and reduction.
+
 Float-determinism discipline (matches the repo-wide oracle contract):
 sums that cross a shuffle or a window frame go through DECIMAL (exact,
 order-independent); per-group location statistics use the exact
@@ -25,7 +32,9 @@ single global series would instead use the chunked formulations in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -415,6 +424,140 @@ def _interval_to_us(gap: str) -> int:
     return int(n) * scale
 
 
+def _subsequences(
+    df: DataFrame,
+    *,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    tiebreak_col: str,
+    m: int,
+) -> DataFrame:
+    """Every length-``m`` subsequence of each key's value series in
+    (``ts_col``, ``tiebreak_col``) order: ``key_col, pos, start_ts, arr``,
+    with ``pos`` the 1-based row_number of its first row and ``arr`` its
+    ``m`` values. Both come from one window (one shuffle to co-locate a
+    key's timeline, one sort); the frame builds the arrays in frame order.
+    """
+    kw = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
+    return (
+        df.select(key_col, ts_col, value_col, tiebreak_col)
+        .withColumn("pos", F.row_number().over(kw))
+        .withColumn(
+            "arr",
+            F.collect_list(value_col).over(kw.rowsBetween(0, m - 1)),
+        )
+        .filter(F.size("arr") == m)
+        .select(key_col, "pos", F.col(ts_col).alias("start_ts"), "arr")
+    )
+
+
+def _d2_tiles(vals, pos, exclusion: int, directed: bool):
+    """Yield ``(li, hi, lj, hj, tile)`` over the distance^2 matrix of the
+    rows of ``vals`` (n x m float64, rows in ascending ``pos``):
+    ``tile[i, j]`` is the distance^2 between rows ``li + i`` and
+    ``lj + j``, set to +inf for a trivial match, ``|pos_j - pos_i| <
+    exclusion`` (``directed``: ``pos_j - pos_i < exclusion``, so only
+    pairs with pos_j >= pos_i + exclusion remain, and tiles without such a
+    pair are skipped). ``tile`` is a reused buffer: reduce it before
+    asking for the next one.
+
+    Each pair's distance accumulates over the m lag positions in the SAME
+    left-to-right order as the SQL/Column expression chain
+    ``((t1^2 + t2^2) + t3^2) ...`` (numpy float64 IEEE ops, sequential
+    loop over m, vectorized over pairs), so every value is bit-identical
+    to the ``impl="join"`` twins.
+    """
+    n, m = vals.shape
+    # cache-tiled in-place accumulation: full-width chunk rows are
+    # DRAM-bandwidth-bound (every one of the m passes re-streams a
+    # rows x n buffer; measured 2.4s/group at n=4700), while a
+    # 128x1024 tile keeps the working set in cache across the m
+    # passes (0.48s/group). Neither tiling nor in-place ops change
+    # the per-pair k=0..m-1 accumulation order, so bit-parity with
+    # the SQL chain is untouched.
+    ti, tj = 128, 1024
+    cols = [np.ascontiguousarray(vals[:, k]) for k in range(m)]
+    t_buf = np.empty((ti, tj))
+    acc = np.empty((ti, tj))
+    for li in range(0, n, ti):
+        hi = min(li + ti, n)
+        for lj in range(0, n, tj):
+            hj = min(lj + tj, n)
+            # directed: skip tiles whose widest pair is still inside the zone
+            if directed and pos[hj - 1] - pos[li] < exclusion:
+                continue
+            tb, ac = t_buf[: hi - li, : hj - lj], acc[: hi - li, : hj - lj]
+            for k in range(m):  # fixed-order accumulation == SQL chain
+                np.subtract(cols[k][li:hi, None], cols[k][None, lj:hj], out=tb)
+                np.multiply(tb, tb, out=tb)
+                if k == 0:
+                    ac[:] = tb
+                else:
+                    ac += tb
+            gap = pos[None, lj:hj] - pos[li:hi, None]
+            ac[(gap if directed else np.abs(gap)) < exclusion] = np.inf
+            yield li, hi, lj, hj, ac
+
+
+def _per_week(
+    sub: DataFrame, key_col: str, fields: "dict[str, T.DataType]", best
+) -> DataFrame:
+    """Run ``best(pdf, vals, pos)`` once per (key, week) group of ``sub``
+    (``key_col, week, pos, arr`` and any other columns): ``pdf`` is the
+    group sorted by ``pos``, ``vals`` its ``arr`` as an n x m float64
+    matrix and ``pos`` its positions. ``best`` returns the values of
+    ``fields`` or None; the output is ``key_col, week_us, *fields``, one
+    row per group it did not return None for, with ``key_col`` of the
+    input's type. Shuffle volume: one row per subsequence in, ONE ROW PER
+    GROUP out.
+    """
+    schema = T.StructType(
+        [
+            T.StructField(key_col, sub.schema[key_col].dataType),
+            T.StructField("week_us", T.LongType()),
+        ]
+        + [T.StructField(name, dtype) for name, dtype in fields.items()]
+    )
+
+    def one_group(pdf):
+        pdf = pdf.sort_values("pos").reset_index(drop=True)
+        vals = np.asarray([np.asarray(a, dtype=np.float64) for a in pdf["arr"]])
+        row = best(pdf, vals, pdf["pos"].to_numpy())
+        if row is None:
+            return pd.DataFrame(columns=schema.fieldNames())
+        week_us = int(pdf["week"].iloc[0].value // 1000)
+        return pd.DataFrame(
+            [(pdf[key_col].iloc[0], week_us, *row)], columns=schema.fieldNames()
+        )
+
+    # The group data is tiny (~10 MB at sf0.1) but the per-group KERNEL is
+    # CPU-heavy, so AQE's size-based shuffle coalescing would fold every
+    # group into one task and serialize the kernels (measured 8.2s -> 2.3s
+    # restoring #groups-way parallelism). An explicit numbered repartition
+    # on the group keys is AQE-stable and satisfies applyInPandas's
+    # required distribution, so no second exchange is added.
+    parts = sub.sparkSession.sparkContext.defaultParallelism
+    return (
+        sub.repartition(parts, key_col, "week")
+        .groupBy(key_col, "week")
+        .applyInPandas(one_group, schema=schema)
+    )
+
+
+def _pair_d2(sub: DataFrame, key_col: str, m: int) -> "tuple[DataFrame, Column]":
+    """The self-join of ``sub`` on (key, week), its sides aliased ``a`` and
+    ``b``, and the pair's distance^2 as an EXPLICIT left-associated
+    ``(a1-b1)^2 + ... + (am-bm)^2`` chain — no reduction whose order the
+    engine may choose — so the values are bit-identical to the SQL
+    oracle's textually parallel expression."""
+    d2 = None
+    for i in range(m):
+        t = F.col("a.arr").getItem(i) - F.col("b.arr").getItem(i)
+        d2 = t * t if d2 is None else d2 + t * t
+    return sub.alias("a").join(sub.alias("b"), on=[key_col, "week"]), d2
+
+
 def weekly_discords(
     df: DataFrame,
     *,
@@ -439,13 +582,16 @@ def weekly_discords(
     impossible shape).
 
     Execution shape: one shuffle to co-locate each key's timeline
-    (window frame builds the subsequence arrays in frame order), then a
-    self-equi-join ON (key, week) — the O(n^2) pair work is confined to
-    within-group n (#rows per key-week), and groups parallelize
-    #keys x #weeks. For global (unwindowed) discords at 100 TB, the
-    z-normalized variant maps onto the blocked GEMM in
-    `similarity.all_pairs_cosine` (z-normed subsequences are unit
-    vectors: max cosine == min distance).
+    (window frame builds the subsequence arrays in frame order), then the
+    O(n^2) pair work confined to within-group n (#rows per key-week),
+    with groups parallelizing #keys x #weeks. The default
+    (``impl="chunked"``) does the pair work as cache-tiled numpy
+    arithmetic in one applyInPandas call per group (``_d2_tiles``); the
+    self-join formulation shuffled O(n_group^2) PAIR ROWS (~200M rows at
+    sf0.1, measured 54s) and stays as ``impl="join"``, the bit-equality
+    twin. For global (unwindowed) discords at 100 TB, the z-normalized
+    variant maps onto the blocked GEMM in `similarity.all_pairs_cosine`
+    (z-normed subsequences are unit vectors: max cosine == min distance).
 
     Float determinism: the distance is an EXPLICIT left-associated
     ``(a1-b1)^2 + ... + (am-bm)^2`` chain — no reduction whose order the
@@ -457,29 +603,41 @@ def weekly_discords(
     """
     if exclusion is None:
         exclusion = m
-    kw = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
     sub = (
-        df.select(key_col, ts_col, value_col, tiebreak_col)
-        .withColumn("pos", F.row_number().over(kw))
-        .withColumn(
-            "arr",
-            F.collect_list(value_col).over(kw.rowsBetween(0, m - 1)),
+        _subsequences(
+            df, key_col=key_col, ts_col=ts_col, value_col=value_col,
+            tiebreak_col=tiebreak_col, m=m,
         )
-        .filter(F.size("arr") == m)
-        .withColumn("week", F.date_trunc("week", F.col(ts_col)))
-        .select(key_col, "week", "pos", F.col(ts_col).alias("start_ts"), "arr")
+        .withColumn("week", F.date_trunc("week", "start_ts"))
+        .select(key_col, "week", "pos", "start_ts", "arr")
     )
     if impl == "chunked":
-        return _weekly_discords_chunked(sub, key_col=key_col, m=m, exclusion=exclusion)
-    a = sub.alias("a")
-    b = sub.alias("b")
-    d2 = None
-    for i in range(m):
-        t = F.col("a.arr").getItem(i) - F.col("b.arr").getItem(i)
-        d2 = t * t if d2 is None else d2 + t * t
+
+        def discord(pdf, vals, pos):
+            profile = np.full(len(pos), np.inf)
+            for li, hi, _, _, tile in _d2_tiles(vals, pos, exclusion, directed=False):
+                # tile mins merge via exact np.minimum (order-free)
+                np.minimum(profile[li:hi], tile.min(axis=1), out=profile[li:hi])
+            ok = np.isfinite(profile)
+            if not ok.any():
+                return None
+            # argmax by (profile desc, pos asc) — exact float compare, like rn=1
+            best = max(
+                (i for i in range(len(pos)) if ok[i]),
+                key=lambda i: (profile[i], -pos[i]),
+            )
+            start_us = int(pdf["start_ts"].iloc[best].value // 1000)
+            return int(pos[best]), start_us, float(profile[best])
+
+        fields = {
+            "discord_pos": T.LongType(),
+            "start_us": T.LongType(),
+            "profile_d2": T.DoubleType(),
+        }
+        return _per_week(sub, key_col, fields, discord)
+    joined, d2 = _pair_d2(sub, key_col, m)
     pairs = (
-        a.join(b, on=[key_col, "week"])
-        .filter(F.abs(F.col("a.pos") - F.col("b.pos")) >= exclusion)
+        joined.filter(F.abs(F.col("a.pos") - F.col("b.pos")) >= exclusion)
         .groupBy(key_col, "week", F.col("a.pos").alias("pos"))
         .agg(F.min(d2).alias("profile_d2"))
     )
@@ -498,96 +656,6 @@ def weekly_discords(
             F.unix_micros("start_ts").alias("start_us"),
             "profile_d2",
         )
-    )
-
-
-def _weekly_motifs_chunked(
-    sub: DataFrame, *, key_col: str, m: int, exclusion: int
-) -> DataFrame:
-    """Chunked numpy kernel for the per-(key, week) motif (closest pair).
-
-    Same shape and bit-parity argument as ``_weekly_discords_chunked``:
-    the self-join formulation shuffles O(n_group^2) pair rows (measured
-    104s at sf0.1 in the round-5 bench before this kernel landed); here
-    each group lands in one applyInPandas call, distances accumulate over
-    the m lag positions in the identical left-to-right order as the SQL
-    chain, invalid pairs (pos_b - pos_a < exclusion) mask to +inf, and
-    only the argmin pair — tiebroken lexicographically by
-    (d2, pos_a, pos_b) with exact float compares — leaves the worker."""
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField("week_us", T.LongType()),
-            T.StructField("pos_a", T.LongType()),
-            T.StructField("pos_b", T.LongType()),
-            T.StructField("motif_d2", T.DoubleType()),
-        ]
-    )
-
-    def one_group(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(columns=[f.name for f in schema.fields])
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return empty
-        vals = np.asarray([np.asarray(a, dtype=np.float64) for a in pdf["arr"]])
-        pos = pdf["pos"].to_numpy()
-        best = None  # (d2, pos_a, pos_b)
-        ti, tj = 128, 1024
-        cols = [np.ascontiguousarray(vals[:, i]) for i in range(m)]
-        t_buf = np.empty((ti, tj))
-        acc = np.empty((ti, tj))
-        for li in range(0, n, ti):
-            hi = min(li + ti, n)
-            ci = hi - li
-            for lj in range(0, n, tj):
-                hj = min(lj + tj, n)
-                cj = hj - lj
-                # directed pairs only (pos_b - pos_a >= exclusion): skip
-                # tiles whose widest pair is still inside the zone
-                if pos[hj - 1] - pos[li] < exclusion:
-                    continue
-                tb, ac = t_buf[:ci, :cj], acc[:ci, :cj]
-                for i in range(m):  # fixed-order accumulation == SQL chain
-                    np.subtract(
-                        cols[i][li:hi, None], cols[i][None, lj:hj], out=tb
-                    )
-                    np.multiply(tb, tb, out=tb)
-                    if i == 0:
-                        ac[:] = tb
-                    else:
-                        ac += tb
-                invalid = (pos[None, lj:hj] - pos[li:hi, None]) < exclusion
-                ac[invalid] = np.inf
-                mval = ac.min()
-                if not np.isfinite(mval):
-                    continue
-                if best is None or mval <= best[0]:
-                    ii, jj = np.argwhere(ac == mval)[0]  # rows/cols pos-ascending
-                    cand = (float(mval), int(pos[li + ii]), int(pos[lj + jj]))
-                    if best is None or cand < best:
-                        best = cand
-        if best is None:
-            return empty
-        row = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                key_col: [row[key_col]],
-                "week_us": [int(row["week"].value // 1000)],
-                "pos_a": [best[1]],
-                "pos_b": [best[2]],
-                "motif_d2": [best[0]],
-            }
-        )
-
-    parts = sub.sparkSession.sparkContext.defaultParallelism
-    return (
-        sub.repartition(parts, key_col, "week")
-        .groupBy(key_col, "week")
-        .applyInPandas(one_group, schema=schema)
     )
 
 
@@ -610,42 +678,47 @@ def weekly_motifs(
     failure-signature detection. Same execution and float-determinism
     shape as the discord: one timeline shuffle, then either the chunked
     numpy kernel (default — pair work as arithmetic, one row per group
-    out) or the self-join with a lexicographic struct-MIN aggregate
-    (``impl='join'``, the unit-twin for equivalence tests)."""
+    out; the self-join took 104s at sf0.1 before it) or the self-join
+    with a lexicographic struct-MIN aggregate (``impl='join'``, the
+    unit-twin for equivalence tests)."""
     if exclusion is None:
         exclusion = m
-    kw = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
     sub = (
-        df.select(key_col, ts_col, value_col, tiebreak_col)
-        .withColumn("pos", F.row_number().over(kw))
-        .withColumn(
-            "arr",
-            F.collect_list(value_col).over(kw.rowsBetween(0, m - 1)),
+        _subsequences(
+            df, key_col=key_col, ts_col=ts_col, value_col=value_col,
+            tiebreak_col=tiebreak_col, m=m,
         )
-        .filter(F.size("arr") == m)
-        .withColumn("week", F.date_trunc("week", F.col(ts_col)))
+        .withColumn("week", F.date_trunc("week", "start_ts"))
         .select(key_col, "week", "pos", "arr")
     )
     if impl == "chunked":
-        return _weekly_motifs_chunked(
-            sub, key_col=key_col, m=m, exclusion=exclusion
-        )
-    a = sub.alias("a")
-    b = sub.alias("b")
-    d2 = None
-    for i in range(m):
-        t = F.col("a.arr").getItem(i) - F.col("b.arr").getItem(i)
-        d2 = t * t if d2 is None else d2 + t * t
-    pairs = (
-        a.join(b, on=[key_col, "week"])
-        .filter(F.col("b.pos") - F.col("a.pos") >= exclusion)
-        .select(
-            key_col,
-            "week",
-            F.col("a.pos").alias("pos_a"),
-            F.col("b.pos").alias("pos_b"),
-            d2.alias("motif_d2"),
-        )
+
+        def motif(pdf, vals, pos):
+            best = None  # (d2, pos_a, pos_b), lexicographic, exact compares
+            for li, _, lj, _, tile in _d2_tiles(vals, pos, exclusion, directed=True):
+                mval = tile.min()
+                if not np.isfinite(mval):
+                    continue
+                if best is None or mval <= best[0]:
+                    ii, jj = np.argwhere(tile == mval)[0]  # rows/cols pos-ascending
+                    cand = (float(mval), int(pos[li + ii]), int(pos[lj + jj]))
+                    if best is None or cand < best:
+                        best = cand
+            return None if best is None else (best[1], best[2], best[0])
+
+        fields = {
+            "pos_a": T.LongType(),
+            "pos_b": T.LongType(),
+            "motif_d2": T.DoubleType(),
+        }
+        return _per_week(sub, key_col, fields, motif)
+    joined, d2 = _pair_d2(sub, key_col, m)
+    pairs = joined.filter(F.col("b.pos") - F.col("a.pos") >= exclusion).select(
+        key_col,
+        "week",
+        F.col("a.pos").alias("pos_a"),
+        F.col("b.pos").alias("pos_b"),
+        d2.alias("motif_d2"),
     )
     # Lexicographic struct-min: ONE hash aggregate (map-side combined)
     # instead of a row_number window, which would SORT every within-group
@@ -692,23 +765,15 @@ def global_discords_gemm(
     """
     import math
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     if exclusion is None:
         exclusion = m
     spark = df.sparkSession
     if grid is None:
         grid = max(2, int(math.ceil(math.sqrt(spark.sparkContext.defaultParallelism))))
 
-    kw = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
-    sub = (
-        df.select(key_col, ts_col, value_col, tiebreak_col)
-        .withColumn("pos", F.row_number().over(kw))
-        .withColumn("arr", F.collect_list(value_col).over(kw.rowsBetween(0, m - 1)))
-        .filter(F.size("arr") == m)
-        .select(key_col, "pos", F.col(ts_col).alias("start_ts"), "arr")
+    sub = _subsequences(
+        df, key_col=key_col, ts_col=ts_col, value_col=value_col,
+        tiebreak_col=tiebreak_col, m=m,
     )
     # z-normalization (mean/var/divide) happens entirely inside the GEMM
     # kernel: numpy does it vectorized for ~free, while the JVM
@@ -742,7 +807,7 @@ def global_discords_gemm(
 
     out_schema = T.StructType(
         [
-            T.StructField("key", T.StringType()),
+            T.StructField("key", sub.schema[key_col].dataType),
             T.StructField("pos", T.LongType()),
             T.StructField("cell_max_cos", T.DoubleType()),
         ]
@@ -753,6 +818,8 @@ def global_discords_gemm(
          "pos": pd.Series([], dtype="int64"),
          "cell_max_cos": pd.Series([], dtype="float64")}
     )
+    EXCLUSION = exclusion  # closure constants
+    M_LEN = float(m)
 
     def cell_max(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         k, ra, cb = key
@@ -803,15 +870,12 @@ def global_discords_gemm(
              "pos": out_pos[keep], "cell_max_cos": out_mx[keep]}
         )
 
-    EXCLUSION = exclusion  # closure constants
-    M_LEN = float(m)
-
     # Explicit numbered repartition on the cell keys: the replicated frame
     # is byte-light but every cell runs a BLAS GEMM, and AQE's size-based
     # coalescing would fold the cells into a couple of tasks and serialize
-    # them (same lesson as _weekly_discords_chunked; measured 14.9s ->
-    # 7.8s at sf0.1). AQE preserves user-numbered repartitions, and the
-    # groupBy reuses the distribution — no second exchange.
+    # them (same lesson as _per_week; measured 14.9s -> 7.8s at sf0.1).
+    # AQE preserves user-numbered repartitions, and the groupBy reuses the
+    # distribution — no second exchange.
     parts = both.sparkSession.sparkContext.defaultParallelism
     per_cell = (
         both.repartition(parts, "_k", "_ra", "_cb")
@@ -835,109 +899,4 @@ def global_discords_gemm(
             F.unix_micros("start_ts").alias("start_us"),
             "profile_d2",
         )
-    )
-
-
-def _weekly_discords_chunked(
-    sub: DataFrame, *, key_col: str, m: int, exclusion: int
-) -> DataFrame:
-    """Chunked numpy kernel for the per-(key, week) matrix profile.
-
-    The self-join formulation shuffles O(n_group^2) PAIR ROWS per group —
-    ~200M rows at sf0.1 and quadratic from there (measured 54s; the join
-    was the whole bench line). This kernel keeps the identical semantics
-    and bit-identical floats but does the pair work as arithmetic instead
-    of rows: each (key, week) group lands in one applyInPandas call,
-    distances accumulate over the m lag positions in the SAME
-    left-to-right order as the SQL/Column expression chain
-    ``((t1^2 + t2^2) + t3^2) ...`` (numpy float64 IEEE ops, sequential
-    loop over m, vectorized over pairs), trivial matches are masked to
-    +inf, and only the argmax row leaves the worker. Memory is bounded by
-    row-chunking the candidate axis (chunk x n doubles), the same dial as
-    ``similarity.all_pairs_cosine``'s grid. Shuffle volume: one row per
-    subsequence in, ONE ROW PER GROUP out.
-    """
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField("week_us", T.LongType()),
-            T.StructField("discord_pos", T.LongType()),
-            T.StructField("start_us", T.LongType()),
-            T.StructField("profile_d2", T.DoubleType()),
-        ]
-    )
-
-    def one_group(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        n = len(pdf)
-        vals = np.asarray([np.asarray(a, dtype=np.float64) for a in pdf["arr"]])
-        pos = pdf["pos"].to_numpy()
-        profile = np.full(n, np.inf)
-        # cache-tiled in-place accumulation: full-width chunk rows are
-        # DRAM-bandwidth-bound (every one of the m passes re-streams a
-        # rows x n buffer; measured 2.4s/group at n=4700), while a
-        # 128x1024 tile keeps the working set in cache across the m
-        # passes (0.48s/group). Neither tiling nor in-place ops change
-        # the per-pair k=0..m-1 accumulation order, so bit-parity with
-        # the SQL chain is untouched; tile mins merge via exact
-        # np.minimum (min-of-mins, order-free).
-        ti, tj = 128, 1024
-        cols = [np.ascontiguousarray(vals[:, i]) for i in range(m)]
-        t_buf = np.empty((ti, tj))
-        acc = np.empty((ti, tj))
-        for li in range(0, n, ti):
-            hi = min(li + ti, n)
-            ci = hi - li
-            prow = np.full(ci, np.inf)
-            for lj in range(0, n, tj):
-                hj = min(lj + tj, n)
-                cj = hj - lj
-                tb, ac = t_buf[:ci, :cj], acc[:ci, :cj]
-                for i in range(m):  # fixed-order accumulation == SQL chain
-                    np.subtract(
-                        cols[i][li:hi, None], cols[i][None, lj:hj], out=tb
-                    )
-                    np.multiply(tb, tb, out=tb)
-                    if i == 0:
-                        ac[:] = tb
-                    else:
-                        ac += tb
-                invalid = (
-                    np.abs(pos[li:hi, None] - pos[None, lj:hj]) < exclusion
-                )
-                ac[invalid] = np.inf
-                np.minimum(prow, ac.min(axis=1), out=prow)
-            profile[li:hi] = prow
-        ok = np.isfinite(profile)
-        if not ok.any():
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        # argmax by (profile desc, pos asc) — exact float compare, like rn=1
-        best = max(
-            (i for i in range(n) if ok[i]), key=lambda i: (profile[i], -pos[i])
-        )
-        row = pdf.iloc[best]
-        return pd.DataFrame(
-            {
-                key_col: [row[key_col]],
-                "week_us": [int(row["week"].value // 1000)],
-                "discord_pos": [int(row["pos"])],
-                "start_us": [int(row["start_ts"].value // 1000)],
-                "profile_d2": [float(profile[best])],
-            }
-        )
-
-    # The group data is tiny (~10 MB at sf0.1) but the per-group KERNEL is
-    # CPU-heavy, so AQE's size-based shuffle coalescing would fold every
-    # group into one task and serialize the kernels (measured 8.2s -> 2.3s
-    # restoring #groups-way parallelism). An explicit numbered repartition
-    # on the group keys is AQE-stable and satisfies applyInPandas's
-    # required distribution, so no second exchange is added.
-    parts = sub.sparkSession.sparkContext.defaultParallelism
-    return (
-        sub.repartition(parts, key_col, "week")
-        .groupBy(key_col, "week")
-        .applyInPandas(one_group, schema=schema)
     )

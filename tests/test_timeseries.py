@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -278,65 +279,76 @@ def test_weekly_discords_finds_planted_shape(spark):
     assert week2 and all(r["profile_d2"] == 0.0 for r in week2)
 
 
-def test_weekly_discords_chunked_bitexact_vs_join(spark):
+def _pair_kernel_input(spark, case):
+    """(frame, key column) for the chunked-vs-join bit-exact tests.
+    ``string`` / ``bigint``: two keys over two+ weeks hourly, whose
+    repeating values force d2 ties. ``cross_tile``: one key with 1,100
+    rows at 9-minute spacing inside one ISO week — 1,093 subsequences,
+    more than one 1024-wide column tile, with tied values."""
+    t0 = dt.datetime(2024, 1, 1)  # a Monday
+    if case == "cross_tile":
+        rows = [
+            ("c", t0 + dt.timedelta(minutes=9 * i), i, ((i * 7919 % 1009) % 37) / 4.0)
+            for i in range(1100)
+        ]
+    else:
+        keys = ("a", "b") if case == "string" else (1, 2)
+        rows = [
+            (k, t0 + dt.timedelta(hours=i), i,
+             float((i * 37 % 113) / 7.0) + (3.0 if k == keys[1] else 0.0))
+            for k in keys
+            for i in range(340)
+        ]
+    key_col, key_type = ("user_id", "bigint") if case == "bigint" else ("event_type", "string")
+    df = spark.createDataFrame(
+        rows, f"{key_col} {key_type}, ts timestamp, event_id long, value double"
+    )
+    return df, key_col
+
+
+@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile"])
+def test_weekly_discords_chunked_bitexact_vs_join(spark, case):
     """The chunked numpy kernel must reproduce the self-join formulation
     BIT-FOR-BIT (same left-to-right distance accumulation), on data with
-    ties and multiple keys/weeks."""
-    import datetime as dt
-
+    ties and multiple keys/weeks, for any key type, and across column
+    tiles."""
     from anomaly_detection_in_time_series_data_spark.operators import timeseries
 
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for k in ("a", "b"):
-        for i in range(340):  # two+ weeks hourly, irrational-ish values
-            v = float((i * 37 % 113) / 7.0) + (3.0 if k == "b" else 0.0)
-            rows.append((k, t0 + dt.timedelta(hours=i), i, v))
-    df = spark.createDataFrame(
-        rows, "event_type string, ts timestamp, event_id long, value double"
-    )
+    df, key_col = _pair_kernel_input(spark, case)
     kw = dict(
-        key_col="event_type", ts_col="ts", value_col="value",
+        key_col=key_col, ts_col="ts", value_col="value",
         tiebreak_col="event_id", m=8,
     )
     fast = {
-        (r["event_type"], r["week_us"]): (r["discord_pos"], r["start_us"], r["profile_d2"])
+        (r[key_col], r["week_us"]): (r["discord_pos"], r["start_us"], r["profile_d2"])
         for r in timeseries.weekly_discords(df, impl="chunked", **kw).collect()
     }
     slow = {
-        (r["event_type"], r["week_us"]): (r["discord_pos"], r["start_us"], r["profile_d2"])
+        (r[key_col], r["week_us"]): (r["discord_pos"], r["start_us"], r["profile_d2"])
         for r in timeseries.weekly_discords(df, impl="join", **kw).collect()
     }
     assert fast == slow  # includes exact float equality on profile_d2
 
 
-def test_weekly_motifs_chunked_bitexact_vs_join(spark):
+@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile"])
+def test_weekly_motifs_chunked_bitexact_vs_join(spark, case):
     """The motif chunked kernel must reproduce the self-join + struct-MIN
     formulation BIT-FOR-BIT, including the (d2, pos_a, pos_b) lexicographic
-    tiebreak, on data with exact ties and multiple keys/weeks."""
-    import datetime as dt
-
+    tiebreak, on data with exact ties and multiple keys/weeks, for any key
+    type, and past the first column tile."""
     from anomaly_detection_in_time_series_data_spark.operators import timeseries
 
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for k in ("a", "b"):
-        for i in range(340):  # two+ weeks hourly; repeats force d2 ties
-            v = float((i * 37 % 113) / 7.0) + (3.0 if k == "b" else 0.0)
-            rows.append((k, t0 + dt.timedelta(hours=i), i, v))
-    df = spark.createDataFrame(
-        rows, "event_type string, ts timestamp, event_id long, value double"
-    )
+    df, key_col = _pair_kernel_input(spark, case)
     kw = dict(
-        key_col="event_type", ts_col="ts", value_col="value",
+        key_col=key_col, ts_col="ts", value_col="value",
         tiebreak_col="event_id", m=8,
     )
     fast = {
-        (r["event_type"], r["week_us"]): (r["pos_a"], r["pos_b"], r["motif_d2"])
+        (r[key_col], r["week_us"]): (r["pos_a"], r["pos_b"], r["motif_d2"])
         for r in timeseries.weekly_motifs(df, impl="chunked", **kw).collect()
     }
     slow = {
-        (r["event_type"], r["week_us"]): (r["pos_a"], r["pos_b"], r["motif_d2"])
+        (r[key_col], r["week_us"]): (r["pos_a"], r["pos_b"], r["motif_d2"])
         for r in timeseries.weekly_motifs(df, impl="join", **kw).collect()
     }
     assert fast and fast == slow  # exact float equality on motif_d2
@@ -391,19 +403,6 @@ def test_global_discords_gemm_matches_bruteforce(spark):
         "b": rng.rand(200) * 4.0,
     }
     series["a"][100:108] = series["a"][100:108][::-1]  # planted inverted shape
-    rows = []
-    for k, xs in series.items():
-        for i, v in enumerate(xs):
-            rows.append((k, t0 + dt.timedelta(hours=i), i, float(v)))
-    df = spark.createDataFrame(
-        rows, "event_type string, ts timestamp, event_id long, value double"
-    )
-    got = {
-        r["event_type"]: (r["discord_pos"], r["profile_d2"])
-        for r in timeseries.global_discords_gemm(
-            df, m=m, grid=3, top_k=1
-        ).collect()
-    }
 
     def brute(xs):
         n = len(xs) - m + 1
@@ -419,7 +418,26 @@ def test_global_discords_gemm_matches_bruteforce(spark):
         best = int(np.argmax(2.0 * m * (1.0 - mx)))
         return best + 1  # 1-based pos
 
-    for k, xs in series.items():
-        assert got[k][0] == brute(xs), k
-    # the planted inverted window must be the global discord for key a
-    assert 100 - m < (got["a"][0] - 1) < 108
+    # the same series under a string key and under an integer key
+    for key_col, key_type, names in (
+        ("event_type", "string", ("a", "b")),
+        ("user_id", "bigint", (1, 2)),
+    ):
+        rows = [
+            (name, t0 + dt.timedelta(hours=i), i, float(v))
+            for name, xs in zip(names, series.values())
+            for i, v in enumerate(xs)
+        ]
+        df = spark.createDataFrame(
+            rows, f"{key_col} {key_type}, ts timestamp, event_id long, value double"
+        )
+        got = {
+            r[key_col]: (r["discord_pos"], r["profile_d2"])
+            for r in timeseries.global_discords_gemm(
+                df, key_col=key_col, m=m, grid=3, top_k=1
+            ).collect()
+        }
+        for name, xs in zip(names, series.values()):
+            assert got[name][0] == brute(xs), name
+        # the planted inverted window must be the global discord for key a
+        assert 100 - m < (got[names[0]][0] - 1) < 108
