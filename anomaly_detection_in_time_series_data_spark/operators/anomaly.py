@@ -6,20 +6,32 @@ models (VAE, ``Week#12_Assignment.ipynb:132-186``) and z-score normalization
 ships the statistical equivalents Spark supports natively (SURVEY.md §2.10):
 
 - rolling / grouped z-score over event time (this module)
+- EWMA and Holt forecast scorers (this module)
 - KMeans distance-to-centroid and GaussianMixture log-likelihood
   (``models.py``; MLlib)
 
-All batch scoring here is window/agg expression work — JVM-side, whole-stage
+The z-scores are window/agg expression work — JVM-side, whole-stage
 codegen, no Python in the hot path. At 100 TB the window partitions by
 ``event_type`` (low cardinality) — for very hot keys the grouped variant
 (`global_zscore`) is a two-pass agg+broadcast-join, which scales better than
 a sort-based window; both are provided.
+
+The EWMA and Holt scorers are sequential recurrences, so they run a per-row
+Python loop inside ``applyInPandas``: one skeleton, ``_handoff_scan``, owns
+the sort, the loop, the output schema and the chunked state handoff, and
+each scorer supplies only its zero state, its step and its per-row score.
 """
 
 from __future__ import annotations
 
+from functools import partial
+from typing import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Guard against zero/degenerate dispersion (constant window) — mirrors the
 # oracle SQL exactly so boolean flags hash-match.
@@ -188,13 +200,126 @@ def rolling_zscore_chunked(
     )
 
 
+def _handoff_scan(
+    df: DataFrame,
+    *,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    tiebreak_col: str | None,
+    chunk: str | None,
+    init: tuple,
+    step: Callable,
+    emit: Callable,
+    score_col: str,
+) -> DataFrame:
+    """The sequential per-key scorer behind the EWMA and Holt operators;
+    returns ``key, event_ts, value, <score_col>, is_anomaly`` with the
+    input's key type.
+
+    One loop scores each key's rows in ``(ts, tiebreak)`` order, starting
+    from the state ``init``: ``emit(*state, x)`` is the row's ``(score,
+    flag)`` from the state of STRICTLY PRIOR rows (so an outlier cannot
+    mask itself), then ``state = step(*state, x)``.  With ``chunk=None``
+    each key is one group, parallelism #keys.  Otherwise time is cut into
+    ``chunk`` buckets and the work is split so the unavoidable sequential
+    part is minimal:
+
+    1. **State pass** (parallel over keys): a bare scan per key that only
+       records the state at each chunk entry — no scores, no per-row
+       output assembly.  Output: #keys x #chunks tiny state rows.
+    2. **Score pass** (parallel over key x chunk): each (key, chunk) group
+       gets its entry state as one extra row of the same group (a union,
+       not a join: grouping matches a NULL key to itself, an equi-join
+       would drop it), splits it off and re-runs the loop from it.
+
+    Both passes call the same ``step``, so the scores are bit-equal to
+    the one-group case (unit-asserted).  The per-row heavy part (scoring
+    + Arrow assembly, the dominant constant) parallelizes #keys x
+    #chunks; only the cheap state scan stays key-sequential.  The chunked
+    form needs ``tiebreak_col``: both passes must agree on a TOTAL row
+    order for the handoff to be exact.  Without one, rows with equal
+    ``ts`` keep their nondeterministic incoming order."""
+    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    base = df.select(key_col, value_col, *order)
+    state_cols = [f"_s{i}" for i in range(len(init))]
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        state = init
+        if chunk is not None:
+            # the entry row is the one whose state is non-null (its count
+            # never is; a NaN float state arrives as NULL from Arrow)
+            entry = pdf[state_cols].notna().any(axis=1)
+            row = pdf.loc[entry, state_cols].iloc[0]
+            state = tuple(type(z)(v) for z, v in zip(init, row))
+            pdf = pdf[~entry]
+        pdf = pdf.sort_values(order)
+        xs = pdf[value_col].to_numpy(dtype=float)
+        scores = np.full(len(xs), np.nan)
+        flags = np.zeros(len(xs), dtype=bool)
+        for i, x in enumerate(xs):
+            scores[i], flags[i] = emit(*state, x)
+            state = step(*state, x)
+        return pd.DataFrame(
+            {
+                key_col: pdf[key_col],
+                "event_ts": pdf[ts_col],
+                "value": xs,
+                score_col: scores,
+                "is_anomaly": flags,
+            }
+        )
+
+    def states(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order)
+        # sorted by ts, so a chunk's first row is its entry
+        chunks = pdf["_chunk"]
+        entries = ~chunks.duplicated().to_numpy()
+        state, rows = init, []
+        for c, is_entry, x in zip(
+            chunks.to_numpy(), entries, pdf[value_col].to_numpy(dtype=float)
+        ):
+            if is_entry:
+                rows.append((c, *state))
+            state = step(*state, x)
+        out = pd.DataFrame(rows, columns=["_chunk", *state_cols])
+        out.insert(0, key_col, pdf[key_col].iloc[0])
+        return out
+
+    groups = [key_col]
+    if chunk is not None:
+        base = base.withColumn("_chunk", F.window(F.col(ts_col), chunk).start)
+        state_schema = T.StructType(
+            [base.schema[key_col], base.schema["_chunk"]]
+            + [
+                T.StructField(
+                    c, T.LongType() if isinstance(z, int) else T.DoubleType()
+                )
+                for c, z in zip(state_cols, init)
+            ]
+        )
+        entry = base.groupBy(key_col).applyInPandas(states, schema=state_schema)
+        base = base.unionByName(entry, allowMissingColumns=True)
+        groups.append("_chunk")
+    out_schema = T.StructType(
+        [
+            T.StructField(key_col, df.schema[key_col].dataType),
+            T.StructField("event_ts", df.schema[ts_col].dataType),
+            T.StructField("value", T.DoubleType()),
+            T.StructField(score_col, T.DoubleType()),
+            T.StructField("is_anomaly", T.BooleanType()),
+        ]
+    )
+    return base.groupBy(*groups).applyInPandas(score, schema=out_schema)
+
+
 def _ewma_step(
     mu: float, var: float, n: int, x: float, alpha: float
 ) -> tuple[float, float, int]:
     """One EWMA state transition — THE single definition of the recurrence,
-    shared by the sequential scorer, the chunked state pass, and the chunked
-    chunk scorer so all three execute the identical float op sequence
-    (bit-equal outputs)."""
+    which ``_handoff_scan`` runs in its state pass and its scoring loop, so
+    the sequential and chunked scorers execute the identical float op
+    sequence (bit-equal outputs)."""
     delta = x - mu if n else 0.0
     if n == 0:
         mu = x
@@ -202,6 +327,24 @@ def _ewma_step(
         mu += alpha * delta
         var = (1.0 - alpha) * (var + alpha * delta * delta)
     return mu, var, n + 1
+
+
+def _ewma(alpha: float, threshold: float, min_points: int) -> dict:
+    """The EWMA scorer's ``_handoff_scan`` wiring, shared by
+    ``ewma_anomaly`` and ``ewma_anomaly_chunked``."""
+
+    def emit(mu, var, n, x):
+        if n >= min_points and var > 1e-24:
+            z = (x - mu) / var**0.5
+            return z, abs(z) > threshold
+        return np.nan, False
+
+    return dict(
+        init=(0.0, 0.0, 0),
+        step=partial(_ewma_step, alpha=alpha),
+        emit=emit,
+        score_col="ewma_z",
+    )
 
 
 def ewma_anomaly(
@@ -235,47 +378,10 @@ def ewma_anomaly(
     ``tiebreak_col`` makes tied-timestamp scoring deterministic (rows with
     equal ``ts`` otherwise keep nondeterministic incoming order, so
     sequential scores could differ across runs)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    in_cols = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, df.schema[key_col].dataType),
-            T.StructField("event_ts", df.schema[ts_col].dataType),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("ewma_z", T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType()),
-        ]
-    )
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols)
-        xs = pdf[value_col].to_numpy(dtype=float)
-        mu, var, n = 0.0, 0.0, 0
-        zs = np.full(len(xs), np.nan)
-        flags = np.zeros(len(xs), dtype=bool)
-        for i, x in enumerate(xs):
-            if n >= min_points and var > 1e-24:
-                zs[i] = (x - mu) / var**0.5
-                flags[i] = abs(zs[i]) > threshold
-            mu, var, n = _ewma_step(mu, var, n, x, alpha)
-        return pd.DataFrame(
-            {
-                key_col: pdf[key_col],
-                "event_ts": pdf[ts_col],
-                "value": xs,
-                "ewma_z": zs,
-                "is_anomaly": flags,
-            }
-        )
-
-    return df.select(*in_cols).groupBy(key_col).applyInPandas(
-        score, schema=out_schema
+    return _handoff_scan(
+        df, key_col=key_col, ts_col=ts_col, value_col=value_col,
+        tiebreak_col=tiebreak_col, chunk=None,
+        **_ewma(alpha, threshold, min_points),
     )
 
 
@@ -295,101 +401,16 @@ def ewma_anomaly_chunked(
     BIT-EQUAL scores, parallelism #keys x #chunks instead of #keys.
 
     EWMA is inherently a sequential recurrence, so exact (bit-equal)
-    parallelism across chunks is impossible in one pass — instead the work
-    is split so the unavoidable sequential part is minimal:
-
-    1. **State pass** (parallel over keys): a bare scalar scan per key that
-       only records the (mu, var, n) state at each chunk entry — no z
-       computation, no per-row output assembly. Output: #keys x #chunks
-       tiny state rows.
-    2. **Score pass** (parallel over key x chunk): each (key, chunk) group
-       re-runs the identical recurrence from its handed-off entry state
-       and emits the scored rows.
-
-    Both passes call ``_ewma_step`` — the same op sequence as the
-    sequential scorer — so outputs are bit-equal (unit-asserted).  The
-    per-row heavy part (scoring + Arrow assembly, the dominant constant)
-    parallelizes #keys x #chunks; only the cheap state scan stays
-    key-sequential.  ``tiebreak_col`` is required: both passes must agree
-    on a TOTAL row order for the handoff to be exact.
+    parallelism across chunks is impossible in one pass; ``_handoff_scan``
+    instead runs a cheap per-key state pass that records the (mu, var, n)
+    state at each chunk entry, then scores every (key, chunk) group from
+    its handed-off entry state.  ``tiebreak_col`` is required: both passes
+    must agree on a TOTAL row order for the handoff to be exact.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    sort_cols = [ts_col, tiebreak_col]
-    base = df.select(key_col, ts_col, value_col, tiebreak_col).withColumn(
-        "_chunk", F.window(F.col(ts_col), chunk).start
-    )
-
-    state_schema = T.StructType(
-        [
-            T.StructField(key_col, df.schema[key_col].dataType),
-            T.StructField("_chunk", T.TimestampType()),
-            T.StructField("_mu_in", T.DoubleType()),
-            T.StructField("_var_in", T.DoubleType()),
-            T.StructField("_n_in", T.LongType()),
-        ]
-    )
-
-    def states(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols)
-        xs = pdf[value_col].to_numpy(dtype=float)
-        chunks = pdf["_chunk"].to_numpy()
-        mu, var, n = 0.0, 0.0, 0
-        out = {"_chunk": [], "_mu_in": [], "_var_in": [], "_n_in": []}
-        cur = None
-        for c, x in zip(chunks, xs):
-            if cur is None or c != cur:
-                cur = c
-                out["_chunk"].append(c)
-                out["_mu_in"].append(mu)
-                out["_var_in"].append(var)
-                out["_n_in"].append(n)
-            mu, var, n = _ewma_step(mu, var, n, x, alpha)
-        out[key_col] = [pdf[key_col].iloc[0]] * len(out["_chunk"])
-        return pd.DataFrame(out)
-
-    entry_states = base.groupBy(key_col).applyInPandas(states, schema=state_schema)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, df.schema[key_col].dataType),
-            T.StructField("event_ts", df.schema[ts_col].dataType),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("ewma_z", T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType()),
-        ]
-    )
-
-    def score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols)
-        xs = pdf[value_col].to_numpy(dtype=float)
-        mu = float(pdf["_mu_in"].iloc[0])
-        var = float(pdf["_var_in"].iloc[0])
-        n = int(pdf["_n_in"].iloc[0])
-        zs = np.full(len(xs), np.nan)
-        flags = np.zeros(len(xs), dtype=bool)
-        for i, x in enumerate(xs):
-            if n >= min_points and var > 1e-24:
-                zs[i] = (x - mu) / var**0.5
-                flags[i] = abs(zs[i]) > threshold
-            mu, var, n = _ewma_step(mu, var, n, x, alpha)
-        return pd.DataFrame(
-            {
-                key_col: pdf[key_col],
-                "event_ts": pdf[ts_col],
-                "value": xs,
-                "ewma_z": zs,
-                "is_anomaly": flags,
-            }
-        )
-
-    # #keys x #chunks state rows: broadcast onto the chunked data, then
-    # score each (key, chunk) group independently.
-    joined = base.join(F.broadcast(entry_states), on=[key_col, "_chunk"])
-    return joined.groupBy(key_col, "_chunk").applyInPandas(
-        score_chunk, schema=out_schema
+    return _handoff_scan(
+        df, key_col=key_col, ts_col=ts_col, value_col=value_col,
+        tiebreak_col=tiebreak_col, chunk=chunk,
+        **_ewma(alpha, threshold, min_points),
     )
 
 
@@ -398,10 +419,10 @@ def _holt_step(
     gamma: float,
 ) -> tuple[float, float, float, int]:
     """One Holt (double-exponential) state transition — the single
-    definition of the recurrence, shared by the sequential scorer, the
-    chunked state pass, the chunked scorer, and (textually mirrored) the
-    DuckDB recursive-CTE oracle, so every path executes the identical
-    float op sequence (bit-equal outputs).
+    definition of the recurrence, which ``_handoff_scan`` runs in its
+    state pass and its scoring loop, and which the DuckDB recursive-CTE
+    oracle mirrors textually, so every path executes the identical float
+    op sequence (bit-equal outputs).
 
     State: level ``l``, trend ``b``, EWMA of absolute one-step-ahead
     forecast residuals ``r`` (the adaptive scale the flag threshold is
@@ -443,87 +464,18 @@ def holt_forecast_anomaly_chunked(
     break the static z-score.
 
     Execution is the same time-chunk + state-handoff scheme as
-    ``ewma_anomaly_chunked`` (state pass per key -> tiny entry-state rows
-    -> parallel (key, chunk) scoring; bit-equal to a sequential pass,
-    parallelism #keys x #chunks).
+    ``ewma_anomaly_chunked`` (``_handoff_scan``: state pass per key ->
+    tiny entry-state rows -> parallel (key, chunk) scoring; bit-equal to
+    a sequential pass, parallelism #keys x #chunks).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    sort_cols = [ts_col, tiebreak_col]
-    base = df.select(key_col, ts_col, value_col, tiebreak_col).withColumn(
-        "_chunk", F.window(F.col(ts_col), chunk).start
-    )
+    def emit(l, b, r, n, x):
+        flag = n >= min_points and r > 1e-24 and abs(x - (l + b)) > threshold * r
+        return (l + b if n > 0 else np.nan), flag
 
-    state_schema = T.StructType(
-        [
-            T.StructField(key_col, df.schema[key_col].dataType),
-            T.StructField("_chunk", T.TimestampType()),
-            T.StructField("_l_in", T.DoubleType()),
-            T.StructField("_b_in", T.DoubleType()),
-            T.StructField("_r_in", T.DoubleType()),
-            T.StructField("_n_in", T.LongType()),
-        ]
-    )
-
-    def states(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols)
-        xs = pdf[value_col].to_numpy(dtype=float)
-        chunks = pdf["_chunk"].to_numpy()
-        l, b, r, n = 0.0, 0.0, 0.0, 0
-        out = {"_chunk": [], "_l_in": [], "_b_in": [], "_r_in": [], "_n_in": []}
-        cur = None
-        for c, x in zip(chunks, xs):
-            if cur is None or c != cur:
-                cur = c
-                out["_chunk"].append(c)
-                out["_l_in"].append(l)
-                out["_b_in"].append(b)
-                out["_r_in"].append(r)
-                out["_n_in"].append(n)
-            l, b, r, n = _holt_step(l, b, r, n, x, alpha, beta, gamma)
-        out[key_col] = [pdf[key_col].iloc[0]] * len(out["_chunk"])
-        return pd.DataFrame(out)
-
-    entry_states = base.groupBy(key_col).applyInPandas(states, schema=state_schema)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, df.schema[key_col].dataType),
-            T.StructField("event_ts", df.schema[ts_col].dataType),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("forecast", T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType()),
-        ]
-    )
-
-    def score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols)
-        xs = pdf[value_col].to_numpy(dtype=float)
-        l = float(pdf["_l_in"].iloc[0])
-        b = float(pdf["_b_in"].iloc[0])
-        r = float(pdf["_r_in"].iloc[0])
-        n = int(pdf["_n_in"].iloc[0])
-        fcs = np.full(len(xs), np.nan)
-        flags = np.zeros(len(xs), dtype=bool)
-        for i, x in enumerate(xs):
-            if n > 0:
-                fcs[i] = l + b
-            if n >= min_points and r > 1e-24:
-                flags[i] = abs(x - (l + b)) > threshold * r
-            l, b, r, n = _holt_step(l, b, r, n, x, alpha, beta, gamma)
-        return pd.DataFrame(
-            {
-                key_col: pdf[key_col],
-                "event_ts": pdf[ts_col],
-                "value": xs,
-                "forecast": fcs,
-                "is_anomaly": flags,
-            }
-        )
-
-    joined = base.join(F.broadcast(entry_states), on=[key_col, "_chunk"])
-    return joined.groupBy(key_col, "_chunk").applyInPandas(
-        score_chunk, schema=out_schema
+    return _handoff_scan(
+        df, key_col=key_col, ts_col=ts_col, value_col=value_col,
+        tiebreak_col=tiebreak_col, chunk=chunk, init=(0.0, 0.0, 0.0, 0),
+        step=partial(_holt_step, alpha=alpha, beta=beta, gamma=gamma),
+        emit=emit, score_col="forecast",
     )

@@ -547,15 +547,21 @@ def _per_week(
 
 def _pair_d2(sub: DataFrame, key_col: str, m: int) -> "tuple[DataFrame, Column]":
     """The self-join of ``sub`` on (key, week), its sides aliased ``a`` and
-    ``b``, and the pair's distance^2 as an EXPLICIT left-associated
-    ``(a1-b1)^2 + ... + (am-bm)^2`` chain — no reduction whose order the
-    engine may choose — so the values are bit-identical to the SQL
-    oracle's textually parallel expression."""
+    ``b`` (``key_col`` and ``week`` name side ``a``'s), and the pair's
+    distance^2 as an EXPLICIT left-associated ``(a1-b1)^2 + ... +
+    (am-bm)^2`` chain — no reduction whose order the engine may choose —
+    so the values are bit-identical to the SQL oracle's textually
+    parallel expression.  The key matches null-safely (``<=>``, still an
+    equi-join key to the planner), so a NULL key is one group, as in the
+    chunked kernels."""
     d2 = None
     for i in range(m):
         t = F.col("a.arr").getItem(i) - F.col("b.arr").getItem(i)
         d2 = t * t if d2 is None else d2 + t * t
-    return sub.alias("a").join(sub.alias("b"), on=[key_col, "week"]), d2
+    a, b = F.col(f"a.{key_col}"), F.col(f"b.{key_col}")
+    on = a.eqNullSafe(b) & (F.col("a.week") == F.col("b.week"))
+    joined = sub.alias("a").join(sub.alias("b"), on)
+    return joined.drop(b, F.col("b.week")), d2
 
 
 def weekly_discords(
@@ -636,13 +642,16 @@ def weekly_discords(
         }
         return _per_week(sub, key_col, fields, discord)
     joined, d2 = _pair_d2(sub, key_col, m)
-    pairs = (
+    scored = (
         joined.filter(F.abs(F.col("a.pos") - F.col("b.pos")) >= exclusion)
-        .groupBy(key_col, "week", F.col("a.pos").alias("pos"))
+        .groupBy(
+            key_col,
+            "week",
+            F.col("a.pos").alias("pos"),
+            F.col("a.start_ts").alias("start_ts"),
+        )
         .agg(F.min(d2).alias("profile_d2"))
     )
-    meta = sub.select(key_col, "week", "pos", "start_ts")
-    scored = pairs.join(meta, [key_col, "week", "pos"])
     dw = Window.partitionBy(key_col, "week").orderBy(
         F.col("profile_d2").desc(), F.col("pos")
     )

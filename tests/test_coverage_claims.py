@@ -80,11 +80,12 @@ def test_correctness_window_leads_the_registry():
 
 def test_correctness_window_ordering(tmp_path, monkeypatch):
     """No green row first, then live _IMPL_CHANGED entries (an entry
-    expires once a green row newer than its round lands), then oldest
-    newest-green first; ties keep registration order."""
+    expires once a green row newer than its round lands), newest entry
+    first, then oldest newest-green first; other ties keep registration
+    order."""
     names = ["a", "b", "c", "d", "e", "f", "g"]
     monkeypatch.setattr(q, "ORACLE", {n: "SELECT 1" for n in names})
-    monkeypatch.setattr(q, "_IMPL_CHANGED", {"e": 3, "f": 2})
+    monkeypatch.setattr(q, "_IMPL_CHANGED", {"d": 1, "e": 3, "f": 2})
     assert q.correctness_window(tmp_path) == names  # no files
 
     def ok(match: bool) -> dict:
@@ -98,12 +99,34 @@ def test_correctness_window_ordering(tmp_path, monkeypatch):
     for rnd, rows in rounds.items():
         (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
     (tmp_path / "CORRECTNESS_notes.json").write_text("{}")  # not a round file
-    # g: never green; e: impl-changed after its r3 row (live); f: changed
-    # after r2 but green again in r3 (expired); then newest green round
-    # 1 (c, d in registration order), 2 (b), 3 (a, f).
-    assert q.correctness_window(tmp_path) == ["g", "e", "c", "d", "b", "a", "f"]
-    monkeypatch.setattr(q, "_WINDOW", 3)
-    assert q.correctness_window(tmp_path) == ["g", "e", "c"]
+    # g: never green; e and d: impl-changed after their newest green row
+    # (live; e is the newer entry, although d registered first); f:
+    # changed after r2 but green again in r3 (expired); then newest green
+    # round 1 (c), 2 (b), 3 (a, f in registration order).
+    assert q.correctness_window(tmp_path) == ["g", "e", "d", "c", "b", "a", "f"]
+    # an overflowing window defers the oldest change, not the newest
+    monkeypatch.setattr(q, "_WINDOW", 2)
+    assert q.correctness_window(tmp_path) == ["g", "e"]
+
+
+def test_correctness_window_holds_the_newest_live_changes():
+    """Live _IMPL_CHANGED entries can outnumber the window's room (what
+    the never-green names leave of its 50): the window must then hold the
+    newest min(room, live) entries, so a new change is never the one
+    silently deferred."""
+    green: dict[str, int] = {}
+    for f in glob.glob(str(REPO / "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
+        for name, row in json.load(open(f)).items():
+            if row.get("hash_match"):
+                green[name] = max(rnd, green.get(name, 0))
+    never = [n for n in q.ORACLE if n not in green]
+    live = [n for n, rnd in q._IMPL_CHANGED.items() if n in green and green[n] <= rnd]
+    room = max(0, 50 - len(never))
+    newest = live[::-1][: min(room, len(live))]
+    window = q.correctness_window(REPO)
+    assert window[len(never) : len(never) + len(newest)] == newest
+    assert set(newest) <= set(list(q.QUERIES)[:50])
 
 
 def test_bench_headliners_are_registered_queries():

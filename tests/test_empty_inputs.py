@@ -34,6 +34,9 @@ def test_anomaly_ops_on_empty(spark):
         ).count()
         == 0
     )
+    # the chunked scorers: an empty state pass and an empty union
+    assert anomaly.ewma_anomaly_chunked(ev).count() == 0
+    assert anomaly.holt_forecast_anomaly_chunked(ev).count() == 0
 
 
 def test_dedup_ops_on_empty(spark):

@@ -177,7 +177,8 @@ def test_model_artifact_save_load_roundtrip(spark, sf_dir, tmp_path):
 def test_ewma_chunked_bit_equal_to_sequential(spark):
     """The time-chunk + state-handoff formulation must reproduce the
     sequential scorer BIT-equal (same _ewma_step op sequence), across
-    chunk boundaries, tied timestamps, and a planted spike."""
+    chunk boundaries, tied timestamps, and a planted spike — and keep a
+    NULL key as one series, as the sequential scorer does."""
     import datetime
     import math
     import struct
@@ -190,7 +191,7 @@ def test_ewma_chunked_bit_equal_to_sequential(spark):
     t0 = datetime.datetime(2024, 1, 1)
     rows = []
     eid = 0
-    for key, n_points, spike_at in (("a", 400, 170), ("b", 90, None)):
+    for key, n_points, spike_at in (("a", 400, 170), ("b", 90, None), (None, 60, 40)):
         for i in range(n_points):
             v = math.sin(i / 7.0) * (1.0 if key == "a" else 3.0)
             if spike_at is not None and i == spike_at:
@@ -230,3 +231,4 @@ def test_ewma_chunked_bit_equal_to_sequential(spark):
     assert len(seq) == len(chk) == len(rows)
     assert seq == chk
     assert any(flag for _, flag in seq.values())  # spike was flagged
+    assert any(flag for k, (_, flag) in chk.items() if k[0] is None)

@@ -881,7 +881,7 @@ def test_rewritten_ntile_queries_pass_window_gate(spark, sf_dir):
 
 def test_round9_wave_plans_stay_jvm(spark, sf_dir):
     """The round-9 wave: no Python eval in any plan (the only sanctioned
-    Python is inside global_exact_rank's checkpointed mapInPandas rank
+    Python is inside global_exact_rank's checkpointed mapInArrow rank
     pass, which the executed plan has already materialized), and no
     Cartesian product anywhere."""
     wave = [
@@ -1125,12 +1125,15 @@ def test_keyed_record_scan_vectorized_paths(spark):
     assert marked == {0: True, 1: False, 2: True}
 
 
-def test_keyed_record_scan_nan_never_enters_carry(spark):
+@pytest.mark.parametrize("parts", [1, 4])
+def test_keyed_record_scan_nan_never_enters_carry(spark, parts):
     """ADVICE r11: a NaN stored as a key's cross-batch running max made
     carry.isna() true, so later batches flagged beaten rows as records.
     An all-NaN leading batch must behave like 'no prior finite value' —
     the first finite row is a record, a later smaller row is not, and
-    the dict carry never holds NaN."""
+    the dict carry never holds NaN.  Across ranges (``parts=4``) the
+    offset fold must skip the NaN the same way, and the NaN row itself
+    comes back as NaN, not NULL."""
     from anomaly_detection_in_time_series_data_spark.operators import ranks
 
     rows = [("a", 0, float("nan")), ("a", 1, 9.0), ("a", 2, 5.0), ("a", 3, 11.0)]
@@ -1141,17 +1144,20 @@ def test_keyed_record_scan_nan_never_enters_carry(spark):
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "1")
     try:
-        marked = {
-            r.seq: r.is_record
+        out = {
+            r.seq: r
             for r in ranks.keyed_record_scan(
-                df, ["k"], ["k", "seq"], "v", parts=1
+                df, ["k"], ["k", "seq"], "v", parts=parts
             ).collect()
         }
     finally:
         spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    marked = {seq: r.is_record for seq, r in out.items()}
     # seq=2 (5.0 after 9.0) must NOT be a record even though the key's
     # first-ever value was NaN; seq=3 (11.0) must be.
+    assert marked[0] is False
     assert marked[1] is True and marked[2] is False and marked[3] is True
+    assert out[0].v is not None and out[0].v != out[0].v  # NaN, not NULL
 
 
 @pytest.mark.parametrize("parts", [1, 7, 64])
@@ -1168,12 +1174,18 @@ def test_keyed_exact_rank_matches_window(spark, parts):
         "id",
         "IF(id >= 600, NULL, CAST(id % 5 AS STRING)) AS k",
         "CAST((id * 131) % 997 AS BIGINT) AS v",
+        # a double payload holding NaN must come back NaN on both paths
+        "IF(id % 9 = 0, CAST('NaN' AS DOUBLE), id / 4.0) AS x",
     )
+
+    def x(r):
+        return "NaN" if r.x is not None and r.x != r.x else r.x
+
     # small_bytes=-1 forces the TWO-PHASE path (the r13 size gate would
     # otherwise — correctly — route a 600-row frame to the native window,
     # and this parity check would compare the window against itself).
     got = {
-        r.id: (r.rnk, r.n)
+        r.id: (r.rnk, r.n, x(r))
         for r in ranks.keyed_exact_rank(
             df, ["k"], ["k", F.col("v").desc(), "id"], parts=parts,
             small_bytes=-1,
@@ -1181,20 +1193,22 @@ def test_keyed_exact_rank_matches_window(spark, parts):
     }
     w = Window.partitionBy("k").orderBy(F.col("v").desc(), "id")
     want = {
-        r.id: (r.rn, r.cnt)
+        r.id: (r.rn, r.cnt, x(r))
         for r in df.withColumn("rn", F.row_number().over(w))
         .withColumn("cnt", F.count("*").over(Window.partitionBy("k")))
         .collect()
     }
     assert got == want
+    assert sum(v[2] == "NaN" for v in want.values()) == 72
 
     # the r13 SIZE-GATED small path must produce the identical mapping
     # (same column order/types) without the two-phase machinery
     small = ranks.keyed_exact_rank(
         df, ["k"], ["k", F.col("v").desc(), "id"], parts=parts
     )
-    assert "MapInPandas" not in plans.executed_plan(small)
-    got_small = {r.id: (r.rnk, r.n) for r in small.collect()}
+    small_plan = plans.executed_plan(small)
+    assert "MapInPandas" not in small_plan and "MapInArrow" not in small_plan
+    got_small = {r.id: (r.rnk, r.n, x(r)) for r in small.collect()}
     assert got_small == want
 
     # multi-key

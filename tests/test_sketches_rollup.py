@@ -139,10 +139,15 @@ def test_rollup_constant_bucket_std_zero(spark):
 
 
 def test_holt_chunked_bit_equal_to_single_chunk(spark):
+    # a NULL key is one series with its own spike, on both chunkings
     t0 = dt.datetime(2024, 1, 1)
     rows = [
         ("a", t0 + dt.timedelta(hours=3 * i), i, float(10 + 0.5 * i + (i % 7)))
         for i in range(300)
+    ] + [
+        (None, t0 + dt.timedelta(hours=5 * i), 300 + i,
+         500.0 if i == 40 else float(20 + (i % 5)))
+        for i in range(60)
     ]
     df = spark.createDataFrame(rows, "k string, ts timestamp, event_id long, value double")
     kw = dict(key_col="k", ts_col="ts", value_col="value", tiebreak_col="event_id")
@@ -154,7 +159,9 @@ def test_holt_chunked_bit_equal_to_single_chunk(spark):
 
     a = {key(r): (r["forecast"], r["is_anomaly"]) for r in fine.collect()}
     b = {key(r): (r["forecast"], r["is_anomaly"]) for r in one.collect()}
+    assert len(a) == len(b) == len(rows)
     assert a.keys() == b.keys()
+    assert a[(None, t0 + dt.timedelta(hours=5 * 40))][1]  # the NULL key's spike
     for k in a:  # bit-equal forecasts, identical flags
         fa, ba = a[k], b[k]
         assert (fa[0] == ba[0]) or (fa[0] != fa[0] and ba[0] != ba[0])

@@ -284,9 +284,17 @@ def _pair_kernel_input(spark, case):
     ``string`` / ``bigint``: two keys over two+ weeks hourly, whose
     repeating values force d2 ties. ``cross_tile``: one key with 1,100
     rows at 9-minute spacing inside one ISO week — 1,093 subsequences,
-    more than one 1024-wide column tile, with tied values."""
+    more than one 1024-wide column tile, with tied values. ``null_key``:
+    keys ``'a'`` and NULL over 100 hourly rows each (one ISO week); the
+    NULL key is one group on both implementations."""
     t0 = dt.datetime(2024, 1, 1)  # a Monday
-    if case == "cross_tile":
+    if case == "null_key":
+        rows = [
+            (k, t0 + dt.timedelta(hours=i), i, float((i * 37 % 113) / 7.0))
+            for k in ("a", None)
+            for i in range(100)
+        ]
+    elif case == "cross_tile":
         rows = [
             ("c", t0 + dt.timedelta(minutes=9 * i), i, ((i * 7919 % 1009) % 37) / 4.0)
             for i in range(1100)
@@ -306,7 +314,7 @@ def _pair_kernel_input(spark, case):
     return df, key_col
 
 
-@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile"])
+@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile", "null_key"])
 def test_weekly_discords_chunked_bitexact_vs_join(spark, case):
     """The chunked numpy kernel must reproduce the self-join formulation
     BIT-FOR-BIT (same left-to-right distance accumulation), on data with
@@ -328,9 +336,11 @@ def test_weekly_discords_chunked_bitexact_vs_join(spark, case):
         for r in timeseries.weekly_discords(df, impl="join", **kw).collect()
     }
     assert fast == slow  # includes exact float equality on profile_d2
+    if case == "null_key":
+        assert {k for k, _ in fast} == {"a", None}
 
 
-@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile"])
+@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile", "null_key"])
 def test_weekly_motifs_chunked_bitexact_vs_join(spark, case):
     """The motif chunked kernel must reproduce the self-join + struct-MIN
     formulation BIT-FOR-BIT, including the (d2, pos_a, pos_b) lexicographic
@@ -352,6 +362,8 @@ def test_weekly_motifs_chunked_bitexact_vs_join(spark, case):
         for r in timeseries.weekly_motifs(df, impl="join", **kw).collect()
     }
     assert fast and fast == slow  # exact float equality on motif_d2
+    if case == "null_key":
+        assert {k for k, _ in fast} == {"a", None}
 
 
 def test_weekly_motifs_finds_planted_pair(spark):
