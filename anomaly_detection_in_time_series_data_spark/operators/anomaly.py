@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .joins import broadcast_null_safe_join
+
 # Guard against zero/degenerate dispersion (constant window) — mirrors the
 # oracle SQL exactly so boolean flags hash-match.
 _SIGMA_FLOOR = 1e-12
@@ -90,13 +92,14 @@ def global_zscore(
     Preferred at scale for low-cardinality groups: the per-group stats frame
     is tiny (one row per group), so the join is a broadcast — no sort, no
     window state, and the scan of ``df`` happens exactly twice with full
-    predicate/column pushdown.
+    predicate/column pushdown.  A NULL key is one group, as in ``groupBy``:
+    the stats join back null-safe.
     """
     stats = df.groupBy(*group_cols).agg(
         F.avg(value_col).alias("mu"),
         F.stddev_samp(value_col).alias("sigma"),
     )
-    joined = df.join(F.broadcast(stats), on=group_cols, how="left")
+    joined = broadcast_null_safe_join(df, stats, group_cols, how="left")
     z = F.when(
         F.col("sigma").isNotNull() & (F.col("sigma") > _SIGMA_FLOOR),
         (F.col(value_col) - F.col("mu")) / F.col("sigma"),

@@ -19,6 +19,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def broadcast_null_safe_join(
+    df: DataFrame, small: DataFrame, keys: list[str], how: str = "inner"
+) -> DataFrame:
+    """``df.join(F.broadcast(small), keys, how)`` with every key compared
+    null-safe (``<=>``), so a NULL-key row meets ``small``'s NULL-key row
+    (a NULL group of ``groupBy(keys)``) instead of nothing.  Same columns
+    as the USING join: the keys, the rest of ``df``, the rest of
+    ``small``.  Catalyst hashes ``<=>`` keys, so it stays a broadcast
+    hash join."""
+    tmp = {k: f"_ns_{k}" for k in keys}
+    rest = [c for c in small.columns if c not in tmp]
+    right = small.select(*[F.col(k).alias(v) for k, v in tmp.items()], *rest)
+    on = [F.col(k).eqNullSafe(F.col(v)) for k, v in tmp.items()]
+    return df.join(F.broadcast(right), on, how).select(
+        *keys, *[c for c in df.columns if c not in tmp], *rest
+    )
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .joins import broadcast_null_safe_join
+
 
 def winsorize(
     df: DataFrame,
@@ -31,13 +33,14 @@ def winsorize(
 
     Returns the input rows plus ``lo`` / ``hi`` / ``winsorized`` columns.
     The fences are exact interpolated quantiles; at 100 TB the fence frame
-    is |groups| rows — always broadcastable.
+    is |groups| rows — always broadcastable.  A NULL key is one group, as
+    in ``groupBy``: the fences join back null-safe.
     """
     fences = df.groupBy(*group_cols).agg(
         F.percentile(value_col, lo_p).alias("lo"),
         F.percentile(value_col, hi_p).alias("hi"),
     )
-    return df.join(F.broadcast(fences), group_cols).withColumn(
+    return broadcast_null_safe_join(df, fences, group_cols).withColumn(
         "winsorized",
         F.when(F.col(value_col) < F.col("lo"), F.col("lo"))
         .when(F.col(value_col) > F.col("hi"), F.col("hi"))

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
+from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame
 
@@ -18,12 +20,6 @@ def executed_plan(df: DataFrame) -> str:
         return df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", before)
-
-
-def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
@@ -64,131 +60,201 @@ def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in executed_plan(df)
 
 
+class WindowSites(NamedTuple):
+    """Every Window of one optimized plan, sorted into the three audits."""
+
+    unbounded: list[str]
+    grouped: list[tuple[str, list[str]]]
+    subgrain: list[tuple[str, list[str], list[str]]]
+
+
+# RDD id of a checkpoint's LogicalRDD leaf -> the optimized plan it
+# replaced; filled only inside ``see_through_checkpoints``.
+_CHECKPOINTED: dict[int, object] = {}
+
+
+def _children(node) -> list:
+    if _CHECKPOINTED and node.getClass().getSimpleName() == "LogicalRDD":
+        plan = _CHECKPOINTED.get(node.rdd().id())
+        return [] if plan is None else [plan]
+    cs = node.children()
+    return [cs.apply(i) for i in range(cs.size())]
+
+
+@contextmanager
+def see_through_checkpoints() -> Iterator[None]:
+    """While the block runs, every ``localCheckpoint`` records the
+    optimized plan of the frame it checkpoints, and the window predicates
+    below walk a LogicalRDD leaf made by one of them as that plan.  So a
+    Window behind a checkpoint (an opaque leaf in the optimized plan)
+    stays visible, while the build still runs its real checkpoints:
+    nothing is built twice and the lineage stays cut."""
+    import pyspark.sql.classic.dataframe as _cd
+
+    orig = _cd.DataFrame.localCheckpoint
+
+    def local_checkpoint(self, *args, **kwargs):
+        plan = self._jdf.queryExecution().optimizedPlan()
+        out = orig(self, *args, **kwargs)
+        _CHECKPOINTED[out._jdf.queryExecution().logical().rdd().id()] = plan
+        return out
+
+    _cd.DataFrame.localCheckpoint = local_checkpoint
+    try:
+        yield
+    finally:
+        _cd.DataFrame.localCheckpoint = orig
+        _CHECKPOINTED.clear()
+
+
+def _norm(s: str) -> str:
+    return s.replace("`", "").strip()
+
+
+def _nearest_bound(node) -> list[str] | None:
+    """The grouping-expression strings of the bounding operator nearest
+    below ``node``, breadth-first ([] for a Limit or a global
+    Aggregate), or None when no Aggregate or Limit lies anywhere in the
+    subtree."""
+    frontier = _children(node)
+    while frontier:
+        nxt = []
+        for n in frontier:
+            c = n.getClass().getSimpleName()
+            if c in ("GlobalLimit", "LocalLimit"):
+                return []
+            if c == "Aggregate":
+                ges = n.groupingExpressions()
+                return [ges.apply(i).sql() for i in range(ges.size())]
+            nxt.extend(_children(n))
+        frontier = nxt
+    return None
+
+
+def _bounding_grain(node) -> list[str] | None:
+    """The grain (list of grouping-key names) of the frame ``node``
+    produces, or None when some leaf path reaches a raw scan — i.e. the
+    frame is data-sized, not grain-sized.  A Join of bounded branches
+    has the CONCATENATED grain (the frame is at most the product of
+    branch grains — the dense-grid build); a Limit or global Aggregate
+    is the constant grain []."""
+    cls = node.getClass().getSimpleName()
+    if cls == "Aggregate":
+        ges = node.groupingExpressions()
+        return [_norm(ges.apply(i).sql()) for i in range(ges.size())]
+    if cls in ("GlobalLimit", "LocalLimit"):
+        return []
+    ch = _children(node)
+    if not ch:
+        return None  # raw relation / opaque LogicalRDD leaf
+    grains = [_bounding_grain(c) for c in ch]
+    if any(g is None for g in grains):
+        return None
+    merged: list[str] = []
+    for g in grains:
+        for k in g:  # type: ignore[union-attr]
+            if k not in merged:
+                merged.append(k)
+    return merged
+
+
+def _window_sites(df: DataFrame) -> WindowSites:
+    """One depth-first walk of the OPTIMIZED LOGICAL plan that sorts
+    every Window into the three audits below.  Subquery plans hanging
+    off expressions are not traversed."""
+    sites = WindowSites([], [], [])
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "Window":
+            if node.partitionSpec().isEmpty():
+                keys = _nearest_bound(node)
+                if keys is None:
+                    sites.unbounded.append(node.simpleString(80))
+                elif keys and not _is_rank_operator_internal(keys):
+                    sites.grouped.append((node.simpleString(120), keys))
+            else:
+                ps = node.partitionSpec()
+                part_keys = [_norm(ps.apply(i).sql()) for i in range(ps.size())]
+                grain = _bounding_grain(_children(node)[-1])
+                if grain is not None:
+                    residual = [g for g in grain if g not in set(part_keys)]
+                    # The two-phase rank operators' keyed offset windows
+                    # are partitioned by the CONSUMER's key with a residual
+                    # of the internal range-id/key-id columns — a frame
+                    # bounded by the operator's `parts` constant, excluded
+                    # mechanically like the partition-less twin above.
+                    if (
+                        residual
+                        and not _is_rank_operator_internal(part_keys)
+                        and not _is_rank_operator_internal(residual)
+                    ):
+                        sites.subgrain.append(
+                            (node.simpleString(120), part_keys, residual)
+                        )
+        stack.extend(_children(node))
+    return sites
+
+
 def unbounded_global_windows(df: DataFrame) -> list[str]:
     """House plan rule as code (SCALING.md round-4 notes): a
     partition-less ``Window`` moves its WHOLE input frame into one task
     (WindowExec warns exactly this), so it is only acceptable over a
     frame some upstream operator has already collapsed.
 
-    Walks the OPTIMIZED LOGICAL plan and returns the ``simpleString`` of
-    every Window with an empty partitionSpec whose input subtree contains
-    no Aggregate and no Limit — i.e. a single-task sort of a
-    scale-proportional frame.  Known limits, documented not solved: a
+    Returns the ``simpleString`` of every Window with an empty
+    partitionSpec whose input subtree contains no Aggregate and no
+    Limit — i.e. a single-task sort of a scale-proportional frame.  A
     grouped Aggregate below the window counts as collapsing even though
     some grouping keys are themselves scale-proportional (the round-8
-    rfm shape) — reviewers still own cardinality reasoning; the gate
-    mechanically kills the window-directly-over-the-fact-scan class.
-    Subquery plans hanging off expressions are not traversed."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-
-    def children(node):
-        cs = node.children()
-        return [cs.apply(i) for i in range(cs.size())]
-
-    bounding = {"Aggregate", "GlobalLimit", "LocalLimit"}
-    out: list[str] = []
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        cls = node.getClass().getSimpleName()
-        if cls == "Window" and node.partitionSpec().isEmpty():
-            sub = children(node)
-            bounded = False
-            st = list(sub)
-            while st:
-                n = st.pop()
-                if n.getClass().getSimpleName() in bounding:
-                    bounded = True
-                    break
-                st.extend(children(n))
-            if not bounded:
-                out.append(node.simpleString(80))
-        stack.extend(children(node))
-    return out
+    rfm shape); ``grouped_global_windows`` surfaces exactly those sites
+    for ``window_gate`` to hold against a reviewed justification."""
+    return _window_sites(df).unbounded
 
 
 def grouped_global_windows(df: DataFrame) -> list[tuple[str, list[str]]]:
-    """AUDIT MODE for the documented blind spot of
-    ``unbounded_global_windows`` (round-10, VERDICT r9 item 6): a
+    """AUDIT MODE for the blind spot of ``unbounded_global_windows``: a
     partition-less Window whose subtree IS bounded by a grouped Aggregate
     passes the hard gate, yet the window's input cardinality is the
     Aggregate's GROUP COUNT — which is scale-proportional whenever a
     grouping key is an id-like grain (user_id, doc_id, l_orderkey, ...).
 
     This predicate does not judge; it SURFACES.  Returns one entry per
-    partition-less Window bounded by a grouped (non-global) Aggregate:
-    ``(window simpleString, [grouping expression strings])``.
-    ``tools/plan_report.py`` sweeps the registry with it and emits a
-    reviewed table in PLANS.md where every entry must carry a one-line
-    cardinality justification — mechanizing the review the hard gate
-    cannot do (cardinality reasoning needs the data model, not the plan).
+    partition-less Window whose NEAREST bounding operator is a grouped
+    (non-global) Aggregate: ``(window simpleString, [grouping expression
+    strings])``.  ``window_gate.unjustified_windows`` fails every such
+    site that has no one-line cardinality justification, keyed by query
+    and grouping keys, in ``window_gate.WINDOW_AUDIT_JUSTIFICATIONS``
+    (cardinality reasoning needs the data model, not the plan).
 
     Windows bounded by a Limit or by a global (no-key) Aggregate are not
     reported: their input is constant-bounded by construction."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-
-    def children(node):
-        cs = node.children()
-        return [cs.apply(i) for i in range(cs.size())]
-
-    out: list[tuple[str, list[str]]] = []
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        cls = node.getClass().getSimpleName()
-        if cls == "Window" and node.partitionSpec().isEmpty():
-            # breadth-first: the NEAREST bounding operator decides
-            frontier = children(node)
-            grouping: list[str] | None = None
-            while frontier:
-                nxt = []
-                hit = None
-                for n in frontier:
-                    c = n.getClass().getSimpleName()
-                    if c in ("GlobalLimit", "LocalLimit"):
-                        hit = ("limit", None)
-                        break
-                    if c == "Aggregate":
-                        ges = n.groupingExpressions()
-                        keys = [
-                            ges.apply(i).sql() for i in range(ges.size())
-                        ]
-                        hit = ("agg", keys)
-                        break
-                    nxt.extend(children(n))
-                if hit:
-                    kind, keys = hit
-                    if kind == "agg" and keys:
-                        grouping = keys
-                    break
-                frontier = nxt
-            if grouping and not _is_rank_operator_internal(grouping):
-                out.append((node.simpleString(120), grouping))
-        stack.extend(children(node))
-    return out
+    return _window_sites(df).grouped
 
 
 def partitioned_subgrain_windows(
     df: DataFrame,
 ) -> list[tuple[str, list[str], list[str]]]:
-    """AUDIT MODE for the SECOND blind spot (VERDICT r11): a PARTITIONED
-    Window escapes both the hard gate (it has a partitionSpec) and the
-    grouped-window audit (which only reports partition-less windows) —
-    yet when its partition keys are a PROPER SUBSET of the grouping keys
-    of the Aggregate bounding it, each partition's frame is the RESIDUAL
-    grain (all grouping keys not in the partition spec).  If the
-    partition key is a provably-tiny domain (5 groups) while the
-    residual grain is wide (a value grid), a handful of tasks each sort
-    a wide frame — the `jonckheere_ordered_trend` shape
-    (``Window.partitionBy(grp).orderBy(c)`` over an Aggregate grouped by
-    ``(grp, c)``).
+    """AUDIT MODE for the SECOND blind spot: a PARTITIONED Window escapes
+    both the hard gate (it has a partitionSpec) and the grouped-window
+    audit (which only reports partition-less windows) — yet when its
+    partition keys are a PROPER SUBSET of the grouping keys of the
+    Aggregate bounding it, each partition's frame is the RESIDUAL grain
+    (all grouping keys not in the partition spec).  If the partition key
+    is a provably-tiny domain (5 groups) while the residual grain is wide
+    (a value grid), a handful of tasks each sort a wide frame — the
+    `jonckheere_ordered_trend` shape (``Window.partitionBy(grp).orderBy(c)``
+    over an Aggregate grouped by ``(grp, c)``).
 
     This predicate does not judge; it SURFACES.  Returns one entry per
     such site: ``(window simpleString, [partition keys], [residual
-    grouping keys])``.  ``tools/plan_report.py`` sweeps the registry and
-    requires a one-line cardinality justification per site (why the
+    grouping keys])``.  ``window_gate.unjustified_windows`` fails every
+    such site unless it has a one-line justification, keyed by query and
+    partition keys, in
+    ``window_gate.SUBGRAIN_WINDOW_AUDIT_JUSTIFICATIONS`` (why the
     residual grain is scale-bounded, or why the partition-key domain is
-    wide enough to parallelize).
+    wide enough to parallelize) or every partition key is an id grain
+    (``window_gate.WIDE_PARTITION_KEYS``).
 
     Windows whose partition keys equal the WHOLE bounding grain are not
     reported (each partition holds O(1) rows); windows over
@@ -196,67 +262,7 @@ def partitioned_subgrain_windows(
     are the normal Spark idiom and are likewise out of scope (they are
     the shapes the house already accepts per key-cardinality reasoning
     at the query site)."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-
-    def children(node):
-        cs = node.children()
-        return [cs.apply(i) for i in range(cs.size())]
-
-    def norm(s: str) -> str:
-        return s.replace("`", "").strip()
-
-    def bounding_grain(node) -> list[str] | None:
-        """The grain (list of grouping-key names) of the frame ``node``
-        produces, or None when some leaf path reaches a raw scan —
-        i.e. the frame is data-sized, not grain-sized.  A Join of
-        bounded branches has the CONCATENATED grain (the frame is at
-        most the product of branch grains — the dense-grid build);
-        a Limit or global Aggregate is the constant grain []."""
-        cls = node.getClass().getSimpleName()
-        if cls == "Aggregate":
-            ges = node.groupingExpressions()
-            return [norm(ges.apply(i).sql()) for i in range(ges.size())]
-        if cls in ("GlobalLimit", "LocalLimit"):
-            return []
-        ch = children(node)
-        if not ch:
-            return None  # raw relation / LogicalRDD leaf
-        grains = [bounding_grain(c) for c in ch]
-        if any(g is None for g in grains):
-            return None
-        merged: list[str] = []
-        for g in grains:
-            for k in g:  # type: ignore[union-attr]
-                if k not in merged:
-                    merged.append(k)
-        return merged
-
-    out: list[tuple[str, list[str], list[str]]] = []
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        cls = node.getClass().getSimpleName()
-        if cls == "Window" and not node.partitionSpec().isEmpty():
-            ps = node.partitionSpec()
-            part_keys = [norm(ps.apply(i).sql()) for i in range(ps.size())]
-            grain = None
-            for c in children(node):
-                grain = bounding_grain(c)
-            if grain is not None:
-                residual = [g for g in grain if g not in set(part_keys)]
-                # The two-phase rank operators' keyed offset windows are
-                # partitioned by the CONSUMER's key with a residual of
-                # the internal range-id/key-id columns — a frame bounded by
-                # the operator's `parts` constant, excluded mechanically
-                # like the partition-less twin in grouped_global_windows.
-                if (
-                    residual
-                    and not _is_rank_operator_internal(part_keys)
-                    and not _is_rank_operator_internal(residual)
-                ):
-                    out.append((node.simpleString(120), part_keys, residual))
-        stack.extend(children(node))
-    return out
+    return _window_sites(df).subgrain
 
 
 def _is_rank_operator_internal(grouping: list[str]) -> bool:

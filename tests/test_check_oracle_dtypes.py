@@ -7,7 +7,8 @@ hash flipped while the preflight's numeric compare scored "max float delta
 0.0".  These tests pin the gate that closes that blind spot: a dtype-CLASS
 divergence must FAIL compare() even when every value matches numerically,
 while the benign divergences the driver tolerates (object-date vs
-datetime64, int32 vs int64) must still pass.
+datetime64, int32 vs int64) must still pass.  A last test pins that the
+script imports the package of the checkout it lives in.
 """
 
 from __future__ import annotations
@@ -15,7 +16,11 @@ from __future__ import annotations
 import datetime
 import importlib.util
 import os
+import shutil
+import subprocess
+import sys
 from decimal import Decimal
+from pathlib import Path
 
 import pandas as pd
 
@@ -98,3 +103,31 @@ def test_mixed_decimal_float_column_fails_regardless_of_first_value():
     odf2 = pd.DataFrame({"price": [900.5, Decimal("1.25")]})
     ok2, msg2 = compare("t", sdf2, odf2)
     assert ok2, msg2
+
+
+def test_check_oracle_imports_its_own_checkout(tmp_path):
+    """Run from a copy of the checkout, the script must check the copy's
+    package, not whichever checkout happens to sit at a fixed path."""
+    root = Path(__file__).resolve().parents[1]
+    pkg = "anomaly_detection_in_time_series_data_spark"
+    shutil.copytree(
+        root / pkg, tmp_path / pkg, ignore=shutil.ignore_patterns("__pycache__")
+    )
+    (tmp_path / "tools").mkdir()
+    for rel in ("tools/check_oracle.py", "__spark_entry__.py"):
+        shutil.copy(root / rel, tmp_path / rel)
+    probe = (
+        "import runpy, sys; runpy.run_path(sys.argv[1]); "
+        f"print(sys.modules['{pkg}'].__file__)"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", probe, str(tmp_path / "tools" / "check_oracle.py")],
+        cwd=tmp_path / "tools",
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert Path(out.stdout.strip().splitlines()[-1]).is_relative_to(tmp_path)

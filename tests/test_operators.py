@@ -64,14 +64,17 @@ def test_rolling_zscore_math(spark):
 
 def test_global_zscore_matches_definition(spark):
     vals = [1.0, 2.0, 3.0, 4.0, 100.0]
-    df = spark.createDataFrame([(i, v, "g") for i, v in enumerate(vals)],
-                               ["id", "value", "grp"])
-    out = anomaly.global_zscore(df, group_cols=["grp"], threshold=2.0)
+    # the NULL group is one group of groupBy, scored like any other
+    rows = [(i, v, "g") for i, v in enumerate(vals)]
+    rows += [(10 + i, v, None) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "id long, value double, grp string")
+    out = anomaly.global_zscore(df, group_cols=["grp"], threshold=1.5)
     flagged = {r.id for r in out.collect() if r.is_anomaly}
     mu = sum(vals) / len(vals)
     sd = math.sqrt(sum((v - mu) ** 2 for v in vals) / (len(vals) - 1))
-    expect = {i for i, v in enumerate(vals) if abs((v - mu) / sd) > 2.0}
-    assert flagged == expect
+    expect = {i for i, v in enumerate(vals) if abs((v - mu) / sd) > 1.5}
+    assert expect == {4}  # the spike's z is ~1.79
+    assert flagged == expect | {10 + i for i in expect}
 
 
 def test_exact_dedup_keeps_min_id(spark):

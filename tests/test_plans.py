@@ -6,6 +6,8 @@ These pin the plans so a refactor that silently regresses them fails CI.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.errors import PythonException
 from pyspark.sql import Window
@@ -102,6 +104,15 @@ def test_q19_disjunction_pushed_to_both_scan_sides(spark, sf_dir):
     assert plans.has_pushed_filter(df, "l_quantity")
     assert plans.has_pushed_filter(df, "p_brand")
     assert plans.has_broadcast_join(df)
+
+
+def test_null_safe_stat_join_stays_broadcast(spark, sf_dir):
+    # winsorize joins its per-group fences back on <=> keys (a NULL group
+    # keeps its rows); Catalyst still hashes <=> keys, so the fence frame
+    # broadcasts and the fact side never sort-merges.
+    df = q.QUERIES["winsorized_value_stats"](spark, sf_dir)
+    assert plans.has_broadcast_join(df)
+    assert "SortMergeJoin" not in plans.executed_plan(df)
 
 
 def test_q7_two_role_dim_join_all_broadcast(spark, sf_dir):
@@ -1011,6 +1022,99 @@ def test_grouped_window_audit_surfaces_blind_spot(spark):
     assert not plans.grouped_global_windows(glob)
 
 
+def test_window_gate_holds_sites_to_their_tables(spark):
+    """plans.window_gate on synthetic frames: a justified site passes and
+    is recorded, an unjustified grouped or subgrain site is returned
+    (also a second site in a justified query), an id-grain partition key
+    needs no entry, the hard gate has no exemption, a site behind a
+    checkpoint is gated, and an entry no site used is stale unless its
+    query shows the site below the keyed-rank size gate."""
+    from anomaly_detection_in_time_series_data_spark.operators import ranks
+    from anomaly_detection_in_time_series_data_spark.plans import window_gate as wg
+
+    df = spark.range(1000).selectExpr(
+        "id",
+        "id % 97 AS k",
+        "id % 7 AS v",
+        "id % 13 AS user_id",
+        "id % 10 AS decile",
+        "id % 5 AS event_type",
+        "id % 4 AS wk",
+    )
+
+    def grouped(key):
+        return (
+            df.groupBy(key)
+            .agg(F.sum("v").alias("s"))
+            .withColumn("r", F.row_number().over(Window.orderBy("s", key)))
+        )
+
+    def subgrain(part, checkpoint=False):
+        agg = df.groupBy(part, "k").agg(F.count("*").alias("n"))
+        if checkpoint:
+            agg = agg.localCheckpoint(eager=False)
+        return agg.withColumn(
+            "r", F.row_number().over(Window.partitionBy(part).orderBy("k"))
+        )
+
+    seen: set = set()
+    assert not wg.unjustified_windows("vocab_growth_curve", grouped("decile"), seen)
+    assert not wg.unjustified_windows("ks_value_drift", subgrain("event_type"), seen)
+    assert seen == {
+        ("WINDOW_AUDIT_JUSTIFICATIONS", ("vocab_growth_curve", "decile")),
+        ("SUBGRAIN_WINDOW_AUDIT_JUSTIFICATIONS", ("ks_value_drift", "event_type")),
+    }
+    viol = wg.unjustified_windows("synthetic", grouped("decile"))
+    assert len(viol) == 1 and "grouped Aggregate" in viol[0], viol
+    assert "('synthetic', 'decile') in WINDOW_AUDIT_JUSTIFICATIONS" in viol[0]
+    # an entry covers its own site only, not every site of its query
+    viol = wg.unjustified_windows("vocab_growth_curve", grouped("k"))
+    assert len(viol) == 1 and "('vocab_growth_curve', 'k')" in viol[0], viol
+
+    viol = wg.unjustified_windows("synthetic", subgrain("v"))
+    assert len(viol) == 1 and "residual grain (k)" in viol[0], viol
+    assert "('synthetic', 'v') in SUBGRAIN_WINDOW_AUDIT_JUSTIFICATIONS" in viol[0]
+    assert wg.unjustified_windows("synthetic", subgrain("user_id")) == []
+
+    raw = df.withColumn("r", F.row_number().over(Window.orderBy("v", "id")))
+    for name in ("synthetic", "vocab_growth_curve"):
+        viol = wg.unjustified_windows(name, raw)
+        assert len(viol) == 1 and "uncollapsed frame" in viol[0], viol
+
+    real, viol = wg.gate_query("synthetic", lambda: subgrain("v", checkpoint=True))
+    assert not plans.partitioned_subgrain_windows(real)
+    assert len(viol) == 1 and "residual grain (k)" in viol[0], viol
+
+    stale = " ".join(wg.stale_justifications(seen, {}))
+    assert "('hits_micro', 'event_type')" in stale
+    assert "('vocab_growth_curve', 'decile')" not in stale
+    assert "('ks_value_drift', 'event_type')" not in stale
+
+    def size_gated():
+        # the native per-key window exists only below the size gate
+        if ranks.KEYED_RANK_SMALL_BYTES > 2**40:
+            return subgrain("wk")
+        return df
+
+    stale = " ".join(
+        wg.stale_justifications(seen, {"borda_rank_aggregation": size_gated})
+    )
+    assert "borda_rank_aggregation" not in stale
+    assert ranks.KEYED_RANK_SMALL_BYTES < 2**40
+    everything = {
+        (table, entry)
+        for table, entries in [
+            ("WINDOW_AUDIT_JUSTIFICATIONS", wg.WINDOW_AUDIT_JUSTIFICATIONS),
+            (
+                "SUBGRAIN_WINDOW_AUDIT_JUSTIFICATIONS",
+                wg.SUBGRAIN_WINDOW_AUDIT_JUSTIFICATIONS,
+            ),
+        ]
+        for entry in entries
+    }
+    assert wg.stale_justifications(everything, {}) == []
+
+
 def test_round10_rank_rewrites_have_no_grouped_global_windows(spark, sf_dir):
     """The three round-10 audit catches (user-grain spearman ranks,
     part-grain abc cumulative share, user-grain qini ntile) must no
@@ -1257,32 +1361,41 @@ def test_windowgrouplimit_prunes_topk_windows(spark, sf_dir):
 
 
 def test_subgrain_window_rewrites(spark, sf_dir):
-    """Round-12 partitioned-subgrain-window audit outcomes, pinned:
+    """Partitioned-subgrain-window audit outcomes, pinned:
     jonckheere keeps its justified tiny-key window over the domain-
     bounded cents grid; borda_rank_aggregation and gmm_anomaly_scores
     ride keyed_exact_rank (their only remaining keyed offset windows are
     rank-operator internals, excluded mechanically); user_activity_gini
     keeps only the count-GRID window, never a user-frame one.  Swept
-    with localCheckpoint transparent — the audit must see through
-    checkpointed frames."""
-    import pyspark.sql.classic.dataframe as cd
+    with checkpoints see-through — the audit must see through
+    checkpointed frames: jonckheere's and delivery_completeness_audit's
+    sites sit behind a checkpoint, and plans.gate_query must still gate
+    and record them."""
+    from anomaly_detection_in_time_series_data_spark.operators import (
+        ranks as _ranks_mod,
+    )
 
-    orig = cd.DataFrame.localCheckpoint
-    cd.DataFrame.localCheckpoint = lambda self, eager=True: self
-    try:
+    hidden = {
+        "jonckheere_ordered_trend": "grp",
+        "delivery_completeness_audit": "event_type, missing",
+    }
+    for name, keys in hidden.items():
+        seen: set = set()
+        real, viol = plans.gate_query(
+            name, partial(q.QUERIES[name], spark, sf_dir), seen
+        )
+        assert not plans.partitioned_subgrain_windows(real), name
+        assert not viol, viol
+        assert seen == {("SUBGRAIN_WINDOW_AUDIT_JUSTIFICATIONS", (name, keys))}
+    with plans.see_through_checkpoints():
         jon = plans.partitioned_subgrain_windows(
             q.QUERIES["jonckheere_ordered_trend"](spark, sf_dir)
         )
         assert jon and jon[0][1] == ["grp"] and jon[0][2] == ["c"]
-        from anomaly_detection_in_time_series_data_spark.operators import (
-            ranks as _ranks_mod,
-        )
-
         for name in ["borda_rank_aggregation", "gmm_anomaly_scores"]:
-            # r13 size gate: above the gate (forced here via the module
+            # size gate: above the gate (forced here via the module
             # threshold) the two-phase rewrite must leave NO subgrain
-            # windows — the round-12 audit invariant, now conditional on
-            # scale as the gate intends.
+            # windows.
             _old_gate = _ranks_mod.KEYED_RANK_SMALL_BYTES
             _ranks_mod.KEYED_RANK_SMALL_BYTES = -1
             try:
@@ -1293,8 +1406,8 @@ def test_subgrain_window_rewrites(spark, sf_dir):
             finally:
                 _ranks_mod.KEYED_RANK_SMALL_BYTES = _old_gate
             # ... and AT fixture scale the gate must route to the native
-            # per-key window (VERDICT r12 item 3: small frames should not
-            # pay the two-phase fixed costs).
+            # per-key window (small frames should not pay the two-phase
+            # fixed costs).
             small_sites = plans.partitioned_subgrain_windows(
                 q.QUERIES[name](spark, sf_dir)
             )
@@ -1307,5 +1420,3 @@ def test_subgrain_window_rewrites(spark, sf_dir):
         )
         for _win, _pk, residual in gini:
             assert "user_id" not in residual, gini
-    finally:
-        cd.DataFrame.localCheckpoint = orig

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from functools import partial
 from pathlib import Path
 from unittest import mock
 
@@ -29,6 +30,7 @@ import pandas as pd
 import pytest
 
 from anomaly_detection_in_time_series_data_spark import queries as q
+from anomaly_detection_in_time_series_data_spark.plans import gate_query
 from anomaly_detection_in_time_series_data_spark.tables import TABLE_NAMES
 
 from conftest import SF_DIR
@@ -72,7 +74,9 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", _PARITY_NAMES)
 def test_oracle_parity(spark, sf_dir, duck, name):
-    sdf = q.QUERIES[name](spark, sf_dir).toPandas()
+    df, viol = gate_query(name, partial(q.QUERIES[name], spark, sf_dir))
+    assert not viol, viol
+    sdf = df.toPandas()
     odf = duck.execute(q.ORACLE[name]).df()
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf)

@@ -221,13 +221,22 @@ def test_winsorize_clamps_tails_only(spark):
     from anomaly_detection_in_time_series_data_spark.operators import robust
 
     vals = [float(i) for i in range(1, 100)] + [1000.0]  # one fat tail
-    df = spark.createDataFrame([("x", v) for v in vals], ["k", "value"])
-    out = robust.winsorized_summary(
-        df, group_cols=["k"], lo_p=0.05, hi_p=0.95
-    ).collect()[0]
+    # a NULL key is one group: its rows keep their fences, not vanish
+    df = spark.createDataFrame(
+        [(k, v) for k in ("x", None) for v in vals], "k string, value double"
+    )
+    assert robust.winsorize(df, group_cols=["k"]).count() == 2 * len(vals)
+    got = {
+        r["k"]: r
+        for r in robust.winsorized_summary(
+            df, group_cols=["k"], lo_p=0.05, hi_p=0.95
+        ).collect()
+    }
+    out = got["x"]
     assert out["n_clamped_high"] >= 1  # the 1000.0 outlier
     assert out["hi"] < 1000.0
     assert out["winsorized_mean"] < sum(vals) / len(vals)  # tail pulled in
+    assert got[None].asDict() == {**out.asDict(), "k": None}
 
 
 def test_seasonal_robust_flags_planted_spike(spark):

@@ -1,7 +1,10 @@
 """Local mimic of the driver's correctness gate: run every queries() entry
 on Spark and its oracle_sql() on DuckDB, compare row count, column names,
 and order-insensitive values. Reports per-query PASS/FAIL plus max float
-deltas so float-determinism risk is visible.
+deltas so float-determinism risk is visible.  Every built query must also
+pass the window plan gate (``plans/window_gate.py``, which also sees the
+windows behind each localCheckpoint the build makes) before it runs, and an
+unfiltered run fails on a gate entry that no query's plan uses any more.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
@@ -19,16 +22,19 @@ the other 10 round-4 exclusions (see SLOW_ORACLES below).  Pass
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
+from functools import partial
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from anomaly_detection_in_time_series_data_spark.plans.inspect import (
-    unbounded_global_windows,
+from anomaly_detection_in_time_series_data_spark.plans import (
+    gate_query,
+    stale_justifications,
 )
 from anomaly_detection_in_time_series_data_spark.session import get_spark
 from anomaly_detection_in_time_series_data_spark.tables import TABLE_NAMES
@@ -175,18 +181,6 @@ SLOW_ORACLES = {
     "holt_forecast_anomaly",
 }
 
-# Plan gate (VERDICT r8 task 3): a partition-less Window over a frame no
-# upstream Aggregate/Limit has collapsed is a single-task sort of a
-# scale-proportional input — the round-8 weak class, now mechanical.
-# Allowlisted exceptions must justify themselves here:
-#   storage_layout_scan_audit — explicitly SIMULATES a file layout with a
-#   global row_number over the fact frame; its own docstring documents
-#   that production reads parquet footers instead (VERDICT r8 acknowledged
-#   it as simulation, not plan debt).
-WINDOW_GATE_ALLOW = {
-    "storage_layout_scan_audit",
-}
-
 # Vacuous-pass gate (VERDICT r9): a PASS with 0 rows proves only that both
 # engines agree on empty — at sf0.1 `heavy_hitter_bigrams` passed for a
 # round while checking nothing because its support floor didn't scale
@@ -218,6 +212,9 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_pass = n_fail = 0
+    # (table, entry) window-gate entries some site used; on an unfiltered
+    # run an entry no site uses is stale and fails the run.
+    seen: set = set()
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -226,16 +223,11 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            df = fn(spark, sf_dir)
-            if name not in WINDOW_GATE_ALLOW:
-                viol = unbounded_global_windows(df)
-                if viol:
-                    print(
-                        f"FAIL {name}: plan gate: partition-less Window "
-                        f"over an uncollapsed frame: {viol[0][:160]}"
-                    )
-                    n_fail += 1
-                    continue
+            df, viol = gate_query(name, partial(fn, spark, sf_dir), seen)
+            if viol:
+                print(f"FAIL {name}: plan gate: {viol[0][:400]}")
+                n_fail += 1
+                continue
             sdf = df.toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
@@ -267,6 +259,11 @@ def main() -> int:
         else:
             n_fail += 1
         print(f"{status} {name}: {msg} ({len(sdf)} rows, spark {t1-t0:.1f}s)")
+    if not only and not skip_slow:
+        builders = {n: partial(f, spark, sf_dir) for n, f in qs.items()}
+        for stale in stale_justifications(seen, builders):
+            print(f"FAIL window gate: stale justification {stale}")
+            n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
