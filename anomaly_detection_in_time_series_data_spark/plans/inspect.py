@@ -53,7 +53,8 @@ def read_columns(df: DataFrame) -> list[str]:
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in executed_plan(df) or "BroadcastNestedLoopJoin" in executed_plan(df)
+    plan = executed_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def has_take_ordered(df: DataFrame) -> bool:

@@ -7,13 +7,42 @@ multi-executor cluster — only ``master`` and memory sizing change there.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import io
 import os
 import tempfile
 import zipfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[int] = set()
+
+
+@functools.cache
+def _package_zip(pkg_dir: str) -> str:
+    """Zip the ``.py`` files under ``pkg_dir`` once per process, at a temp
+    path keyed by the zip's content, so two checkouts running at once
+    never ship each other's package.  The file is renamed into place
+    whole, so no reader sees it half written."""
+    pkg_name = os.path.basename(pkg_dir)
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for path in sorted(Path(pkg_dir).rglob("*.py")):
+            arc = f"{pkg_name}/{path.relative_to(pkg_dir).as_posix()}"
+            # ZipInfo's fixed 1980 date: the same files give the same bytes
+            zf.writestr(zipfile.ZipInfo(arc), path.read_bytes())
+    data = buf.getvalue()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    zpath = os.path.join(tempfile.gettempdir(), f"{pkg_name}_pyfiles_{digest}.zip")
+    if not os.path.exists(zpath):
+        fd, part = tempfile.mkstemp(suffix=".zip.part", dir=tempfile.gettempdir())
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        os.chmod(part, 0o644)
+        os.replace(part, zpath)
+    return zpath
 
 
 def ensure_pyfiles(spark: SparkSession) -> None:
@@ -29,18 +58,7 @@ def ensure_pyfiles(spark: SparkSession) -> None:
     key = id(sc)
     if key in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zpath = os.path.join(tempfile.gettempdir(), f"{pkg_name}_pyfiles.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            for fn in filenames:
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(dirpath, fn)
-                arc = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                zf.write(full, arc)
-    sc.addPyFile(zpath)
+    sc.addPyFile(_package_zip(os.path.dirname(os.path.abspath(__file__))))
     _SHIPPED.add(key)
 
 

@@ -1,12 +1,15 @@
 from __future__ import annotations
 
+import functools
+import importlib.util
 import os
 import sys
 from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 # Suite wall-time discipline (VERDICT r12 item 2: the driver's pytest gate
 # must FINISH).  The fixtures are sf0.001 (1000-row tables): a local[32]
@@ -21,6 +24,17 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 from anomaly_detection_in_time_series_data_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@functools.cache
+def load_script(relpath: str):
+    """A repository script, such as ``tools/check_oracle.py`` (the one
+    oracle-parity verdict) or ``bench.py``, loaded as a module."""
+    path = REPO / relpath
+    spec = importlib.util.spec_from_file_location(path.stem, path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
 
 
 @pytest.fixture(scope="session")

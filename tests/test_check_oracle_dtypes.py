@@ -1,4 +1,4 @@
-"""The preflight's dtype-parity gate (tools/check_oracle.py:compare).
+"""The oracle-parity verdict: tools/check_oracle.py ``compare`` and ``check``.
 
 Round-6 lesson: `skyline_parts_pareto` was numerically identical on both
 engines, but Spark emitted decimal(18,2) (pandas object of Decimal) while
@@ -14,7 +14,6 @@ script imports the package of the checkout it lives in.
 from __future__ import annotations
 
 import datetime
-import importlib.util
 import os
 import shutil
 import subprocess
@@ -22,32 +21,16 @@ import sys
 from decimal import Decimal
 from pathlib import Path
 
+import duckdb
 import pandas as pd
+import pytest
 
-_spec = importlib.util.spec_from_file_location(
-    "check_oracle",
-    os.path.join(os.path.dirname(__file__), "..", "tools", "check_oracle.py"),
-)
-check_oracle = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check_oracle)
+from anomaly_detection_in_time_series_data_spark import queries as q
+
+from conftest import load_script
+
+check_oracle = load_script("tools/check_oracle.py")
 compare = check_oracle.compare
-
-
-def test_decimal_vs_float_fails_even_when_values_match():
-    # The exact r6 red: Decimal('900.50') vs 900.5 — numerically equal.
-    sdf = pd.DataFrame({"price": [Decimal("900.50"), Decimal("1.25")]})
-    odf = pd.DataFrame({"price": [900.5, 1.25]})
-    ok, msg = compare("t", sdf, odf)
-    assert not ok
-    assert "dtype divergence" in msg
-
-
-def test_int_vs_float_fails():
-    sdf = pd.DataFrame({"n": [1, 2, 3]})
-    odf = pd.DataFrame({"n": [1.0, 2.0, 3.0]})
-    ok, msg = compare("t", sdf, odf)
-    assert not ok
-    assert "dtype divergence" in msg
 
 
 def test_matching_ints_pass_across_widths():
@@ -103,6 +86,27 @@ def test_mixed_decimal_float_column_fails_regardless_of_first_value():
     odf2 = pd.DataFrame({"price": [900.5, Decimal("1.25")]})
     ok2, msg2 = compare("t", sdf2, odf2)
     assert ok2, msg2
+
+
+@pytest.mark.parametrize(
+    "name, spark_sql, oracle_sql, verdict",
+    [
+        ("t", "SELECT CAST(1.25 AS DECIMAL(10, 2)) v", "SELECT price v FROM t", "dtype"),
+        ("t", "SELECT 1 v", "SELECT CAST(n AS DOUBLE) v FROM t", "dtype"),
+        ("t", "SELECT 1 v WHERE false", "SELECT n v FROM t WHERE false", "vacuous"),
+        ("join_anti", "SELECT 1 v WHERE false", "SELECT n v FROM t WHERE false", "ok"),
+        ("t", "SELECT 1 v", "SELECT n v FROM t", "ok"),
+    ],
+    ids=["decimal_vs_float", "int_vs_float", "zero_rows", "zero_rows_empty_ok", "equal"],
+)
+def test_check_verdict(spark, monkeypatch, name, spark_sql, oracle_sql, verdict):
+    """``check`` end to end on synthetic builds against an in-memory DuckDB.
+    Decimal vs float64 is the round-6 red: equal values, flipped hash."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t AS SELECT 1 AS n, CAST(1.25 AS DOUBLE) AS price")
+    monkeypatch.setitem(q.ORACLE, name, oracle_sql)
+    ok, msg, _ = check_oracle.check(name, lambda: spark.sql(spark_sql), con)
+    assert ok == (verdict == "ok") and msg.startswith(verdict), msg
 
 
 def test_check_oracle_imports_its_own_checkout(tmp_path):

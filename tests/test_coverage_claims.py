@@ -5,28 +5,24 @@ Round 1 shipped 77 registered queries whose oracle status was a claim with
 no driver CORRECTNESS row (the driver checks only the first 50 registered
 names per round).  This guard makes that state impossible to reintroduce:
 every oracle claim must be (a) green in some recorded CORRECTNESS_r*.json
-or (b) inside the current first-50 window, which ``correctness_window``
+or (b) inside the current correctness window, which ``correctness_window``
 derives from those files.  Anything else fails CI.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import re
-from pathlib import Path
 
 from anomaly_detection_in_time_series_data_spark import queries as q
 
-REPO = Path(__file__).resolve().parents[1]
+from conftest import REPO, load_script
 
 
-def _recorded_green() -> set[str]:
-    green: set[str] = set()
-    for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
-        for name, row in json.load(open(f)).items():
-            if row.get("hash_match"):
-                green.add(name)
+def _newest_green() -> dict[str, int]:
+    green: dict[str, int] = {}
+    for rnd, rows in sorted(q.correctness_rounds(REPO).items()):
+        green.update((name, rnd) for name, row in rows.items() if row.get("hash_match"))
     return green
 
 
@@ -46,8 +42,8 @@ def test_every_claimed_oracle_is_registered_with_sql():
 
 def test_every_claimed_oracle_is_verified_or_scheduled():
     claimed = _claimed_oracles() & set(q.QUERIES)
-    green = _recorded_green()
-    window = set(list(q.QUERIES)[:50])
+    green = _newest_green()
+    window = set(list(q.QUERIES)[: q._WINDOW])
     orphaned = sorted(n for n in claimed if n not in green and n not in window)
     assert not orphaned, (
         "oracle claims with no green row and not in the current "
@@ -64,15 +60,15 @@ def test_impl_changed_keys_are_registered_oracles():
 
 def test_correctness_window_leads_the_registry():
     """The rotation IS the round-to-round correctness mechanism: the
-    window must be 50 distinct oracle-bearing names and the registry must
+    window must be ``_WINDOW`` distinct oracle-bearing names and the registry must
     actually start with it (a re-registration after _rotate_front would
     silently shrink coverage)."""
     window = q.correctness_window(REPO)
-    assert len(window) == 50, f"window must be exactly 50, got {len(window)}"
-    assert len(set(window)) == 50, "duplicates in the correctness window"
+    assert len(window) == q._WINDOW, f"window must be {q._WINDOW}, got {len(window)}"
+    assert len(set(window)) == q._WINDOW, "duplicates in the correctness window"
     no_sql = sorted(n for n in window if n not in q.ORACLE)
     assert not no_sql, f"window entries without oracle SQL: {no_sql}"
-    assert list(q.QUERIES)[:50] == window, (
+    assert list(q.QUERIES)[: q._WINDOW] == window, (
         "QUERIES does not start with correctness_window() — was something "
         "registered after _rotate_front()?"
     )
@@ -111,39 +107,25 @@ def test_correctness_window_ordering(tmp_path, monkeypatch):
 
 def test_correctness_window_holds_the_newest_live_changes():
     """Live _IMPL_CHANGED entries can outnumber the window's room (what
-    the never-green names leave of its 50): the window must then hold the
+    the never-green names leave of its ``_WINDOW``): the window must then hold the
     newest min(room, live) entries, so a new change is never the one
     silently deferred."""
-    green: dict[str, int] = {}
-    for f in glob.glob(str(REPO / "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        for name, row in json.load(open(f)).items():
-            if row.get("hash_match"):
-                green[name] = max(rnd, green.get(name, 0))
+    green = _newest_green()
     never = [n for n in q.ORACLE if n not in green]
     live = [n for n, rnd in q._IMPL_CHANGED.items() if n in green and green[n] <= rnd]
-    room = max(0, 50 - len(never))
+    room = max(0, q._WINDOW - len(never))
     newest = live[::-1][: min(room, len(live))]
     window = q.correctness_window(REPO)
     assert window[len(never) : len(never) + len(newest)] == newest
-    assert set(newest) <= set(list(q.QUERIES)[:50])
+    assert set(newest) <= set(list(q.QUERIES)[: q._WINDOW])
 
 
 def test_bench_headliners_are_registered_queries():
     """A typo in bench.py's HEADLINE list would crash the driver's bench
     run (KeyError at the first missing name) — fail here in seconds
     instead."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    from anomaly_detection_in_time_series_data_spark.queries import QUERIES
-
-    missing = [n for n in bench.HEADLINE if n not in QUERIES]
+    bench = load_script("bench.py")
+    missing = [n for n in bench.HEADLINE if n not in q.QUERIES]
     assert not missing, f"bench headliners not in QUERIES: {missing}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate headliner"
 

@@ -1420,3 +1420,9 @@ def test_subgrain_window_rewrites(spark, sf_dir):
         )
         for _win, _pk, residual in gini:
             assert "user_id" not in residual, gini
+
+
+def test_broadcast_join_check_renders_the_plan_once(monkeypatch):
+    renders = []
+    monkeypatch.setattr(plans.inspect, "executed_plan", lambda df: renders.append(df) or "")
+    assert not plans.has_broadcast_join("df") and renders == ["df"]

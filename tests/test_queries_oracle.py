@@ -1,56 +1,40 @@
-"""Oracle parity tests: queries() entries with an oracle_sql() twin must
-match DuckDB exactly (row count, column names, order-insensitive values) at
-sf0.001 — the same gate the driver runs at sf0.01.
+"""Oracle parity at sf0.001.  Each case takes its verdict from
+``tools/check_oracle.py:check``, the function the oracle gate runs, so
+this file cannot pass a result the gate fails.
 
-Suite wall-time discipline (VERDICT r12 item 2): parametrizing over ALL
-~430 oracles made this one file a 15+ minute sweep that DUPLICATES two
-independent gates — the driver's own CORRECTNESS run (50-name window at
-sf0.01) and `tools/check_oracle.py` / `tools/preflight.py` (all oracles,
-run every round and before every commit).  By default this file now
-mirrors the oracle gate: the FIRST-50 registered names (the current
-rotation window), plus the window the gate checked last (the newest
-CORRECTNESS_r*.json), plus the window as it would be without the
-``_IMPL_CHANGED`` promotions (the names new entries push out), so neither
-a rotation nor a new ``_IMPL_CHANGED`` entry drops a parity test the
-previous commit ran.  Set ``ADTS_FULL_ORACLE=1`` for the full sweep
-(preflight covers the same ground without pytest overhead).
+A sweep of every oracle takes 15+ minutes and repeats check_oracle.py, so
+by default it checks the current correctness window (the first
+``queries._WINDOW`` names), the window the gate checked last (the newest
+``CORRECTNESS_r*.json``) and the window without the ``_IMPL_CHANGED``
+promotions (the names new entries push out), so no rotation drops a case
+the previous commit ran.  ``ADTS_FULL_ORACLE=1`` checks every oracle.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import re
 from functools import partial
-from pathlib import Path
 from unittest import mock
 
-import duckdb
-import pandas as pd
 import pytest
 
 from anomaly_detection_in_time_series_data_spark import queries as q
-from anomaly_detection_in_time_series_data_spark.plans import gate_query
-from anomaly_detection_in_time_series_data_spark.tables import TABLE_NAMES
 
-from conftest import SF_DIR
+from conftest import REPO, SF_DIR, load_script
+
+check_oracle = load_script("tools/check_oracle.py")
 
 if os.environ.get("ADTS_FULL_ORACLE"):
     _PARITY_NAMES = sorted(q.ORACLE)
 else:
-    _root = Path(__file__).resolve().parents[1]
-    _rounds = {
-        int(m.group(1)): p
-        for p in _root.glob("CORRECTNESS_r*.json")
-        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
-    }
-    _last = json.loads(_rounds[max(_rounds)].read_text()) if _rounds else {}
+    _rounds = q.correctness_rounds(REPO)
+    _last = _rounds[max(_rounds)] if _rounds else {}
     with mock.patch.object(q, "_IMPL_CHANGED", {}):
-        _unpromoted = q.correctness_window(_root)
+        _unpromoted = q.correctness_window(REPO)
     _PARITY_NAMES = list(
         dict.fromkeys(
             n
-            for n in [*list(q.QUERIES)[:50], *_unpromoted, *_last]
+            for n in [*list(q.QUERIES)[: q._WINDOW], *_unpromoted, *_last]
             if n in q.ORACLE
         )
     )
@@ -58,39 +42,15 @@ else:
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = check_oracle.oracle_db(SF_DIR)
     yield con
     con.close()
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
 @pytest.mark.parametrize("name", _PARITY_NAMES)
 def test_oracle_parity(spark, sf_dir, duck, name):
-    df, viol = gate_query(name, partial(q.QUERIES[name], spark, sf_dir))
-    assert not viol, viol
-    sdf = df.toPandas()
-    odf = duck.execute(q.ORACLE[name]).df()
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    assert len(sdf) == len(odf)
-    a, b = _canon(sdf), _canon(odf)
-    for col in a.columns:
-        if a[col].dtype.kind == "f" or b[col].dtype.kind == "f":
-            xa = a[col].astype(float).to_numpy()
-            ya = b[col].astype(float).to_numpy()
-            mask = ~(pd.isna(xa) & pd.isna(ya))
-            assert (xa[mask] == ya[mask]).all(), f"float col {col} differs"
-        else:
-            assert (
-                a[col].astype(str).to_numpy() == b[col].astype(str).to_numpy()
-            ).all(), f"col {col} differs"
+    ok, msg, _ = check_oracle.check(name, partial(q.QUERIES[name], spark, sf_dir), duck)
+    assert ok, msg
 
 
 def test_every_query_analyzes(spark, sf_dir):
@@ -112,7 +72,7 @@ def test_every_query_analyzes(spark, sf_dir):
 
 
 def test_queries_execute(spark, sf_dir):
-    """EXECUTION smoke (count() runs the physical plan).  The front-50
+    """EXECUTION smoke (count() runs the physical plan).  The front
     window already executes via the parity test above, so the default
     covers the NEXT 100 registered names — runtime-only failure classes
     (UDF crashes, bad casts at execution) get rotating-window coverage
@@ -122,7 +82,7 @@ def test_queries_execute(spark, sf_dir):
     names = (
         list(q.QUERIES)
         if os.environ.get("ADTS_FULL_ORACLE")
-        else list(q.QUERIES)[50:150]
+        else list(q.QUERIES)[q._WINDOW : q._WINDOW + 100]
     )
     for name in names:
         df = q.QUERIES[name](spark, sf_dir)

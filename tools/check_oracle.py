@@ -1,34 +1,30 @@
-"""Local mimic of the driver's correctness gate: run every queries() entry
-on Spark and its oracle_sql() on DuckDB, compare row count, column names,
-and order-insensitive values. Reports per-query PASS/FAIL plus max float
-deltas so float-determinism risk is visible.  Every built query must also
-pass the window plan gate (``plans/window_gate.py``, which also sees the
-windows behind each localCheckpoint the build makes) before it runs, and an
-unfiltered run fails on a gate entry that no query's plan uses any more.
+"""The one oracle-parity verdict, and a local mimic of the driver's
+correctness gate.  ``check`` builds a query under the window plan gate
+(``plans/window_gate.py``, which also sees the windows behind each
+localCheckpoint the build makes), collects it, runs its oracle_sql() twin
+on DuckDB and ``compare``s the two.  The parity tests and preflight take
+their verdict from ``check``, perfbench from ``compare``.
 
-Usage: python tools/check_oracle.py [sf_dir] [query ...]
+Usage: python tools/check_oracle.py [sf_dir] [query ...] [--skip-slow]
 
-Scale note: only TWO oracles remain impractically slow in DuckDB beyond
-the driver's sf0.01 gate (the ORACLE is the bottleneck, not the engine —
-the Spark side of each passes its bench budget at sf0.1):
-ewma_anomaly_scores and holt_forecast_anomaly, whose recursive CTEs
-advance ONE row per key per iteration and re-join the full seq table
-each step (~20k iterations at sf0.1) — the float op sequence under test
-cannot be batched without changing its bit pattern.  Round 8 graduated
-the other 10 round-4 exclusions (see SLOW_ORACLES below).  Pass
---skip-slow to apply the exclusion list automatically.
+Prints one PASS / PASS-EMPTY / FAIL / SKIP line per query, then
+"N pass, M fail"; an unfiltered run also fails on a window gate entry that
+no query's plan uses any more.  --skip-slow skips SLOW_ORACLES.
 """
 
 from __future__ import annotations
 
-import math
+import datetime
+import decimal
 import os
 import sys
 import time
+from collections.abc import Callable
 from functools import partial
 
 import duckdb
 import pandas as pd
+from pyspark.sql import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,6 +36,30 @@ from anomaly_detection_in_time_series_data_spark.session import get_spark
 from anomaly_detection_in_time_series_data_spark.tables import TABLE_NAMES
 
 import __spark_entry__ as entrymod
+
+# The two recurrences whose oracle is a recursive CTE that advances one row
+# per key per iteration and re-joins the full seq table each step (~20k
+# iterations, >10 min at sf0.1); batching it would change the float op
+# sequence under test.  tools/slow_oracle_tier.py hash-checks both each
+# round on a half-scale derivation of sf0.1.
+SLOW_ORACLES = {
+    "ewma_anomaly_scores",
+    "holt_forecast_anomaly",
+}
+
+# A 0-row PASS proves only that both engines agree on empty (at sf0.1
+# `heavy_hitter_bigrams` once passed while checking nothing because its
+# support floor did not scale with the corpus), so compare() fails it
+# unless the query is named here.  Only queries whose EMPTINESS IS THE
+# ASSERTION belong here, never floor/threshold artifacts (scale the floor):
+#   join_anti   — asserts every customer has an order in the fixture: the
+#                 empty anti-join is the referential-integrity check.
+#   set_except  — asserts customer nationkeys are a subset of supplier
+#                 nationkeys: the empty EXCEPT is the subset proof.
+EMPTY_OK = {
+    "join_anti",
+    "set_except",
+}
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -54,15 +74,30 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
+def _cls(v) -> str:
+    if isinstance(v, decimal.Decimal):
+        return "decimal"
+    if isinstance(v, bool):
+        return "bool"
+    if isinstance(v, int):
+        return "int"
+    if isinstance(v, float):
+        return "float"
+    if isinstance(v, (datetime.date, datetime.datetime)):
+        return "date"
+    return "str"
+
+
 def _kind(s: pd.Series) -> str:
     """Coarse dtype class for the parity check.  Decimal columns surface
     in pandas as object dtype; dates surface as object (Spark) OR
-    datetime64 (DuckDB) — the driver's hash canonicalizes dates
-    consistently (date-emitting queries have been tri-green since r3),
-    so both map to 'date' here.  Numeric classes do NOT merge: the r6
-    red (`skyline_parts_pareto`) was numerically identical on both
-    engines but Spark returned Decimal objects where DuckDB's pandas
-    bridge returned float64, and the driver's value hash diverged."""
+    datetime64 (DuckDB), which the driver's hash treats alike, so both map
+    to 'date'.  Numeric classes do NOT merge: `skyline_parts_pareto` was
+    numerically identical on both engines but Spark returned Decimal
+    objects where DuckDB's pandas bridge returned float64, and the
+    driver's value hash diverged.  An object column is classified by a
+    bounded sample, not its first value, so a mixed Decimal/float column
+    shows as its own 'mixed:' kind."""
     k = s.dtype.kind
     if k in "iu":
         return "int"
@@ -72,32 +107,9 @@ def _kind(s: pd.Series) -> str:
         return "bool"
     if k == "M":
         return "date"
-    nonnull = s.dropna()
-    if nonnull.empty:
+    kinds = {_cls(v) for v in s.dropna().head(200)}
+    if not kinds:
         return "empty"
-    import datetime
-    import decimal
-
-    def _cls(v) -> str:
-        if isinstance(v, decimal.Decimal):
-            return "decimal"
-        if isinstance(v, bool):
-            return "bool"
-        if isinstance(v, int):
-            return "int"
-        if isinstance(v, float):
-            return "float"
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return "date"
-        return "str"
-
-    # ADVICE r7: classifying by the FIRST value only lets a mixed
-    # Decimal/float column — the exact r6 hash-flip class this gate was
-    # added for — slip through when the first sampled value matches the
-    # oracle's class.  Classify a bounded sample of distinct value types
-    # and surface heterogeneity as its own kind (never equal across
-    # engines unless identically mixed, and visible in the message).
-    kinds = {_cls(v) for v in nonnull.head(200)}
     if len(kinds) > 1:
         return "mixed:" + ",".join(sorted(kinds))
     return kinds.pop()
@@ -108,15 +120,13 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]
         return False, f"columns differ: {sorted(sdf.columns)} vs {sorted(odf.columns)}"
     if len(sdf) != len(odf):
         return False, f"row count differs: {len(sdf)} vs {len(odf)}"
-    # Dtype parity gate (r6 lesson): a Decimal-vs-float64 (or int-vs-float)
-    # divergence scores "max float delta 0.0" in the numeric compare below
-    # yet hash-flips at the driver.  Fail BEFORE comparing values so the
-    # class is visible in preflight, not first seen in CORRECTNESS_r*.json.
+    if len(sdf) == 0 and name not in EMPTY_OK:
+        return False, "vacuous: 0 rows on both engines (scale the floor or see EMPTY_OK)"
+    # A Decimal-vs-float64 (or int-vs-float) divergence matches value for
+    # value below yet flips the driver's hash, so it fails first.
     for col in sdf.columns:
         ks, ko = _kind(sdf[col]), _kind(odf[col])
-        if "empty" in (ks, ko):
-            continue
-        if ks != ko:
+        if ks != ko and "empty" not in (ks, ko):
             return (
                 False,
                 f"dtype divergence on col {col}: spark={ks}"
@@ -124,78 +134,56 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]
                 "the driver's value hash will flip even if values match",
             )
     a, b = canon(sdf), canon(odf)
-    max_delta = 0.0
     for col in a.columns:
         x, y = a[col], b[col]
         if x.dtype.kind == "f" or y.dtype.kind == "f":
-            xa = x.astype(float).to_numpy()
-            ya = y.astype(float).to_numpy()
-            # One-sided NaN/NULL must FAIL: abs(x - NaN) is NaN and
-            # "NaN > 0" is False in numpy, which would silently pass.
-            one_nan = pd.isna(xa) != pd.isna(ya)
-            if one_nan.any():
-                i = int(one_nan.argmax())
-                return (
-                    False,
-                    f"float col {col}: one-sided NaN/NULL at canon row {i}: "
-                    f"{xa[i]!r} vs {ya[i]!r}",
-                )
-            both_nan = pd.isna(xa) & pd.isna(ya)
-            diff = abs(xa - ya)
-            diff[both_nan] = 0.0
-            if (diff > 0).any():
-                max_delta = max(max_delta, float(diff.max()))
-                if float(diff.max()) > 0:
-                    return False, f"float col {col}: max|delta|={diff.max():.3e}"
+            xs, ys = x.astype(float).to_numpy(), y.astype(float).to_numpy()
+            # NaN != NaN, so a one-sided NaN/NULL differs; two do not.
+            neq = (xs != ys) & ~(pd.isna(xs) & pd.isna(ys))
         else:
-            xs = x.astype(str).to_numpy()
-            ys = y.astype(str).to_numpy()
+            xs, ys = x.astype(str).to_numpy(), y.astype(str).to_numpy()
             neq = xs != ys
-            if neq.any():
-                i = int(neq.argmax())
-                return (
-                    False,
-                    f"col {col} differs at canon row {i}: {xs[i]!r} vs {ys[i]!r}",
-                )
-    return True, f"ok (max float delta {max_delta:.1e})"
+        if neq.any():
+            i = int(neq.argmax())
+            return False, f"col {col} differs at canon row {i}: {xs[i]!r} vs {ys[i]!r}"
+    return True, "ok"
 
 
-# Round 8 graduated 10 of the 12 round-4 exclusions (VERDICT r7 task 4):
-# the five all-pairs edge-derivation oracles were rewritten as bounded
-# shingle-inverted-index joins (bit-identical edge set — a zero-overlap
-# pair can never reach the Jaccard threshold) and pass at sf0.1 in
-# seconds; embedding_near_dup_pairs / minhash_dedup_keep /
-# golden_record_survivorship / greedy_pack_assignments were re-measured
-# at 1.0s / 21.9s / 14.7s / 23.1s in DuckDB at sf0.1 (the round-4 "slow"
-# classification was stale), measured by the round-8 sf0.1 sweep.
-# Only the two one-row-per-key-per-iteration recurrences remain: their
-# recursive CTE joins the full seq table once per row index (~20k
-# iterations at sf0.1, >10 min measured), and the float op sequence
-# cannot be batched without changing the bit pattern under test.
-# They are NOT standing skips: tools/slow_oracle_tier.py hash-checks
-# both each round on a deterministic half-scale derivation of sf0.1
-# (events filtered to user_id % 2 == 0 — ~10k iterations, same
-# recurrence, 5x the sf0.01 rows).
-SLOW_ORACLES = {
-    "ewma_anomaly_scores",
-    "holt_forecast_anomaly",
-}
+def oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
 
-# Vacuous-pass gate (VERDICT r9): a PASS with 0 rows proves only that both
-# engines agree on empty — at sf0.1 `heavy_hitter_bigrams` passed for a
-# round while checking nothing because its support floor didn't scale
-# with the corpus.  A 0-row result now FAILS unless the query is
-# annotated here, and annotation is reserved for queries whose EMPTINESS
-# IS THE ASSERTION (a data property both engines must derive), never for
-# floor/threshold artifacts (fix the floor to scale instead):
-#   join_anti   — asserts every customer has an order in the fixture: the
-#                 empty anti-join is the referential-integrity check.
-#   set_except  — asserts customer nationkeys are a subset of supplier
-#                 nationkeys: the empty EXCEPT is the subset proof.
-EMPTY_OK = {
-    "join_anti",
-    "set_except",
-}
+
+def check(
+    name: str,
+    build: Callable[[], DataFrame],
+    con: duckdb.DuckDBPyConnection,
+    seen: set | None = None,
+) -> tuple[bool | None, str, int]:
+    """The parity verdict for query ``name``: ``build()`` it under the
+    window plan gate, collect it, run its oracle SQL on ``con`` and
+    ``compare``.  Returns (ok, message, Spark row count); ok is None for a
+    query with no oracle SQL.  ``seen`` collects the gate entries used."""
+    try:
+        df, viol = gate_query(name, build, seen)
+        if viol:
+            return False, f"plan gate: {viol[0][:400]}", 0
+        sdf = df.toPandas()
+    except Exception as e:  # noqa: BLE001
+        return False, f"spark error: {type(e).__name__}: {str(e)[:300]}", 0
+    sql = entrymod.oracle_sql().get(name)
+    if sql is None:
+        return None, "rows-only", len(sdf)
+    try:
+        odf = con.execute(sql).df()
+    except Exception as e:  # noqa: BLE001
+        return False, f"duckdb error: {type(e).__name__}: {str(e)[:300]}", len(sdf)
+    return (*compare(name, sdf, odf), len(sdf))
 
 
 def main() -> int:
@@ -204,13 +192,8 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_db(sf_dir)
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     n_pass = n_fail = 0
     # (table, entry) window-gate entries some site used; on an unfiltered
     # run an entry no site uses is stale and fails the run.
@@ -222,43 +205,11 @@ def main() -> int:
             print(f"SKIP {name}: slow-oracle exclusion (--skip-slow)")
             continue
         t0 = time.time()
-        try:
-            df, viol = gate_query(name, partial(fn, spark, sf_dir), seen)
-            if viol:
-                print(f"FAIL {name}: plan gate: {viol[0][:400]}")
-                n_fail += 1
-                continue
-            sdf = df.toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        t1 = time.time()
-        if name not in oracles:
-            print(f"SKIP {name}: rows-only ({len(sdf)} rows, {t1-t0:.1f}s)")
-            continue
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        ok, msg = compare(name, sdf, odf)
-        if ok and len(sdf) == 0 and name not in EMPTY_OK:
-            ok, msg = False, (
-                "vacuous: 0 rows at this tier (both engines agree on "
-                "empty, so the values check proves nothing) — scale the "
-                "query's floor with the corpus or annotate EMPTY_OK with "
-                "a why-emptiness-is-the-assertion justification"
-            )
-        status = "PASS" if ok else "FAIL"
-        if ok and len(sdf) == 0:
-            status = "PASS-EMPTY"
-        if ok:
-            n_pass += 1
-        else:
-            n_fail += 1
-        print(f"{status} {name}: {msg} ({len(sdf)} rows, spark {t1-t0:.1f}s)")
+        ok, msg, rows = check(name, partial(fn, spark, sf_dir), con, seen)
+        status = {None: "SKIP", False: "FAIL", True: "PASS" if rows else "PASS-EMPTY"}
+        print(f"{status[ok]} {name}: {msg} ({rows} rows, {time.time() - t0:.1f}s)")
+        n_pass += ok is True
+        n_fail += ok is False
     if not only and not skip_slow:
         builders = {n: partial(f, spark, sf_dir) for n, f in qs.items()}
         for stale in stale_justifications(seen, builders):

@@ -9,9 +9,10 @@ Stages:
   2. vanilla entry  — ``entry(spark)`` on a VANILLA SparkSession (the
      driver does not use our tuned get_spark; conf the engine needs must
      live inside load_table)
-  3. window run     — every front-window (first 50) query executes on the
-     vanilla session
-  4. oracle gate    — delegates to check_oracle.py (full hash compare)
+  3. window run     — every correctness-window query (the first
+     ``queries._WINDOW``) executes on the vanilla session
+  4. oracle gate    — delegates to check_oracle.py, whose ``check`` is the
+     one parity verdict (the parity tests call it too)
 
 Stage 4 re-uses check_oracle's tuned session; stages 1-3 are the
 driver-fidelity checks check_oracle cannot give you.
@@ -43,6 +44,7 @@ def main() -> int:
     print(f"      all {len(TABLE_NAMES)} tables load")
 
     import __spark_entry__ as m
+    from anomaly_detection_in_time_series_data_spark.queries import _WINDOW
 
     print("[2/4] entry() on vanilla session")
     rows = len(m.entry(spark).collect())
@@ -52,7 +54,7 @@ def main() -> int:
     print("[3/4] front-window execution on vanilla session")
     qs = m.queries()
     failures = []
-    for name in list(qs)[:50]:
+    for name in list(qs)[:_WINDOW]:
         try:
             qs[name](spark, SF_DIR).count()
         except Exception as e:  # noqa: BLE001 — report and continue
@@ -61,7 +63,7 @@ def main() -> int:
         for name, err in failures:
             print(f"      FAIL {name}: {err}")
         return 1
-    print("      50/50 execute")
+    print(f"      {_WINDOW}/{_WINDOW} execute")
 
     print("[4/4] oracle gate (check_oracle.py)")
     rc = subprocess.call(
