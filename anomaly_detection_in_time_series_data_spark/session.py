@@ -25,7 +25,9 @@ def _package_zip(pkg_dir: str) -> str:
     """Zip the ``.py`` files under ``pkg_dir`` once per process, at a temp
     path keyed by the zip's content, so two checkouts running at once
     never ship each other's package.  The file is renamed into place
-    whole, so no reader sees it half written."""
+    whole, so no reader sees it half written. A changed package thus
+    always has a new path and inode, which the workers' zip directory
+    cache (the package's ``_cache_zip_directories``) relies on."""
     pkg_name = os.path.basename(pkg_dir)
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as zf:

@@ -295,9 +295,22 @@ def _pair_kernel_input(spark, case):
     rows at 9-minute spacing inside one ISO week — 1,093 subsequences,
     more than one 1024-wide column tile, with tied values. ``null_key``:
     keys ``'a'`` and NULL over 100 hourly rows each (one ISO week); the
-    NULL key is one group on both implementations."""
+    NULL key is one group on both implementations. ``gap_week``: one key
+    with 30 rows in ISO week 1, none in week 2, 5 (fewer than m=8) in
+    week 3 and 30 in week 4, so subsequences that start late in a week run
+    on into the key's next non-empty week."""
     t0 = dt.datetime(2024, 1, 1)  # a Monday
-    if case == "null_key":
+    if case == "gap_week":
+        offsets = (
+            [dt.timedelta(hours=4 * i) for i in range(30)]
+            + [dt.timedelta(days=14, hours=12 * i) for i in range(5)]
+            + [dt.timedelta(days=21, hours=4 * i) for i in range(30)]
+        )
+        rows = [
+            ("g", t0 + off, i, float((i * 37 % 113) / 7.0))
+            for i, off in enumerate(offsets)
+        ]
+    elif case == "null_key":
         rows = [
             (k, t0 + dt.timedelta(hours=i), i, float((i * 37 % 113) / 7.0))
             for k in ("a", None)
@@ -323,7 +336,9 @@ def _pair_kernel_input(spark, case):
     return df, key_col
 
 
-@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile", "null_key"])
+@pytest.mark.parametrize(
+    "case", ["string", "bigint", "cross_tile", "null_key", "gap_week"]
+)
 def test_weekly_discords_chunked_bitexact_vs_join(spark, case):
     """The chunked numpy kernel must reproduce the self-join formulation
     BIT-FOR-BIT (same left-to-right distance accumulation), on data with
@@ -345,11 +360,15 @@ def test_weekly_discords_chunked_bitexact_vs_join(spark, case):
         for r in timeseries.weekly_discords(df, impl="join", **kw).collect()
     }
     assert fast == slow  # includes exact float equality on profile_d2
+    if case == "gap_week":  # week 3's 5 starts are trivial matches of each other
+        assert len(fast) == 2
     if case == "null_key":
         assert {k for k, _ in fast} == {"a", None}
 
 
-@pytest.mark.parametrize("case", ["string", "bigint", "cross_tile", "null_key"])
+@pytest.mark.parametrize(
+    "case", ["string", "bigint", "cross_tile", "null_key", "gap_week"]
+)
 def test_weekly_motifs_chunked_bitexact_vs_join(spark, case):
     """The motif chunked kernel must reproduce the self-join + struct-MIN
     formulation BIT-FOR-BIT, including the (d2, pos_a, pos_b) lexicographic
