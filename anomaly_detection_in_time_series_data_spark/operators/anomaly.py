@@ -16,10 +16,13 @@ codegen, no Python in the hot path. At 100 TB the window partitions by
 (`global_zscore`) is a two-pass agg+broadcast-join, which scales better than
 a sort-based window; both are provided.
 
-The EWMA and Holt scorers are sequential recurrences, so they run a per-row
-Python loop inside ``applyInPandas``: one skeleton, ``_handoff_scan``, owns
-the sort, the loop, the output schema and the chunked state handoff, and
-each scorer supplies only its zero state, its step and its per-row score.
+The EWMA, Holt and running (Welford) z-score scorers are sequential
+recurrences, so they run one per-row Python loop, ``_scan``, which owns the
+sort, the loop and the output frame; each scorer supplies only its
+``(init, step, emit)`` triple: zero state, step and per-row score.  In
+batch ``_handoff_scan`` runs the loop inside ``applyInPandas`` (with an
+optional chunked state handoff); on a stream
+``streaming.anomaly_stream._stream_scan`` runs it from ``GroupState``.
 """
 
 from __future__ import annotations
@@ -203,6 +206,62 @@ def rolling_zscore_chunked(
     )
 
 
+def _scan_schema(
+    df: DataFrame, key_col: str, ts_col: str, score_col: str
+) -> T.StructType:
+    """``_scan``'s output with the input's key and timestamp types."""
+    return T.StructType(
+        [
+            T.StructField(key_col, df.schema[key_col].dataType),
+            T.StructField("event_ts", df.schema[ts_col].dataType),
+            T.StructField("value", T.DoubleType()),
+            T.StructField(score_col, T.DoubleType()),
+            T.StructField("is_anomaly", T.BooleanType()),
+        ]
+    )
+
+
+def _state_fields(init: tuple) -> list[T.StructField]:
+    """State columns ``_s0, _s1, ...`` of ``init``'s slots: long for an int
+    (a count), double for a float."""
+    return [
+        T.StructField(f"_s{i}", T.LongType() if isinstance(z, int) else T.DoubleType())
+        for i, z in enumerate(init)
+    ]
+
+
+def _scan(
+    pdf: pd.DataFrame,
+    state: tuple,
+    *,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    order: list[str],
+    step: Callable,
+    emit: Callable,
+    score_col: str,
+) -> tuple[pd.DataFrame, tuple]:
+    """The row loop of every sequential scorer, batch and stream: sort
+    ``pdf`` by ``order``; per row, ``emit(*state, x)`` is its ``(score,
+    flag)`` from the state of STRICTLY PRIOR rows (so an outlier cannot
+    mask itself), then ``state = step(*state, x)``.  Returns the
+    ``key, event_ts, value, <score_col>, is_anomaly`` frame and the end
+    state."""
+    pdf = pdf.sort_values(order)
+    xs = pdf[value_col].to_numpy(dtype=float)
+    scores = np.full(len(xs), np.nan)
+    flags = np.zeros(len(xs), dtype=bool)
+    for i, x in enumerate(xs):
+        scores[i], flags[i] = emit(*state, x)
+        state = step(*state, x)
+    out = pd.DataFrame(
+        {key_col: pdf[key_col], "event_ts": pdf[ts_col], "value": xs,
+         score_col: scores, "is_anomaly": flags}
+    )
+    return out, state
+
+
 def _handoff_scan(
     df: DataFrame,
     *,
@@ -216,17 +275,11 @@ def _handoff_scan(
     emit: Callable,
     score_col: str,
 ) -> DataFrame:
-    """The sequential per-key scorer behind the EWMA and Holt operators;
-    returns ``key, event_ts, value, <score_col>, is_anomaly`` with the
-    input's key type.
-
-    One loop scores each key's rows in ``(ts, tiebreak)`` order, starting
-    from the state ``init``: ``emit(*state, x)`` is the row's ``(score,
-    flag)`` from the state of STRICTLY PRIOR rows (so an outlier cannot
-    mask itself), then ``state = step(*state, x)``.  With ``chunk=None``
-    each key is one group, parallelism #keys.  Otherwise time is cut into
-    ``chunk`` buckets and the work is split so the unavoidable sequential
-    part is minimal:
+    """The batch per-key scorer behind the EWMA and Holt operators: runs
+    ``_scan`` over each key's rows in ``(ts, tiebreak)`` order, starting
+    from the state ``init``.  With ``chunk=None`` each key is one group,
+    parallelism #keys.  Otherwise time is cut into ``chunk`` buckets and
+    the work is split so the unavoidable sequential part is minimal:
 
     1. **State pass** (parallel over keys): a bare scan per key that only
        records the state at each chunk entry — no scores, no per-row
@@ -245,7 +298,11 @@ def _handoff_scan(
     ``ts`` keep their nondeterministic incoming order."""
     order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
     base = df.select(key_col, value_col, *order)
-    state_cols = [f"_s{i}" for i in range(len(init))]
+    state_cols = [f.name for f in _state_fields(init)]
+    loop = dict(
+        key_col=key_col, ts_col=ts_col, value_col=value_col, order=order,
+        step=step, emit=emit, score_col=score_col,
+    )
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         state = init
@@ -256,22 +313,7 @@ def _handoff_scan(
             row = pdf.loc[entry, state_cols].iloc[0]
             state = tuple(type(z)(v) for z, v in zip(init, row))
             pdf = pdf[~entry]
-        pdf = pdf.sort_values(order)
-        xs = pdf[value_col].to_numpy(dtype=float)
-        scores = np.full(len(xs), np.nan)
-        flags = np.zeros(len(xs), dtype=bool)
-        for i, x in enumerate(xs):
-            scores[i], flags[i] = emit(*state, x)
-            state = step(*state, x)
-        return pd.DataFrame(
-            {
-                key_col: pdf[key_col],
-                "event_ts": pdf[ts_col],
-                "value": xs,
-                score_col: scores,
-                "is_anomaly": flags,
-            }
-        )
+        return _scan(pdf, state, **loop)[0]
 
     def states(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order)
@@ -294,26 +336,14 @@ def _handoff_scan(
         base = base.withColumn("_chunk", F.window(F.col(ts_col), chunk).start)
         state_schema = T.StructType(
             [base.schema[key_col], base.schema["_chunk"]]
-            + [
-                T.StructField(
-                    c, T.LongType() if isinstance(z, int) else T.DoubleType()
-                )
-                for c, z in zip(state_cols, init)
-            ]
+            + _state_fields(init)
         )
         entry = base.groupBy(key_col).applyInPandas(states, schema=state_schema)
         base = base.unionByName(entry, allowMissingColumns=True)
         groups.append("_chunk")
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, df.schema[key_col].dataType),
-            T.StructField("event_ts", df.schema[ts_col].dataType),
-            T.StructField("value", T.DoubleType()),
-            T.StructField(score_col, T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType()),
-        ]
+    return base.groupBy(*groups).applyInPandas(
+        score, schema=_scan_schema(df, key_col, ts_col, score_col)
     )
-    return base.groupBy(*groups).applyInPandas(score, schema=out_schema)
 
 
 def _ewma_step(
@@ -332,9 +362,32 @@ def _ewma_step(
     return mu, var, n + 1
 
 
+def _welford(threshold: float, min_points: int) -> dict:
+    """The running z-score's ``(init, step, emit)`` triple: Welford state
+    (count, mean, sum of squared deviations); each row is scored against
+    the mean and sample std of ALL prior rows of its key."""
+
+    def step(n, mean, m2, x):
+        n += 1
+        delta = x - mean
+        mean += delta / n
+        return n, mean, m2 + delta * (x - mean)
+
+    def emit(n, mean, m2, x):
+        if n >= min_points and m2 > 0:
+            std = (m2 / (n - 1)) ** 0.5
+            if std > 1e-12:
+                z = (x - mean) / std
+                return z, abs(z) > threshold
+        return np.nan, False
+
+    return dict(init=(0, 0.0, 0.0), step=step, emit=emit, score_col="zscore")
+
+
 def _ewma(alpha: float, threshold: float, min_points: int) -> dict:
-    """The EWMA scorer's ``_handoff_scan`` wiring, shared by
-    ``ewma_anomaly`` and ``ewma_anomaly_chunked``."""
+    """The EWMA scorer's ``(init, step, emit)`` triple, shared by
+    ``ewma_anomaly``, ``ewma_anomaly_chunked`` and
+    ``streaming.anomaly_stream.streaming_ewma``."""
 
     def emit(mu, var, n, x):
         if n >= min_points and var > 1e-24:
@@ -441,6 +494,24 @@ def _holt_step(
     return l, b, r, n + 1
 
 
+def _holt(
+    alpha: float, beta: float, gamma: float, threshold: float, min_points: int
+) -> dict:
+    """The Holt scorer's ``(init, step, emit)`` triple: the score is the
+    one-step-ahead forecast."""
+
+    def emit(l, b, r, n, x):
+        flag = n >= min_points and r > 1e-24 and abs(x - (l + b)) > threshold * r
+        return (l + b if n > 0 else np.nan), flag
+
+    return dict(
+        init=(0.0, 0.0, 0.0, 0),
+        step=partial(_holt_step, alpha=alpha, beta=beta, gamma=gamma),
+        emit=emit,
+        score_col="forecast",
+    )
+
+
 def holt_forecast_anomaly_chunked(
     df: DataFrame,
     *,
@@ -471,14 +542,8 @@ def holt_forecast_anomaly_chunked(
     tiny entry-state rows -> parallel (key, chunk) scoring; bit-equal to
     a sequential pass, parallelism #keys x #chunks).
     """
-
-    def emit(l, b, r, n, x):
-        flag = n >= min_points and r > 1e-24 and abs(x - (l + b)) > threshold * r
-        return (l + b if n > 0 else np.nan), flag
-
     return _handoff_scan(
         df, key_col=key_col, ts_col=ts_col, value_col=value_col,
-        tiebreak_col=tiebreak_col, chunk=chunk, init=(0.0, 0.0, 0.0, 0),
-        step=partial(_holt_step, alpha=alpha, beta=beta, gamma=gamma),
-        emit=emit, score_col="forecast",
+        tiebreak_col=tiebreak_col, chunk=chunk,
+        **_holt(alpha, beta, gamma, threshold, min_points),
     )

@@ -36,6 +36,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .joins import broadcast_null_safe_join
+
+
+_NAN = float("nan")
+
 
 def _mg_merge(counters: dict, batch_counts: dict, capacity: int) -> dict:
     """Merge a batch's exact counts into a Misra-Gries summary.
@@ -58,22 +63,30 @@ def mg_candidates(
 ) -> DataFrame:
     """Per-partition Misra-Gries survivor keys (the candidate superset).
 
-    One ``mapInPandas`` pass; state is O(capacity) per partition. Each
-    Arrow batch is reduced with pandas ``value_counts`` (vectorized), so
-    Python touches one dict-merge per batch, not one op per row.
+    One ``mapInArrow`` pass; state is O(capacity) per partition. Each
+    Arrow batch is reduced with Arrow's ``value_counts`` (vectorized, exact
+    key types), so Python touches one dict-merge per batch, not one op per
+    row.  NULL is one key (``None``), as in ``groupBy``.
     """
     schema = T.StructType([T.StructField(key_col, df.schema[key_col].dataType)])
 
     def part(batches: Iterator) -> Iterator:
-        import pandas as pd
+        import pyarrow as pa
 
         counters: dict = {}
-        for pdf in batches:
-            bc = pdf[key_col].value_counts().to_dict()
+        for batch in batches:
+            keys = batch.column(0)
+            bc = {
+                # NaN != NaN: map every NaN to one object, one counter
+                _NAN if d["values"] != d["values"] else d["values"]: d["counts"]
+                for d in keys.value_counts().to_pylist()
+            }
             counters = _mg_merge(counters, bc, capacity)
-        yield pd.DataFrame({key_col: list(counters.keys())})
+        if counters:
+            survivors = pa.array(list(counters), keys.type)
+            yield pa.RecordBatch.from_arrays([survivors], [key_col])
 
-    return df.select(key_col).mapInPandas(part, schema=schema).distinct()
+    return df.select(key_col).mapInArrow(part, schema=schema).distinct()
 
 
 def cms_sketch(df: DataFrame, key_col: str, depth: int = 3, width: int = 64) -> DataFrame:
@@ -169,14 +182,15 @@ def heavy_hitters_exact(
     ``capacity`` defaults to ``ceil(2 / phi)`` — twice the pigeonhole
     minimum, so per-partition undercount (≤ N_p/(capacity+1) ≤ phi*N_p/2)
     can never evict a key that is globally heavy. Returns
-    (key, hh_count, n_total, threshold) with exact values.
+    (key, hh_count, n_total, threshold) with exact values; a NULL key is
+    one key, matched to its candidate null-safe.
     """
     if capacity is None:
         capacity = int(2.0 / phi) + 1
     cand = mg_candidates(df, key_col, capacity)
     total = df.groupBy().agg(F.count("*").alias("n_total"))
     counted = (
-        df.join(F.broadcast(cand), key_col, "left_semi")
+        broadcast_null_safe_join(df, cand, [key_col], how="left_semi")
         .groupBy(key_col)
         .agg(F.count("*").alias("hh_count"))
     )

@@ -6,10 +6,9 @@ not exist; schema per `routes_pb2.py`: Airline fields 1-8 at :36-86, Airport
 fields 1-13 at :116-201, Route fields 1-6 at :231-266, Routes.route
 repeated=1 at :296-302).
 
-google.protobuf is not in this environment (same gate as the
-transformWithState tests), so — like ``avro_fallback`` for Avro OCF — this
-module implements the *wire format* itself: varint/zigzag-free proto2
-encoding with wire types 0 (varint: int32/bool), 1 (64-bit: double), and
+google.protobuf is not in this environment, so — like ``avro_fallback``
+for Avro OCF — this module implements the *wire format* itself:
+varint/zigzag-free proto2 encoding with wire types 0 (varint: int32/bool), 1 (64-bit: double), and
 2 (length-delimited: string/message/packed-nothing — proto2 repeated
 strings are unpacked). A decoder provides round-trip verification.
 

@@ -2,22 +2,24 @@
 the capability the reference's title names, built on the consumer side it
 never implemented.
 
-Two scorers:
-
 - ``windowed_stats``: watermarked tumbling/sliding window aggregation —
   pure built-in streaming aggs (per-window mean/stddev/extremes), append
   mode on window close. The scalable default: state is bounded by the
   watermark, partial aggregation happens map-side.
-- ``streaming_zscore``: per-key *running* z-score with
-  ``applyInPandasWithState`` — Welford accumulators (count/mean/M2) as
-  typed state, each event scored against the statistics of all prior
-  events for its key, then folded in. This is the custom stateful operator
-  path (SURVEY §2.8 'where the repo-title capability gets built').
+- ``streaming_zscore`` (running Welford z-score) and ``streaming_ewma``
+  (EWMA control chart): ``_stream_scan`` runs the batch scorers'
+  ``(init, step, emit)`` triples through their row loop
+  ``operators.anomaly._scan`` on ``applyInPandasWithState``, the state
+  carried in ``GroupState``.  Each trigger sorts all of a key's rows
+  once, whatever Arrow chunks Spark cut them into, so when every
+  trigger's rows for a key follow that key's earlier rows in ``(ts,
+  tiebreak)`` order the stream equals the batch scorer over the same
+  rows: prefix consistency (Structured Streaming, SIGMOD 2018).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -25,24 +27,53 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("mean", T.DoubleType()),
-        T.StructField("m2", T.DoubleType()),
-    ]
-)
+from ..operators.anomaly import _ewma, _scan, _scan_schema, _state_fields, _welford
 
 
-def zscore_output_schema(key_col: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField("event_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("zscore", T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType()),
-        ]
+def _stream_scan(
+    stream: DataFrame,
+    *,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    tiebreak_col: str | None,
+    init: tuple,
+    step: Callable,
+    emit: Callable,
+    score_col: str,
+) -> DataFrame:
+    """``_handoff_scan(chunk=None)`` on a stream: per key and trigger, one
+    ``_scan`` over the trigger's rows from the state the previous trigger
+    left in ``GroupState`` (``init`` for a new key).  Output schema as
+    the batch scorer's (the input's key type); append mode.  Pass
+    ``tiebreak_col`` (selected into the stream) when timestamps can
+    repeat within a key: rows with equal ``ts`` otherwise keep their
+    nondeterministic incoming order."""
+    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    loop = dict(
+        key_col=key_col, ts_col=ts_col, value_col=value_col, order=order,
+        step=step, emit=emit, score_col=score_col,
+    )
+
+    def score(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        out, end = _scan(
+            pd.concat(list(pdfs)), state.get if state.exists else init, **loop
+        )
+        state.update(end)
+        yield out
+
+    return (
+        stream.select(key_col, value_col, *order)
+        .groupBy(key_col)
+        .applyInPandasWithState(
+            score,
+            outputStructType=_scan_schema(stream, key_col, ts_col, score_col),
+            stateStructType=T.StructType(_state_fields(init)),
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
 
 
@@ -56,70 +87,36 @@ def streaming_zscore(
     min_points: int = 5,
     tiebreak_col: str | None = None,
 ) -> DataFrame:
-    """Per-key running z-score over a stream via Welford state.
+    """Per-key running z-score over a stream: each event is scored against
+    the mean and sample std of ALL previous events of its key, then folded
+    into the Welford state (count, mean, M2). Keys with fewer than
+    ``min_points`` prior events never flag. Returns ``key, event_ts,
+    value, zscore, is_anomaly``."""
+    return _stream_scan(
+        stream, key_col=key_col, ts_col=ts_col, value_col=value_col,
+        tiebreak_col=tiebreak_col, **_welford(threshold, min_points),
+    )
 
-    Each event is scored against the running (mean, std) of *previous*
-    events for its key (causal, replay-stable given per-key event-time
-    order within batches), then merged into the state. Keys with fewer than
-    ``min_points`` prior events never flag.
 
-    Pass ``tiebreak_col`` (it must be selected into the stream) when
-    timestamps can repeat within a key: rows with equal ``ts`` otherwise
-    keep nondeterministic incoming order, so sequential scores could
-    differ across runs.
-    """
-    out_schema = zscore_output_schema(key_col)
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-
-    def score(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, mean, m2 = state.get
-        else:
-            n, mean, m2 = 0, 0.0, 0.0
-        frames = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(sort_cols)
-            zs: list[float | None] = []
-            flags: list[bool] = []
-            for v in pdf[value_col]:
-                v = float(v)
-                if n >= min_points and m2 > 0:
-                    std = (m2 / (n - 1)) ** 0.5
-                    z = (v - mean) / std if std > 1e-12 else None
-                else:
-                    z = None
-                zs.append(z)
-                flags.append(bool(z is not None and abs(z) > threshold))
-                # Welford update
-                n += 1
-                delta = v - mean
-                mean += delta / n
-                m2 += delta * (v - mean)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        key_col: key[0],
-                        "event_ts": pdf[ts_col],
-                        "value": pdf[value_col].astype(float),
-                        "zscore": pd.Series(zs, index=pdf.index, dtype="float64"),
-                        "is_anomaly": flags,
-                    }
-                )
-            )
-        state.update((n, mean, m2))
-        yield from frames
-
-    return (
-        stream.groupBy(F.col(key_col))
-        .applyInPandasWithState(
-            score,
-            outputStructType=out_schema,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+def streaming_ewma(
+    stream: DataFrame,
+    *,
+    key_col: str,
+    ts_col: str = "event_ts",
+    value_col: str = "value",
+    alpha: float = 0.1,
+    threshold: float = 3.0,
+    min_points: int = 5,
+    tiebreak_col: str | None = None,
+) -> DataFrame:
+    """EWMA control chart over a stream: the batch
+    ``operators.anomaly.ewma_anomaly`` scorer with its (mu, var, n) state
+    carried across triggers, so replaying a stream reproduces the batch
+    scores bit for bit. Returns ``key, event_ts, value, ewma_z,
+    is_anomaly``."""
+    return _stream_scan(
+        stream, key_col=key_col, ts_col=ts_col, value_col=value_col,
+        tiebreak_col=tiebreak_col, **_ewma(alpha, threshold, min_points),
     )
 
 
@@ -160,96 +157,4 @@ def windowed_stats(
             "vmin",
             "vmax",
         )
-    )
-
-
-def streaming_ewma(
-    stream: DataFrame,
-    *,
-    key_col: str,
-    ts_col: str = "event_ts",
-    value_col: str = "value",
-    alpha: float = 0.1,
-    threshold: float = 3.0,
-    min_points: int = 5,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """EWMA control chart on the Spark 4 stateful API
-    (``transformWithStateInPandas``): O(1) typed value state (mu, var, n)
-    per key, each event scored against strictly-prior state then folded in
-    — the exact math of the batch ``operators.anomaly.ewma_anomaly``, so
-    replaying a stream reproduces the batch scores bit-for-bit.
-
-    vs ``applyInPandasWithState`` (``streaming_zscore``): the processor
-    object owns named state handles (value/list/map state, timers, TTL)
-    instead of one opaque tuple — this is the API new stateful operators
-    should target; the Welford twin stays as the legacy-API reference.
-
-    Environment gate: executing TWS requires google.protobuf in the Python
-    workers (the state-server wire protocol); absent here, so execution is
-    covered by an importorskip-gated test, like the Kafka sink.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField("event_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("ewma_z", T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType()),
-        ]
-    )
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ewma", "mu DOUBLE, var DOUBLE, n BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._state.get()
-            mu, var, n = got if got is not None else (0.0, 0.0, 0)
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            for pdf in rows:
-                pdf = pdf.sort_values(sort_cols)
-                zs: list[float | None] = []
-                flags: list[bool] = []
-                for x in pdf[value_col]:
-                    x = float(x)
-                    if n >= min_points and var > 1e-24:
-                        z = (x - mu) / var**0.5
-                    else:
-                        z = None
-                    zs.append(z)
-                    flags.append(bool(z is not None and abs(z) > threshold))
-                    delta = x - mu if n else 0.0
-                    if n == 0:
-                        mu = x
-                    else:
-                        mu += alpha * delta
-                        var = (1.0 - alpha) * (var + alpha * delta * delta)
-                    n += 1
-                yield pd.DataFrame(
-                    {
-                        key_col: pdf[key_col].astype(str),
-                        "event_ts": pdf[ts_col],
-                        "value": pdf[value_col].astype(float),
-                        "ewma_z": pd.Series(zs, index=pdf.index, dtype="float64"),
-                        "is_anomaly": flags,
-                    }
-                )
-            self._state.update((mu, var, n))
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(F.col(key_col)).transformWithStateInPandas(
-        statefulProcessor=EwmaProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
     )

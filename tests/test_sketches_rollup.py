@@ -57,6 +57,31 @@ def test_heavy_hitters_empty_and_all_heavy(spark):
     assert len(rows) == 1 and rows[0]["hh_count"] == 50
 
 
+def test_heavy_hitters_exact_keeps_null_key(spark):
+    # NULL is one key, as in groupBy: here the heaviest one, spread over
+    # several partitions (one candidate counter each, merged by distinct)
+    rows = [(None,)] * 50 + [("x",)] * 30 + [("y",)] * 20
+    df = spark.createDataFrame(rows, "k string").repartition(3)
+    got = sketches.heavy_hitters_exact(df, "k", phi=0.3).collect()
+    assert {(r["k"], r["hh_count"]) for r in got} == {(None, 50), ("x", 30)}
+
+
+def test_mg_candidates_one_counter_for_nan_and_null(spark):
+    # a double NaN is one key as well (groupBy's NaN = NaN): cut into
+    # Arrow batches of 3 rows, each batch's NaN must land on the same
+    # counter, or 17 NaN counters of 3 crowd the capacity-2 summary out
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "3")
+    try:
+        rows = [(float("nan"),)] * 50 + [(None,)] * 30 + [(2.0,)] * 20
+        df = spark.createDataFrame(rows, "k double").coalesce(1)
+        got = [r["k"] for r in sketches.mg_candidates(df, "k", capacity=2).collect()]
+    finally:
+        spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+    assert sorted("nan" if k != k else str(k) for k in got) == ["None", "nan"]
+
+
 def test_mg_candidates_bounded_per_partition(spark):
     # Candidate pass must emit at most `capacity` keys per partition.
     df = spark.createDataFrame(

@@ -184,80 +184,137 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert ids == [1, 2, 3]  # duplicate id=2 dropped across micro-batches
 
 
-def test_streaming_ewma_matches_batch_exactly(spark, tmp_path):
-    """transformWithStateInPandas EWMA replayed over 3 micro-batches must
-    reproduce the batch ewma_anomaly operator bit-for-bit (state carries
-    across batch boundaries; scoring is causal within and across them).
+EVENT = T.StructType(
+    [
+        T.StructField("key", T.StringType()),
+        T.StructField("event_ts", T.TimestampType()),
+        T.StructField("value", T.DoubleType()),
+    ]
+)
 
-    Environment-gated like Kafka: the TWS state server speaks protobuf to
-    the Python worker, and google.protobuf is not baked into this
-    container — the operator itself is pure PySpark API.
-    """
+
+@pytest.fixture
+def arrow_batch_7(spark):
+    """Spark cuts each key's rows into Arrow chunks of 7 rows, so one key
+    reaches the scorer as several chunks within one trigger."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
+
+
+def _shuffled_deliveries(n_triggers):
+    """Keys 'a', 'b' and NULL, 60 one-second points each (a spike in 'a'
+    and in NULL), cut by time into ``n_triggers`` deliveries whose rows
+    are shuffled."""
     import datetime as dt
-
-    pytest.importorskip("google.protobuf.descriptor")
-
-    from anomaly_detection_in_time_series_data_spark.operators.anomaly import (
-        ewma_anomaly,
-    )
+    import random
 
     base = dt.datetime(2024, 1, 1)
-    rows = []
-    for i in range(60):
-        for k in ("a", "b"):
-            v = 100.0 if (k == "a" and i == 45) else float((i * 7) % 13)
-            rows.append((k, base + dt.timedelta(seconds=i), v))
-    df = spark.createDataFrame(rows, ["key", "event_ts", "value"])
+    rng = random.Random(n_triggers)
+    per = 60 // n_triggers
+    deliveries = []
+    for b in range(n_triggers):
+        rows = [
+            (k, base + dt.timedelta(seconds=i),
+             100.0 if (k != "b" and i == 45) else float((i * 7) % 13) + (k == "b"))
+            for i in range(b * per, (b + 1) * per)
+            for k in ("a", "b", None)
+        ]
+        rng.shuffle(rows)
+        deliveries.append(rows)
+    return deliveries
 
-    src = tmp_path / "ewma_src"
-    # 3 files -> 3 micro-batches (maxFilesPerTrigger=1), time-ordered.
-    for b in range(3):
-        df.filter(
-            (F.col("event_ts") >= base + dt.timedelta(seconds=20 * b))
-            & (F.col("event_ts") < base + dt.timedelta(seconds=20 * (b + 1)))
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"b{b}"))
 
-    schema = df.schema
+def _run_stream(spark, tmp_path, deliveries, build):
+    """Replay ``deliveries`` one per trigger through ``build(stream)`` into
+    a memory sink and return the collected rows."""
+    import uuid
+
+    stage_deliveries(spark, str(tmp_path / "src"), deliveries, EVENT)
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(EVENT)
         .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "b*"))
+        .parquet(str(tmp_path / "src"))
     )
-    scored = anomaly_stream.streaming_ewma(
-        stream, key_col="key", value_col="value", min_points=5
-    )
+    name = f"scan_{uuid.uuid4().hex[:8]}"
     q = (
-        scored.writeStream.format("memory")
-        .queryName("ewma_stream")
+        build(stream).writeStream.format("memory")
+        .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ewma_ckpt"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    got = {
-        (r.key, r.event_ts): (r.ewma_z, r.is_anomaly)
-        for r in spark.sql("select * from ewma_stream").collect()
-    }
-    want = {
-        (r.key, r.event_ts): (r.ewma_z, r.is_anomaly)
-        for r in ewma_anomaly(
-            df, key_col="key", ts_col="event_ts", value_col="value", min_points=5
-        ).collect()
-    }
-    assert len(got) == len(want) == 120
-    for k in want:
-        gz, gf = got[k]
-        wz, wf = want[k]
-        assert gf == wf, k
-        if wz is None:
-            assert gz is None, k
-        else:
-            assert gz == wz, k
-    # The planted spike is flagged by the streaming path.
-    assert any(f for (k, _), (_, f) in got.items() if k == "a")
+    return spark.table(name).collect()
+
+
+@pytest.mark.parametrize("n_triggers", [1, 3, 12])
+@pytest.mark.parametrize("scorer", ["welford", "ewma", "holt"])
+def test_stream_scan_equals_batch_scan(spark, tmp_path, arrow_batch_7, scorer, n_triggers):
+    """Prefix consistency: the streaming scorer over 1, 3 or 12 triggers
+    returns the batch ``_handoff_scan`` rows bit for bit, NULL key
+    included, however Spark cuts a key's trigger into Arrow chunks and
+    in whatever order the rows arrive.  Compared as Spark rows, so a
+    missing score must be NULL on both sides."""
+    from collections import Counter
+
+    from anomaly_detection_in_time_series_data_spark.operators.anomaly import (
+        _ewma,
+        _handoff_scan,
+        _holt,
+        _welford,
+    )
+
+    triple = {
+        "welford": _welford(3.0, 5),
+        "ewma": _ewma(0.1, 3.0, 5),
+        "holt": _holt(0.5, 0.3, 0.2, 4.0, 10),
+    }[scorer]
+    cols = dict(key_col="key", ts_col="event_ts", value_col="value", tiebreak_col=None)
+    deliveries = _shuffled_deliveries(n_triggers)
+    got = _run_stream(
+        spark, tmp_path, deliveries,
+        lambda s: anomaly_stream._stream_scan(s, **cols, **triple),
+    )
+    batch = spark.createDataFrame([r for d in deliveries for r in d], EVENT)
+    want = _handoff_scan(batch, chunk=None, **cols, **triple).collect()
+    assert len(got) == len(want) == 180
+    assert Counter(map(tuple, got)) == Counter(map(tuple, want))
+    score = triple["score_col"]
+    assert any(r[score] is None for r in got if r.key is None)
+    assert any(r.is_anomaly for r in got if r.key is None)
+
+
+def test_streaming_zscore_is_sequential_welford(spark, tmp_path, arrow_batch_7):
+    """The public ``streaming_zscore`` scores each row against ALL prior
+    rows of its key in time order — the sequential Welford recurrence,
+    bit for bit — although its rows arrive shuffled and in Arrow chunks
+    of 7 rows."""
+    deliveries = _shuffled_deliveries(3)
+    got = _run_stream(
+        spark, tmp_path, deliveries,
+        lambda s: anomaly_stream.streaming_zscore(s, key_col="key", min_points=5),
+    )
+    want = {}
+    for k in ("a", "b", None):
+        n, mean, m2 = 0, 0.0, 0.0
+        rows = sorted((r for d in deliveries for r in d if r[0] == k), key=lambda r: r[1])
+        for _, ts, v in rows:
+            z = None
+            if n >= 5 and m2 > 0:
+                std = (m2 / (n - 1)) ** 0.5
+                z = (v - mean) / std if std > 1e-12 else None
+            want[(k, ts)] = (v, z, z is not None and abs(z) > 3.0)
+            n += 1
+            delta = v - mean
+            mean += delta / n
+            m2 += delta * (v - mean)
+    assert {(r.key, r.event_ts): (r.value, r.zscore, r.is_anomaly) for r in got} == want
 
 
 def test_python_datasource_batch_read(spark, telemetry_dir):
