@@ -89,6 +89,21 @@ def mg_candidates(
     return df.select(key_col).mapInArrow(part, schema=schema).distinct()
 
 
+def _cms_bucket(key, width: int):
+    """Sketch row ``i``'s md5 bucket of ``key`` (see ``cms_sketch``); NULL
+    for a NULL key."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit("cms"), F.col("i").cast("string"), F.lit("|"), key)), 1, 8
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % width
+    )
+
+
 def cms_sketch(df: DataFrame, key_col: str, depth: int = 3, width: int = 64) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan 2005) as a tiny DataFrame.
 
@@ -106,21 +121,9 @@ def cms_sketch(df: DataFrame, key_col: str, depth: int = 3, width: int = 64) -> 
     ``('0x' || substr(md5('cms' || i || '|' || key), 1, 8))::UBIGINT % width``.
     """
     rows = F.array(*[F.lit(i) for i in range(depth)])
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cms"), F.col("i").cast("string"), F.lit("|"), F.col(key_col))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % width
-    )
     return (
         df.select(F.col(key_col), F.explode(rows).alias("i"))
-        .select("i", bucket.alias("b"))
+        .select("i", _cms_bucket(F.col(key_col), width).alias("b"))
         .groupBy("i", "b")
         .agg(F.count("*").alias("c"))
     )
@@ -132,37 +135,26 @@ def cms_estimate_report(
     """Per-key CMS estimate next to the exact count (the accuracy report a
     pipeline runs before trusting sketch-only counting at full scale).
 
-    The sketch is ≤ depth*width rows, so the probe joins broadcast it; the
+    The sketch is ≤ depth*width rows, so the probe join broadcasts it; the
     only O(N) work is the one sketch-building scan and the exact groupBy
     (which the report needs anyway for the error column). CMS guarantees
     estimate ≥ exact for every key; a unit test asserts it and the
     mergeability identity.
     """
     sketch = cms_sketch(df, key_col, depth, width)
-    exact = df.groupBy(key_col).agg(F.count("*").cast("bigint").alias("exact_count"))
-    probes = exact.select(key_col).withColumn(
-        "i", F.explode(F.array(*[F.lit(i) for i in range(depth)]))
+    probes = (
+        df.groupBy(key_col)
+        .agg(F.count("*").cast("bigint").alias("exact_count"))
+        .withColumn("i", F.explode(F.array(*[F.lit(i) for i in range(depth)])))
+        .withColumn("b", _cms_bucket(F.col(key_col), width))
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cms"), F.col("i").cast("string"), F.lit("|"), F.col(key_col))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % width
-    )
-    est = (
-        probes.withColumn("b", bucket)
-        .join(F.broadcast(sketch), ["i", "b"])
-        .groupBy(key_col)
-        .agg(F.min("c").cast("bigint").alias("cms_estimate"))
-    )
+    # a NULL key's rows all hash to bucket NULL in each sketch row: the
+    # null-safe sketch join finds them, and exact_count rides along as a
+    # grouping key (one value per key), so no second join can drop the key
     return (
-        exact.join(est, key_col)
+        broadcast_null_safe_join(probes, sketch, ["i", "b"])
+        .groupBy(key_col, "exact_count")
+        .agg(F.min("c").cast("bigint").alias("cms_estimate"))
         .select(
             key_col,
             "cms_estimate",

@@ -13,7 +13,10 @@ The matrix-profile family (``weekly_discords``, ``weekly_motifs``,
 numpy inside applyInPandas. All three take their length-``m``
 subsequences from ``_subsequences``; the two weekly operators share the
 tiled distance^2 kernel ``_d2_tiles`` and the per-(key, week) runner
-``_per_week``, and supply only their trivial-match mask and reduction.
+``_per_week``, and supply only their trivial-match mask and reduction;
+``global_discords_gemm`` supplies only a cell kernel to
+``similarity._gemm_cells``, the one grid-cell GEMM skeleton it shares with
+``similarity.cosine_near_pairs_gemm``.
 
 Float-determinism discipline (matches the repo-wide oracle contract):
 sums that cross a shuffle or a window frame go through DECIMAL (exact,
@@ -37,6 +40,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .similarity import _gemm_cells
 
 _DEC = "decimal(18,6)"
 
@@ -759,26 +764,20 @@ def global_discords_gemm(
     """GLOBAL (unwindowed) matrix-profile discords — the 100 TB path that
     `weekly_discords` documents: z-normalized subsequences are unit
     vectors, so min z-norm distance == max cosine, and the all-pairs work
-    runs as the same distributed grid-blocked GEMM shape as
-    `similarity.cosine_near_pairs_gemm` (shuffle 2*N*grid*(m+…) doubles,
+    runs on `similarity._gemm_cells` (shuffle N*grid*(m+…) doubles,
     per-cell memory (N/grid)*m*2, BLAS inside each cell, no driver
-    collect).
+    collect), in cells per key and blocked on ``pos``.
 
-    Per cell, each row-side subsequence keeps its max cosine against the
-    cell's column block (excluding same-key trivial matches
-    |pos_i - pos_j| < ``exclusion``); a final groupBy-max merges cells.
-    Constant windows (zero variance) have no defined z-shape and are
-    dropped, as in the standard matrix-profile treatment. Returns the
-    ``top_k`` discords per key: highest profile distance^2
-    (= 2*m*(1 - max_cos)) with position tiebreak.
+    Per cell, each subsequence on either side keeps its max cosine against
+    the other side (excluding trivial matches |pos_i - pos_j| <
+    ``exclusion``); a final groupBy-max merges cells. Constant windows
+    (zero variance) have no defined z-shape and are dropped, as in the
+    standard matrix-profile treatment. Returns the ``top_k`` discords per
+    key, NULL included: highest profile distance^2 (= 2*m*(1 - max_cos))
+    with position tiebreak.
     """
-    import math
-
     if exclusion is None:
         exclusion = m
-    spark = df.sparkSession
-    if grid is None:
-        grid = max(2, int(math.ceil(math.sqrt(spark.sparkContext.defaultParallelism))))
 
     sub = _subsequences(
         df, key_col=key_col, ts_col=ts_col, value_col=value_col,
@@ -794,25 +793,6 @@ def global_discords_gemm(
     # runs on n_keys tasks — materialize once instead of per scan. At
     # 100 TB this is the staged subsequence table.
     z = sub.localCheckpoint(eager=False)
-    # Grid-block WITHIN each key: the profile is a per-series statistic
-    # (a neighbor in a different series is meaningless), so cells are
-    # (key, row-block, col-block) and total pair work is sum_k n_k^2 —
-    # never the cross-key N^2. Cosine is symmetric, so only the UPPER
-    # TRIANGLE of cells (ra <= cb) is materialized: each row ships
-    # ``grid`` copies (vs 2*grid two-sided) and every unordered block
-    # pair's GEMM runs once, with the kernel emitting both the row-axis
-    # and column-axis maxima.
-    blk = F.pmod(F.xxhash64("pos"), F.lit(grid)).cast("int")
-    other = F.explode(F.sequence(F.lit(0), F.lit(grid - 1)))
-    both = (
-        z.withColumn("_blk", blk)
-        .withColumn("_o", other)
-        .select(
-            F.col(key_col).alias("_k"), "pos", "arr", "_blk",
-            F.least("_blk", "_o").alias("_ra"),
-            F.greatest("_blk", "_o").alias("_cb"),
-        )
-    )
 
     out_schema = T.StructType(
         [
@@ -821,35 +801,23 @@ def global_discords_gemm(
             T.StructField("cell_max_cos", T.DoubleType()),
         ]
     )
-
-    _EMPTY = pd.DataFrame(
-        {"key": pd.Series([], dtype=object),
-         "pos": pd.Series([], dtype="int64"),
-         "cell_max_cos": pd.Series([], dtype="float64")}
-    )
     EXCLUSION = exclusion  # closure constants
     M_LEN = float(m)
 
-    def cell_max(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        k, ra, cb = key
-        if pdf.empty:
-            return _EMPTY
-        M = np.array(list(pdf["arr"].to_numpy()), dtype=np.float64)
+    def znorm(side: pd.DataFrame):
+        M = np.array(list(side["arr"].to_numpy()), dtype=np.float64)
         mu = M.mean(axis=1)
         var = ((M - mu[:, None]) ** 2).mean(axis=1)
         ok = var > 1e-18  # constant windows: no z-shape
         M, mu, var = M[ok], mu[ok], var[ok]
-        pdf = pdf[ok]
         Z = (M - mu[:, None]) / np.sqrt(var * M_LEN)[:, None]
-        pos = pdf["pos"].to_numpy()
-        if ra == cb:
-            A, B, posa, posb = Z, Z, pos, pos
-        else:
-            on_a = (pdf["_blk"] == ra).to_numpy()
-            A, posa = Z[on_a], pos[on_a]
-            B, posb = Z[~on_a], pos[~on_a]
+        return Z, side["pos"].to_numpy()[ok]
+
+    def cell_max(key: tuple, a: pd.DataFrame, b: pd.DataFrame, diagonal: bool):
+        A, posa = znorm(a)
+        B, posb = (A, posa) if diagonal else znorm(b)
         if not len(A) or not len(B):
-            return _EMPTY
+            return pd.DataFrame()
         # Row-chunked GEMM: the full |A|x|B| score matrix is O((n_k/grid)^2)
         # doubles per cell — compute in 512-row slabs, keeping the per-row
         # running max and (off-diagonal) the per-column running max, so the
@@ -866,36 +834,30 @@ def global_discords_gemm(
             near = np.abs(posa[lo:hi, None] - posb[None, :]) < EXCLUSION
             S[near] = -np.inf
             mxa[lo:hi] = S.max(axis=1)
-            if ra != cb:
+            if not diagonal:
                 np.maximum(mxb, S.max(axis=0), out=mxb)
-        if ra == cb:
+        if diagonal:
             out_pos, out_mx = posa, mxa
         else:
             out_pos = np.concatenate([posa, posb])
             out_mx = np.concatenate([mxa, mxb])
         keep = out_mx > -np.inf
         return pd.DataFrame(
-            {"key": np.full(keep.sum(), k, dtype=object),
+            {"key": np.full(keep.sum(), key[0], dtype=object),
              "pos": out_pos[keep], "cell_max_cos": out_mx[keep]}
         )
 
-    # Explicit numbered repartition on the cell keys: the replicated frame
-    # is byte-light but every cell runs a BLAS GEMM, and AQE's size-based
-    # coalescing would fold the cells into a couple of tasks and serialize
-    # them (same lesson as _per_week; measured 14.9s -> 7.8s at sf0.1).
-    # AQE preserves user-numbered repartitions, and the groupBy reuses the
-    # distribution — no second exchange.
-    parts = both.sparkSession.sparkContext.defaultParallelism
-    per_cell = (
-        both.repartition(parts, "_k", "_ra", "_cb")
-        .groupBy("_k", "_ra", "_cb")
-        .applyInPandas(cell_max, schema=out_schema)
+    per_cell = _gemm_cells(
+        z.select(key_col, "pos", "arr"), key_cols=[key_col], block_col="pos",
+        grid=grid, cell=cell_max, schema=out_schema,
     )
     merged = per_cell.groupBy("key", "pos").agg(
         F.max("cell_max_cos").alias("max_cos")
     )
-    meta = z.select(F.col(key_col).alias("key"), "pos", "start_ts")
-    scored = merged.join(meta, ["key", "pos"]).withColumn(
+    meta = z.select(F.col(key_col).alias("_mk"), F.col("pos").alias("_mp"), "start_ts")
+    scored = merged.join(  # null-safe key, still an equi-join
+        meta, F.col("key").eqNullSafe(F.col("_mk")) & (F.col("pos") == F.col("_mp"))
+    ).withColumn(
         "profile_d2", 2.0 * float(m) * (F.lit(1.0) - F.col("max_cos"))
     )
     dw = Window.partitionBy("key").orderBy(F.col("profile_d2").desc(), F.col("pos"))

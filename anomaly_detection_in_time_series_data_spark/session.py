@@ -67,7 +67,6 @@ def ensure_pyfiles(spark: SparkSession) -> None:
 def get_spark(
     app_name: str = "adts-spark",
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
@@ -92,9 +91,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("ADTS_DRIVER_MEM", "8g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ensure_pyfiles(spark)

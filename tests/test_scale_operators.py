@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from anomaly_detection_in_time_series_data_spark.operators import anomaly, skew
@@ -159,7 +160,8 @@ def test_binned_range_join_equals_naive(spark):
     assert naive == binned and len(naive) > 0
 
 
-def test_gemm_near_pairs_equals_expression_formulation(spark):
+@pytest.mark.parametrize("grid", [1, 2, 3, 5])
+def test_gemm_near_pairs_equals_expression_formulation(spark, grid):
     import random
 
     from anomaly_detection_in_time_series_data_spark.operators import similarity
@@ -181,7 +183,7 @@ def test_gemm_near_pairs_equals_expression_formulation(spark):
     )
     gemm_pairs = sorted(
         (r.vec_id_a, r.vec_id_b)
-        for r in similarity.cosine_near_pairs_gemm(df, threshold=0.9).collect()
+        for r in similarity.cosine_near_pairs_gemm(df, threshold=0.9, grid=grid).collect()
     )
     assert expr_pairs == gemm_pairs
     assert len(gemm_pairs) >= 10  # every planted near-dup found

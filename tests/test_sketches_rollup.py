@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from anomaly_detection_in_time_series_data_spark import plans
 from anomaly_detection_in_time_series_data_spark.operators import anomaly, rollup, sketches
 
 
@@ -233,6 +234,20 @@ def test_cms_estimate_never_undercounts_and_collisions_overcount(spark):
     assert all(r["overcount"] >= 0 for r in rep)
     assert any(r["overcount"] > 0 for r in rep)  # collisions are real at w=16
     assert all(r["cms_estimate"] == r["exact_count"] + r["overcount"] for r in rep)
+
+
+def test_cms_estimate_report_keeps_null_key(spark):
+    # NULL is one key, and the heaviest: its rows share sketch bucket NULL
+    # in every row, so the report must carry it like any other key.
+    rows = [(None,)] * 50 + [("x",)] * 30 + [("y",)] * 20
+    df = spark.createDataFrame(rows, "k string").repartition(3)
+    report = sketches.cms_estimate_report(df, "k", depth=3, width=16)
+    assert "BroadcastHashJoin" in plans.executed_plan(report)  # sketch join
+    rep = {r["k"]: r for r in report.collect()}
+    assert set(rep) == {None, "x", "y"}
+    assert rep[None]["exact_count"] == 50
+    assert rep[None]["cms_estimate"] >= 50
+    assert all(r["cms_estimate"] == r["exact_count"] + r["overcount"] for r in rep.values())
 
 
 def test_cms_sketch_is_mergeable_across_splits(spark):

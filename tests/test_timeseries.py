@@ -426,9 +426,11 @@ def test_weekly_motifs_finds_planted_pair(spark):
     assert r["motif_d2"] == 0.0
 
 
-def test_global_discords_gemm_matches_bruteforce(spark):
+@pytest.mark.parametrize("grid", [1, 3, 4])
+def test_global_discords_gemm_matches_bruteforce(spark, grid):
     """The GEMM scale path must find the identical discord position as an
-    in-test numpy brute force (same z-normalization, same exclusion)."""
+    in-test numpy brute force (same z-normalization, same exclusion), for
+    every key, a NULL key included, and whatever the grid."""
     import datetime as dt
 
     import numpy as np
@@ -438,11 +440,9 @@ def test_global_discords_gemm_matches_bruteforce(spark):
     rng = np.random.RandomState(5)
     t0 = dt.datetime(2024, 1, 1)
     m = 8
-    series = {
-        "a": np.tile([0, 1, 2, 3, 4, 3, 2, 1], 30).astype(float) + rng.rand(240) * 0.01,
-        "b": rng.rand(200) * 4.0,
-    }
-    series["a"][100:108] = series["a"][100:108][::-1]  # planted inverted shape
+    a = np.tile([0, 1, 2, 3, 4, 3, 2, 1], 30).astype(float) + rng.rand(240) * 0.01
+    a[100:108] = a[100:108][::-1]  # planted inverted shape
+    b = rng.rand(200) * 4.0
 
     def brute(xs):
         n = len(xs) - m + 1
@@ -458,14 +458,16 @@ def test_global_discords_gemm_matches_bruteforce(spark):
         best = int(np.argmax(2.0 * m * (1.0 - mx)))
         return best + 1  # 1-based pos
 
-    # the same series under a string key and under an integer key
-    for key_col, key_type, names in (
-        ("event_type", "string", ("a", "b")),
-        ("user_id", "bigint", (1, 2)),
+    # the same series under a string key and under an integer key, and
+    # series a under both 'a' and NULL
+    for key_col, key_type, by_key in (
+        ("event_type", "string", {"a": a, "b": b}),
+        ("user_id", "bigint", {1: a, 2: b}),
+        ("event_type", "string", {"a": a, None: a}),
     ):
         rows = [
             (name, t0 + dt.timedelta(hours=i), i, float(v))
-            for name, xs in zip(names, series.values())
+            for name, xs in by_key.items()
             for i, v in enumerate(xs)
         ]
         df = spark.createDataFrame(
@@ -474,10 +476,11 @@ def test_global_discords_gemm_matches_bruteforce(spark):
         got = {
             r[key_col]: (r["discord_pos"], r["profile_d2"])
             for r in timeseries.global_discords_gemm(
-                df, key_col=key_col, m=m, grid=3, top_k=1
+                df, key_col=key_col, m=m, grid=grid, top_k=1
             ).collect()
         }
-        for name, xs in zip(names, series.values()):
+        assert set(got) == set(by_key)
+        for name, xs in by_key.items():
             assert got[name][0] == brute(xs), name
-        # the planted inverted window must be the global discord for key a
-        assert 100 - m < (got[names[0]][0] - 1) < 108
+        # the planted inverted window must be the global discord for series a
+        assert 100 - m < (got[next(iter(by_key))][0] - 1) < 108
