@@ -34,6 +34,9 @@ def scd2_merge(
     - tracked values differ -> close the open row at update ts, add new
       open version
 
+    Keys match null-safe: a NULL key is one key like any other, so its
+    re-delivered unchanged row is a no-op too.
+
     One shuffle on the keys; closed history rows pass through untouched
     (at 100 TB: partition the table by open/closed so the closed majority
     is not even rewritten — the merge only rewrites the open partition).
@@ -41,12 +44,19 @@ def scd2_merge(
     ``latest_event_per_user``-style ranked dedup otherwise).
     """
     upd = updates.select(
-        *keys, *[F.col(c).alias(f"_u_{c}") for c in tracked], F.col(ts_col).alias("_u_ts")
+        *[F.col(k).alias(f"_uk_{k}") for k in keys],
+        *[F.col(c).alias(f"_u_{c}") for c in tracked],
+        F.col(ts_col).alias("_u_ts"),
     )
     open_rows = current.filter(F.col(end_col).isNull())
     closed_rows = current.filter(F.col(end_col).isNotNull())
 
-    joined = open_rows.join(upd, keys, "full_outer")
+    # ``<=>`` matches a NULL key with itself and keeps this an equi-join;
+    # a plain key join would make a re-delivered NULL-key row a second
+    # open version.
+    on = [F.col(k).eqNullSafe(F.col(f"_uk_{k}")) for k in keys]
+    joined = open_rows.join(upd, on, "full_outer")
+    key_cols = [F.coalesce(F.col(k), F.col(f"_uk_{k}")).alias(k) for k in keys]
     # Any tracked column differing (null-safe) marks the row as changed.
     diff = None
     for c in tracked:
@@ -98,7 +108,7 @@ def scd2_merge(
         # explode would pick up an inferred size(<case expr>) pre-filter
         # re-evaluating the whole projection per row (the
         # dedup._explode_shingles hazard).
-        joined.select(*keys, F.explode_outer(versions).alias("_v"))
+        joined.select(*key_cols, F.explode_outer(versions).alias("_v"))
         # explode_outer turns the (degenerate-row-only) EMPTY array into
         # one null marker row — drop it.  Well-formed rows always carry a
         # non-null version struct, so nothing else matches this filter.

@@ -9,17 +9,13 @@ from typing import Iterator, NamedTuple
 from pyspark.sql import DataFrame
 
 from ..operators.ranks import SCAN_PREFIX
+from ..session import scoped_conf
 
 
 def executed_plan(df: DataFrame) -> str:
-    spark = df.sparkSession
     # Lift the metadata truncation so PushedFilters/ReadSchema are complete.
-    before = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    try:
+    with scoped_conf(df.sparkSession, {"spark.sql.maxMetadataStringLength": 10000}):
         return df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.maxMetadataStringLength", before)
 
 
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:

@@ -12,12 +12,15 @@ import hashlib
 import io
 import os
 import tempfile
+import threading
 import zipfile
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[int] = set()
+_CONF_LOCK = threading.RLock()
 
 
 @functools.cache
@@ -95,3 +98,29 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ensure_pyfiles(spark)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, pairs: dict):
+    """Set session confs for the duration of a ``with`` block and restore
+    the previous values (or unset them) on exit.
+
+    The block holds a module lock, so two threads never swap conf at once
+    and each restores the values from before its own block. Other code in
+    the session still sees the scoped values while a block runs, so keep
+    blocks short: a stream freezes its session conf at ``start()``, which
+    is why the streaming runtime scopes only that call and waits for the
+    stream outside the block."""
+    with _CONF_LOCK:
+        olds = {}
+        try:
+            for k, v in pairs.items():
+                olds[k] = spark.conf.get(k, None)
+                spark.conf.set(k, str(v))
+            yield
+        finally:
+            for k, old in olds.items():
+                if old is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, old)

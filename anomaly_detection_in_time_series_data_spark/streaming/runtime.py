@@ -5,8 +5,9 @@ folded through a foreachBatch sink into an on-disk store.
 Every query here replays a finite source to completion, so each stream
 runs under ``trigger(availableNow=True)`` and the caller blocks on
 ``awaitTermination()``.  The shuffle and state-store partition count is
-sized from the replayed source's bytes (``stream_parts``) and scoped to
-the one query (``scoped_conf``).
+sized from the replayed source's bytes (``stream_parts``) and set on the
+session only around the query's ``start()`` (``scoped_conf``), where the
+query freezes it.
 """
 
 from __future__ import annotations
@@ -17,12 +18,12 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table, normalize_events_ts
+from ..session import scoped_conf
+from ..tables import load_table, normalize_events_ts, parquet_schema
 from .sinks import read_store
 
 # Target source bytes per streaming shuffle/state partition (AQE's own
@@ -33,9 +34,12 @@ STREAM_PART_BYTES = 64 * 1024 * 1024
 def read_events_stream(spark: SparkSession, sf_dir: str):
     """Structured-Streaming twin of ``load_table(..., 'events')``: a
     file-source over the fixture parquet, with ``ts`` normalized by the
-    same ``normalize_events_ts`` as the batch frame."""
+    same ``normalize_events_ts`` as the batch frame.  The stream's raw
+    schema is the one the batch load just cached (``parquet_schema``), so
+    a call launches no schema-inference job once events has been loaded
+    in this process."""
     batch = load_table(spark, sf_dir, "events")  # sets tz + nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")  # file source needs a dir
@@ -115,29 +119,6 @@ def stream_parts(sf_dir: str, *tables: str) -> int:
     return max(1, math.ceil(total / STREAM_PART_BYTES))
 
 
-@contextmanager
-def scoped_conf(spark, pairs: dict):
-    """Set session confs for the duration of a ``with`` block, restoring
-    previous values (or unsetting) on exit.  Streaming queries capture
-    session conf at ``start()``, so scoping around start+awaitTermination
-    confines the setting to that one query.  SEQUENTIAL-ONLY assumption
-    (documented, ADVICE r12): the bench and oracle harnesses run queries
-    one at a time; concurrently-started queries in the same session would
-    race on the session conf."""
-    olds = {}
-    try:
-        for k, v in pairs.items():
-            olds[k] = spark.conf.get(k, None)
-            spark.conf.set(k, str(v))
-        yield
-    finally:
-        for k, old in olds.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-
-
 def run_to_memory(
     result: DataFrame,
     name_prefix: str,
@@ -171,15 +152,15 @@ def run_to_memory(
     confs = {"spark.sql.shuffle.partitions": stream_parts(sf_dir, *sources)}
     if not nodata_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    with scoped_conf(spark, confs):
-        (
-            result.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    writer = (
+        result.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(spark, confs):  # frozen into the query at start()
+        query = writer.start()
+    query.awaitTermination()
     return spark.table(qname)
 
 
@@ -218,9 +199,8 @@ def replay_to_store(
         store = os.path.join(root, "store")
         parts = stream_parts(sf_dir, *sources)
         with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
-            sink(
-                stream, store, checkpoint=os.path.join(root, "ckpt")
-            ).awaitTermination()
+            query = sink(stream, store, checkpoint=os.path.join(root, "ckpt"))
+        query.awaitTermination()
         return project(read_store(spark, store)).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)

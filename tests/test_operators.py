@@ -533,8 +533,12 @@ def test_exact_jaccard_edges_planted_near_dup(spark):
 
 def test_scd2_merge_versions_and_history(spark):
     import datetime as dt
+    from collections import Counter
 
     from anomaly_detection_in_time_series_data_spark.operators.cdc import scd2_merge
+    from anomaly_detection_in_time_series_data_spark.plans.inspect import (
+        executed_plan,
+    )
 
     t = lambda d: dt.datetime(2024, 1, d)  # noqa: E731
     current = spark.createDataFrame(
@@ -546,6 +550,8 @@ def test_scd2_merge_versions_and_history(spark):
             (2, "b-v1", t(2), None),
             # k=3: open, will change
             (3, "c-v1", t(3), None),
+            # k=NULL: open, will be unchanged (one key, like k=2)
+            (None, "n-v1", t(4), None),
         ],
         "k int, val string, valid_from timestamp, valid_to timestamp",
     )
@@ -554,25 +560,28 @@ def test_scd2_merge_versions_and_history(spark):
             (2, "b-v1", t(9)),   # same value -> no-op
             (3, "c-v2", t(9)),   # changed -> close + new version
             (4, "d-v1", t(9)),   # new key -> new open version
+            (None, "n-v1", t(9)),  # same value under the NULL key -> no-op
         ],
         "k int, val string, ts timestamp",
     )
     out = scd2_merge(
         current, updates, keys=["k"], tracked=["val"], ts_col="ts"
     )
-    rows = {(r.k, r.val): (r.valid_from, r.valid_to) for r in out.collect()}
-    assert len(rows) == 6
+    # the NULL key stays an equi-join key
+    assert "BroadcastNestedLoopJoin" not in executed_plan(out)
+    got = out.collect()
+    assert len(got) == 7
+    rows = {(r.k, r.val): (r.valid_from, r.valid_to) for r in got}
     assert rows[(1, "a-v1")] == (t(1), t(5))      # closed history untouched
     assert rows[(1, "a-v2")] == (t(5), None)      # open, no update
     assert rows[(2, "b-v1")] == (t(2), None)      # unchanged (idempotent)
     assert rows[(3, "c-v1")] == (t(3), t(9))      # closed at update ts
     assert rows[(3, "c-v2")] == (t(9), None)      # new open version
     assert rows[(4, "d-v1")] == (t(9), None)      # brand-new key
+    assert rows[(None, "n-v1")] == (t(4), None)   # NULL key unchanged
     # Idempotence: re-applying the same updates changes nothing.
     again = scd2_merge(out, updates, keys=["k"], tracked=["val"], ts_col="ts")
-    assert {(r.k, r.val, r.valid_from, r.valid_to) for r in again.collect()} == {
-        (r.k, r.val, r.valid_from, r.valid_to) for r in out.collect()
-    }
+    assert Counter(again.collect()) == Counter(got)
 
 
 def test_observation_metrics_single_pass(spark, sf_dir):

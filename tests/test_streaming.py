@@ -4,6 +4,9 @@ sink + processAllAvailable; watermark behavior with out-of-order batches."""
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1173,6 +1176,101 @@ def test_stream_parts_scales_with_source_bytes(tmp_path, monkeypatch):
     assert runtime.stream_parts(str(tmp_path), "mid") == 7
 
 
+def _gated_run_to_memory(spark, tmp_path, monkeypatch):
+    """``run(name)`` starts a ``run_to_memory`` stream in a new thread that
+    stops just before ``awaitTermination``: ``started[name]`` is set once
+    the query has started, ``release[name]`` lets the thread wait for it.
+    ``results[name]`` and ``parts[name]`` (the state store's shuffle
+    partition count) are filled when the thread ends.  The stream's
+    partition count is pinned to 3, the test session's is 4."""
+    import threading
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from anomaly_detection_in_time_series_data_spark.streaming import runtime
+
+    schema = T.StructType([T.StructField("k", T.StringType())])
+    src = str(tmp_path / "src")
+    stage_deliveries(spark, src, [[("a",), ("b",), ("a",)]], schema)
+    monkeypatch.setenv("ADTS_STREAM_PARTS", "3")
+    started, release, results, parts = {}, {}, {}, {}
+    await_termination = StreamingQuery.awaitTermination
+
+    def gated(query, timeout=None):
+        name = threading.current_thread().name
+        started[name].set()
+        release[name].wait(120)
+        done = await_termination(query, timeout)
+        parts[name] = query.lastProgress.stateOperators[0].numShufflePartitions
+        return done
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", gated)
+
+    def body(name):
+        counts = spark.readStream.schema(schema).parquet(src).groupBy("k").count()
+        out = runtime.run_to_memory(counts, name, "complete", src)
+        results[name] = sorted(map(tuple, out.collect()))
+
+    def run(name):
+        started[name], release[name] = threading.Event(), threading.Event()
+        t = threading.Thread(target=body, args=(name,), name=name)
+        t.start()
+        assert started[name].wait(120), f"{name} did not start"
+        return t
+
+    return run, release, results, parts
+
+
+def _finish(spark, threads, release, key, before):
+    for event in release.values():
+        event.set()
+    for t in threads:
+        t.join(120)
+    spark.conf.set(key, before)  # a scope held across the wait leaks
+
+
+def test_stream_conf_scoped_to_start(spark, tmp_path, monkeypatch):
+    """A stream freezes its session conf at ``start()``, so
+    ``run_to_memory`` sets the stream's partition count only around that
+    call: while the stream runs in another thread, the caller's session
+    plans with its own value, and the stream still runs with 3."""
+    run, release, results, parts = _gated_run_to_memory(spark, tmp_path, monkeypatch)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "3"
+    threads = []
+    try:
+        threads.append(run("scoped_a"))
+        assert spark.conf.get(key) == before
+    finally:
+        _finish(spark, threads, release, key, before)
+    assert results["scoped_a"] == [("a", 2), ("b", 1)]
+    assert parts["scoped_a"] == 3
+
+
+def test_streams_from_two_threads_restore_session_conf(
+    spark, tmp_path, monkeypatch
+):
+    """Two streams started from two threads, both running at once, leave
+    the session's conf as it was before either started; each stream runs
+    with its own partition count and gives its sequential result."""
+    run, release, results, parts = _gated_run_to_memory(spark, tmp_path, monkeypatch)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    threads = []
+    try:
+        threads.append(run("scoped_b"))
+        threads.append(run("scoped_c"))
+        for t in threads:  # the first-started stream ends first
+            release[t.name].set()
+            t.join(120)
+        assert spark.conf.get(key) == before
+    finally:
+        _finish(spark, threads, release, key, before)
+    assert results == {n: [("a", 2), ("b", 1)] for n in ("scoped_b", "scoped_c")}
+    assert parts == {"scoped_b": 3, "scoped_c": 3}
+
+
 def test_scoped_conf_restores_previous_values(spark):
     from anomaly_detection_in_time_series_data_spark.streaming.runtime import (
         scoped_conf,
@@ -1182,4 +1280,27 @@ def test_scoped_conf_restores_previous_values(spark):
     before = spark.conf.get(key)
     with scoped_conf(spark, {key: "3"}):
         assert spark.conf.get(key) == "3"
+    assert spark.conf.get(key) == before
+
+    # Threads swapping the same conf at once each see their own value in
+    # the block and restore the one from before it.
+    seen = []
+
+    def swap(i):
+        for _ in range(25):
+            with scoped_conf(spark, {key: str(10 + i)}):
+                seen.append(spark.conf.get(key) == str(10 + i))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=swap, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert seen == [True] * 200
     assert spark.conf.get(key) == before
