@@ -78,6 +78,12 @@ def get_spark(
     - Arrow on: every pandas_udf / toPandas boundary is vectorized.
     - UTC session timezone: deterministic timestamp semantics vs the
       DuckDB oracle.
+    - Streaming checkpoints (offset, commit and source logs, state-store
+      files) go through ``FileSystemBasedCheckpointFileManager``, not
+      Spark's default FileContext manager: without the native Hadoop
+      library, every stat in a FileContext rename forks ``readlink``
+      (about 4 ms each, 24 per trigger), and on ``file://`` both managers
+      do the same check-then-rename.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -91,6 +97,14 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Without libhadoop, RawLocalFs stats each side of a FileContext
+        # rename by forking `readlink`; the FileSystem manager's rename is
+        # the same exists-then-rename on a local disk, with no fork.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("ADTS_DRIVER_MEM", "8g"))
     )

@@ -8,6 +8,16 @@ runs under ``trigger(availableNow=True)`` and the caller blocks on
 sized from the replayed source's bytes (``stream_parts``) and set on the
 session only around the query's ``start()`` (``scoped_conf``), where the
 query freezes it.
+
+Each trigger writes its offset, commit and source log files, and a
+stateful query its state-store files, through the checkpoint file
+manager that ``session.get_spark`` sets for the whole session:
+``FileSystemBasedCheckpointFileManager``.  Spark's default FileContext
+manager forks ``readlink`` for every stat of a rename when the native
+Hadoop library is absent; on ``file://`` the two managers do the same
+check-then-rename.  It is a session setting, not a ``scoped_conf`` one:
+the file source creates its metadata log on the stream thread after
+``start()`` returns, from the session's own conf.
 """
 
 from __future__ import annotations
@@ -49,11 +59,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str):
 
 
 def stage_deliveries(df, src: str, shard_col: str, shard_values, cols):
-    """Stage per-shard delivery files for a file-source replay in ONE
-    Spark job instead of one filter+coalesce(1)+write job per shard
-    (optimization r12, guide §2.4: remove redundant passes — the old
-    loop re-scanned the staged frame once per shard).  Hash-repartition
-    on the shard column puts each shard's rows in exactly one task, the
+    """Stage per-shard delivery files for a file-source replay in one
+    hash-partitioned write instead of one filter+coalesce(1)+write job
+    per shard (optimization r12, guide §2.4: remove redundant passes —
+    the old loop re-scanned the staged frame once per shard).  Under AQE
+    the write runs 2 Spark jobs, whatever the shard count: the shuffle's
+    map stage and the write itself.  Hash-repartition on the shard
+    column puts each shard's rows in exactly one task, the
     hive-partitioned write splits them into one file per shard
     (``partitionBy`` drops the partition column from the data files, so
     a shadow ``_shard`` column keeps ``cols`` intact in the payload),

@@ -37,6 +37,18 @@ def load_script(relpath: str):
     return module
 
 
+def pytest_collection_modifyitems(items):
+    """Run the fixture-drift gate (``test_tables_smoke.py::test_000_*``)
+    first, in its own order, so a regenerated fixture fails the suite in
+    seconds: pytest orders by file path, which puts that file late."""
+    items.sort(  # stable: both groups keep their collected order
+        key=lambda it: not (
+            it.path.name == "test_tables_smoke.py"
+            and it.name.startswith("test_000_")
+        )
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("adts-tests", shuffle_partitions=4)

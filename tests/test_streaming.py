@@ -848,6 +848,24 @@ def _run_sink(spark, start, schema, src, store, checkpoint):
         q.stop()
 
 
+def test_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Every stream's offset, commit and source logs and every state-store
+    file are written by the manager Spark's own factory resolves from the
+    session's Hadoop conf.  ``get_spark`` sets the FileSystem one: the
+    default FileContext one forks ``readlink`` for each stat of a rename
+    when the native Hadoop library is absent.  The checkpoint recovery and
+    crash-window replay tests below run under it."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    created = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert created.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
 def _lose_commit(checkpoint, batch_id):
     """The crash-window shape: a crash between the store swap and the
     offset commit loses ``commits/<batch_id>`` while the offset log

@@ -3,7 +3,8 @@ rounds and has already changed the physical type of ``events.ts`` once
 (nanos in round 1, micros in round 2).  Load every table at sf0.001 first
 thing so a fixture change fails in seconds, not at driver time.
 
-Named test_000_* so pytest's default file ordering runs it early.
+``conftest.pytest_collection_modifyitems`` moves the test_000_* items to
+the front of the run, in their own order.
 """
 
 from __future__ import annotations
